@@ -1,6 +1,6 @@
 package graft.fpl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pairwise chemistry (reference J4+A5: metrics.py:26-49; semantics from
@@ -17,51 +17,38 @@ import org.apache.spark.sql.functions._
   * The self-join is per-match (≤ ~40 rated players/match ⇒ ≤ 1600 pair
   * rows per match) — a theta join on the matchId key; the pair-delta
   * table then folds into a running chemistry table with one groupBy.
+  * The streaming upsert uses the same join, restricted to pairs with a
+  * fresh side, so the pair formula exists once.
   * At 100 TB the per-match grouping keeps the join bounded: the shuffle
   * key is matchId, never a global cross product.
   */
 object Chemistry {
 
   /** Per-match signed pair deltas from the rating-delta table
-    * (columns: matchId, playerId, teamId, delta). */
-  def pairDeltas(ratingDeltas: DataFrame): DataFrame = {
+    * (columns: matchId, playerId, teamId, delta). `fresh`, a boolean
+    * over those rows, keeps only the pairs with at least one fresh
+    * side: the streaming upsert pairs a batch's new closes with each
+    * other and with earlier closes of the same matches in this one
+    * join, and never re-pairs two earlier closes. */
+  def pairDeltas(ratingDeltas: DataFrame,
+      fresh: Column = lit(true)): DataFrame = {
     val a = ratingDeltas.select(
       col("matchId"),
       col("playerId").as("p1"), col("teamId").as("t1"),
-      col("delta").as("d1"))
+      col("delta").as("d1"), fresh.as("f1"))
     val b = ratingDeltas.select(
       col("matchId").as("matchId2"),
       col("playerId").as("p2"), col("teamId").as("t2"),
-      col("delta").as("d2"))
+      col("delta").as("d2"), fresh.as("f2"))
     val sameTeam = col("t1") === col("t2")
     val sameDir = (col("d1") > 0 && col("d2") > 0) ||
       (col("d1") < 0 && col("d2") < 0)
     val mag = abs((col("d1") + col("d2")) / 2)
-    a.join(b, col("matchId") === col("matchId2") && col("p1") < col("p2"))
+    a.join(b, col("matchId") === col("matchId2") && col("p1") < col("p2") &&
+        (col("f1") || col("f2")))
       .select(col("matchId"), col("p1"), col("p2"),
         when(sameTeam === sameDir, mag).otherwise(-mag)
           .as("pairDelta"))
-  }
-
-  /** Cross-set pair deltas: pairs (a-side, b-side) of the same match,
-    * key-normalized to (least, greatest) so each unordered pair appears
-    * exactly once. Used by the streaming incremental upsert, where a
-    * match's players may close in different micro-batches. */
-  def pairDeltasBetween(aSide: DataFrame, bSide: DataFrame): DataFrame = {
-    val a = aSide.select(col("matchId"), col("playerId").as("p1"),
-      col("teamId").as("t1"), col("delta").as("d1"))
-    val b = bSide.select(col("matchId").as("matchId2"),
-      col("playerId").as("p2"), col("teamId").as("t2"),
-      col("delta").as("d2"))
-    val sameTeam = col("t1") === col("t2")
-    val sameDir = (col("d1") > 0 && col("d2") > 0) ||
-      (col("d1") < 0 && col("d2") < 0)
-    val mag = abs((col("d1") + col("d2")) / 2)
-    a.join(b, col("matchId") === col("matchId2") && col("p1") =!= col("p2"))
-      .select(col("matchId"),
-        least(col("p1"), col("p2")).as("p1"),
-        greatest(col("p1"), col("p2")).as("p2"),
-        when(sameTeam === sameDir, mag).otherwise(-mag).as("pairDelta"))
   }
 
   /** Running chemistry table: 0.5 + the sum of all per-match pair

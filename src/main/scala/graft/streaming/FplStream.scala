@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.fpl.{Flatten, Ingest, MetricsAlgebra}
 
@@ -188,9 +189,32 @@ object FplStream {
     }
   }
 
+  /** Runs `f` over `df` persisted, and unpersists it afterwards. A
+    * foreachBatch frame is the stateful fold itself: every action on
+    * it re-runs the fold, reloading and recommitting the state store,
+    * so a sink that acts on it more than once must act on a persisted
+    * copy. */
+  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A = {
+    val cached = df.persist()
+    try f(cached) finally { cached.unpersist(); () }
+  }
+
+  /** The closes columns the chemistry pairing reads. */
+  private val pairCols = Seq("matchId", "playerId", "teamId", "delta")
+
+  /** Schema of prior closes as the closes sink writes them, narrowed to
+    * [[pairCols]] plus the batchId partition column. Reading with it
+    * skips the per-batch parquet footer inference job. */
+  private val priorClosesSchema: StructType = StructType(
+    Encoders.product[MatchClose].schema
+      .filter(f => pairCols.contains(f.name)) :+
+      StructField("batchId", LongType))
+
   /** End-to-end: raw line stream → match-close stream, writing parquet
     * tables via foreachBatch (K1-K3 replacement: batchId-partitioned
-    * idempotent parquet instead of repr-text directories). */
+    * idempotent parquet instead of repr-text directories). The batch is
+    * persisted once, so the emptiness check and the write share one
+    * evaluation of the fold. */
   def run(lines: DataFrame, outDir: String, checkpoint: String) = {
     val closes = matchCloses(toMessages(lines))
     closes.writeStream
@@ -200,7 +224,9 @@ object FplStream {
         // frame has no partitions, leaving a schema-less directory that
         // breaks later reads. Replay is deterministic (same offsets +
         // versioned state), so a skipped batch stays skippable.
-        if (!batch.isEmpty) writeBatchPartition(batch.toDF, batchId, outDir)
+        withPersisted(batch.toDF) { b =>
+          if (!b.isEmpty) writeBatchPartition(b, batchId, outDir)
+        }
       }
       .outputMode("append")
   }
@@ -212,6 +238,8 @@ object FplStream {
     * players can close in different micro-batches, so each batch pairs
     * its new closes against (a) each other and (b) previously-closed
     * rows of the same matches — every unordered pair lands exactly once.
+    * Each micro-batch evaluates the stateful fold exactly once (see
+    * [[consolidateBatch]]).
     *
     * Both sinks are batchId-partitioned with dynamic-partition
     * overwrite, so an at-least-once replay of a batch (crash between
@@ -237,36 +265,43 @@ object FplStream {
 
   /** One consolidation step of [[runFull]] — exposed so tests can replay
     * a batchId and assert the sink is idempotent under at-least-once
-    * delivery. */
+    * delivery.
+    *
+    * One evaluation of `batch`: it is persisted once, and the emptiness
+    * check, the pairing and the closes write all read that copy; it is
+    * unpersisted when the step ends. Prior closes are read with the
+    * schema the closes sink writes ([[priorClosesSchema]]), so no job
+    * infers it. The pair deltas come from ONE self-join over the new
+    * closes (`fresh`) ∪ the prior closes of the same matches, keeping
+    * the pairs with at least one fresh side; the small pair frame is
+    * persisted so its emptiness check and its write share one join. */
   def consolidateBatch(batch: DataFrame, batchId: Long,
       closesDir: String, pairsDir: String): Unit = {
     val spark = batch.sparkSession
-    val newDeltas = batch
-      .select(col("matchId"), col("playerId"), col("teamId"),
-        col("delta"))
-      .cache()
-    try if (!newDeltas.isEmpty) {
-      val newPairs = graft.fpl.Chemistry.pairDeltas(newDeltas)
-      val crossPairs =
-        if (dirHasData(spark, closesDir)) {
-          val prior = spark.read.parquet(closesDir)
-            .filter(col("batchId") =!= batchId)
-            .select(col("matchId"), col("playerId"), col("teamId"),
-              col("delta"))
-            .join(newDeltas.select(col("matchId")).distinct(),
-              Seq("matchId"), "left_semi")
-          graft.fpl.Chemistry.pairDeltasBetween(newDeltas, prior)
-        } else spark.emptyDataFrame
-      val allPairs =
-        if (crossPairs.columns.nonEmpty)
-          newPairs.unionByName(crossPairs)
-        else newPairs
-      // a batch can close players without completing any pair (e.g. a
-      // single close) — writing an empty frame would leave a
-      // schema-less parquet dir that breaks later reads (same guard as
-      // run())
-      if (!allPairs.isEmpty) writeBatchPartition(allPairs, batchId, pairsDir)
-      writeBatchPartition(batch, batchId, closesDir)
-    } finally { newDeltas.unpersist(); () }
+    withPersisted(batch) { closes =>
+      if (!closes.isEmpty) {
+        val fresh =
+          closes.select(pairCols.map(col) :+ lit(true).as("fresh"): _*)
+        val rows =
+          if (dirHasData(spark, closesDir)) {
+            val prior = spark.read.schema(priorClosesSchema)
+              .parquet(closesDir)
+              .filter(col("batchId") =!= batchId)
+              .join(fresh.select(col("matchId")).distinct(),
+                Seq("matchId"), "left_semi")
+              .select(pairCols.map(col) :+ lit(false).as("fresh"): _*)
+            fresh.unionByName(prior)
+          } else fresh
+        withPersisted(graft.fpl.Chemistry.pairDeltas(rows, col("fresh"))) {
+          pairs =>
+            // a batch can close players without completing any pair (e.g.
+            // a single close) — writing an empty frame would leave a
+            // schema-less parquet dir that breaks later reads (same guard
+            // as run())
+            if (!pairs.isEmpty) writeBatchPartition(pairs, batchId, pairsDir)
+        }
+        writeBatchPartition(closes, batchId, closesDir)
+      }
+    }
   }
 }

@@ -43,28 +43,54 @@ class RecoverySpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-replay")
     val closesDir = tmp.resolve("closes").toString
     val pairsDir = tmp.resolve("pair_deltas").toString
-    def batch(rows: (Long, Long, Long, Double)*) =
-      rows.toSeq.toDF("matchId", "playerId", "teamId", "delta")
+    // (matchId, playerId, teamId, delta)
+    def batch(rows: Seq[(Long, Long, Long, Double)]) =
+      rows.toDF("matchId", "playerId", "teamId", "delta")
+    def chemMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def chem = chemMap(graft.fpl.Chemistry.fromPairDeltas(
+      spark.read.parquet(pairsDir)))
+    // the batch table over every close so far: each pair exactly once
+    def expected(rows: Seq[(Long, Long, Long, Double)]) =
+      chemMap(graft.fpl.Chemistry.chemistryTable(batch(rows)))
 
     // batch 0: two teammates of match 10 close
-    FplStream.consolidateBatch(batch((10L, 1L, 100L, 0.1),
-      (10L, 2L, 100L, 0.2)), 0L, closesDir, pairsDir)
+    val b0 = Seq((10L, 1L, 100L, 0.1), (10L, 2L, 100L, 0.2))
+    FplStream.consolidateBatch(batch(b0), 0L, closesDir, pairsDir)
     // batch 1: an opponent of the same match closes later
-    FplStream.consolidateBatch(batch((10L, 3L, 200L, -0.1)),
-      1L, closesDir, pairsDir)
-    def chem = graft.fpl.Chemistry.fromPairDeltas(
-      spark.read.parquet(pairsDir)).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val b1 = Seq((10L, 3L, 200L, -0.1))
+    FplStream.consolidateBatch(batch(b1), 1L, closesDir, pairsDir)
     val first = chem
     assert(first.size == 3) // (1,2) same-team + (1,3),(2,3) cross
+    assert(first == expected(b0 ++ b1))
 
     // crash between write and checkpoint commit → batch 1 replays
-    FplStream.consolidateBatch(batch((10L, 3L, 200L, -0.1)),
-      1L, closesDir, pairsDir)
+    FplStream.consolidateBatch(batch(b1), 1L, closesDir, pairsDir)
     assert(chem == first, "replayed batch double-counted pair deltas")
     assert(spark.read.parquet(closesDir)
       .filter($"playerId" === 3L).count() == 1,
       "replayed batch re-appended closes")
+
+    // batch 2: two more closes of match 10 pair with the prior closes of
+    // batches 0 and 1 and with each other
+    val b2 = Seq((10L, 5L, 100L, -0.2), (10L, 4L, 200L, 0.05))
+    FplStream.consolidateBatch(batch(b2), 2L, closesDir, pairsDir)
+    val third = chem
+    assert(third.size == 10) // every unordered pair of 5 players
+    assert(third == expected(b0 ++ b1 ++ b2))
+    FplStream.consolidateBatch(batch(b2), 2L, closesDir, pairsDir)
+    assert(chem == third, "replayed batch 2 changed the pair set")
+
+    // batch 3: a single close of a new match completes no pair, so it
+    // writes no pair_deltas partition and the table stays readable
+    val b3 = Seq((11L, 6L, 100L, 0.3))
+    FplStream.consolidateBatch(batch(b3), 3L, closesDir, pairsDir)
+    assert(!java.nio.file.Files.exists(tmp.resolve("pair_deltas/batchId=3")))
+    assert(chem == third)
+    // batch 4: its opponent closes later and pairs with it
+    val b4 = Seq((11L, 7L, 200L, 0.1))
+    FplStream.consolidateBatch(batch(b4), 4L, closesDir, pairsDir)
+    assert(chem == expected(b0 ++ b1 ++ b2 ++ b3 ++ b4))
   }
 
   test("malformed lines parse to corrupt rows and are excluded cleanly") {

@@ -117,6 +117,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("each micro-batch runs the stateful fold once (runFull and run)") {
+    implicit val sc = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-once")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // match 1001; then match 1002 (closes 1001); then match 1003
+    // (closes 1002): three batches, the last two with closes
+    val batches = Seq(Fixture.allLines,
+      matchJson(1002, 2) +: match2Events, Seq(matchJson(1003, 3)))
+    def players(lines: Seq[String]): Long =
+      FplStream.toMessages(lines.toDF("value"))
+        .select("playerId").distinct().count()
+    val sinks =
+      Seq("runFull" -> (FplStream.runFull _), "run" -> (FplStream.run _))
+    for ((name, sink) <- sinks) {
+      val stream = MemoryStream[String]
+      val q = sink(stream.toDF(), tmp.resolve(s"$name-out").toString,
+        tmp.resolve(s"$name-ckpt").toString).start()
+      try batches.foreach { lines =>
+        stream.addData(lines); q.processAllAvailable()
+        // the state metric accumulates over every evaluation of the
+        // fold, so a sink that re-runs it reads a multiple
+        val updated = q.lastProgress.stateOperators(0).numRowsUpdated
+        assert(updated == players(lines),
+          s"$name: batch ${q.lastProgress.batchId} updated $updated rows")
+      } finally q.stop()
+    }
+    assert(spark.read.parquet(tmp.resolve("run-out").toString).count() ==
+      spark.read.parquet(tmp.resolve("runFull-out/closes").toString).count())
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"cached batches left behind: $leaked")
+  }
+
   test("straggler event from an already-closed match is dropped") {
     implicit val sc = spark.sqlContext
     val stream = MemoryStream[String]
