@@ -1,64 +1,81 @@
 package graft.fpl
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Request/response dispatch (reference ui.py:20-25 + run.sh:5):
-  * a request JSON document → typed dispatch on req_type (default 3)
-  * → one Catalyst plan → response JSON file.
+/** Request/response dispatch (reference ui.py:20-25 + run.sh:5): a
+  * request JSON document, parsed on the driver → typed dispatch on
+  * req_type (default 3) → response frame, written as the response JSON
+  * file.
   *
   *   req_type 1: win prediction  → predict_result.json
   *   req_type 2: player profile  → player_result.json
   *   req_type 3 (or absent): match info → match_details.json
+  *
+  * Each request runs only the Spark jobs its answer needs (see
+  * [[Serving]]); match info evaluates its plan once and answers with
+  * the collected rows. Jobs per request, `handle` plus the response
+  * collect, recorded on the season benchmark (traced `serve_mix`, seed
+  * 311): win 4 (the reference: ~44), profile 2, match info 7, dated
+  * win 32 (mostly the k-means and regression fits; varies by seed). A
+  * request missing a field its type needs fails with an
+  * `IllegalArgumentException` naming the field.
   */
 object RequestApp {
 
-  /** Parse the request with Spark's JSON reader (single document),
-    * dispatch, and return (responseFileName, responseDF). The response
-    * frame is written as a single JSON document, matching the
-    * reference's response files. */
+  private val mapper = new ObjectMapper()
+
+  /** A parsed request document; fields are dotted paths. */
+  private final class Request(root: JsonNode) {
+    def opt(path: String): Option[String] =
+      Option(path.split('.').foldLeft(root)((n, k) =>
+          if (n == null) null else n.get(k)))
+        .filterNot(_.isNull).map(_.asText)
+    def apply(path: String): String = opt(path).getOrElse(
+      throw new IllegalArgumentException(
+        s"request is missing field '$path'"))
+    def reqType: Long = Option(root.get("req_type")).filterNot(_.isNull)
+      .fold(3L) { n =>
+        if (n.canConvertToExactIntegral) n.asLong
+        else throw new IllegalArgumentException(
+          s"request field 'req_type' is not an integer: $n")
+      }
+    def team(key: String): Serving.TeamRequest = Serving.TeamRequest(
+      apply(s"$key.name"), (1 to 11).map(i => apply(s"$key.player$i")))
+  }
+
+  /** Parse the request, dispatch, and return (responseFileName,
+    * responseDF). The response frame is written as a single JSON
+    * document, matching the reference's response files. */
   def handle(spark: SparkSession, requestJson: String,
       players: DataFrame, teams: DataFrame, chemistrySym: DataFrame,
       ratings: DataFrame, profiles: DataFrame, matches: DataFrame)
       : (String, DataFrame) = {
     import spark.implicits._
-    val req = spark.read.json(Seq(requestJson).toDS())
-    val reqType =
-      if (req.columns.contains("req_type"))
-        req.select($"req_type").as[Long].head()
-      else 3L
+    val req = new Request(mapper.readTree(requestJson))
 
-    reqType match {
+    req.reqType match {
       case 1L =>
-        def side(key: String): Serving.TeamRequest = {
-          val row = req.select(col(s"$key.name") +:
-            (1 to 11).map(i => col(s"$key.player$i")): _*).head()
-          Serving.TeamRequest(row.getString(0),
-            (1 to 11).map(i => row.getString(i)))
-        }
+        val (team1, team2) = (req.team("team1"), req.team("team2"))
         // full §2.8 model flow when the request carries a date and the
         // dims carry birthDate: fallback ratings + age model + retired
-        val useModel = req.columns.contains("date") &&
-          players.columns.contains("birthDate") &&
-          profiles.columns.contains("matches_played")
-        val result =
-          if (useModel) {
-            val date = req.select($"date").as[String].head()
+        val result = req.opt("date").filter(_ =>
+            players.columns.contains("birthDate") &&
+            profiles.columns.contains("matches_played")) match {
+          case Some(date) =>
             val hist = ratings.join(players.select($"Id".as("playerId"),
                 MLCapabilities.ageAt($"birthDate", to_date(lit(date)))
                   .as("age")), Seq("playerId"))
               .select($"age", $"rating")
             Serving.winPredictionFull(spark, players, chemistrySym,
-              ratings, profiles, hist, side("team1"), side("team2"),
-              date) match {
-              case Right(chances) => Some(chances)
-              case Left(_) => None
-            }
-          } else Serving.winPrediction(spark, players, chemistrySym,
-            ratings, side("team1"), side("team2"))
+              ratings, profiles, hist, team1, team2, date).toOption
+          case None => Serving.winPrediction(spark, players, chemistrySym,
+            ratings, team1, team2)
+        }
         val out = result match {
-          case None => Seq(("Invalid Team", null: String, null: String))
-            .toDF("status", "_1", "_2").select($"status")
+          case None => Seq("Invalid Team").toDF("status")
           case Some(Seq(t1, t2)) =>
             Seq((t1.team, t1.winningChance, t2.team, t2.winningChance))
               .toDF("t1name", "t1chance", "t2name", "t2chance")
@@ -70,16 +87,16 @@ object RequestApp {
         }
         ("predict_result.json", out)
       case 2L =>
-        val name = req.select($"name").as[String].head()
-        ("player_result.json", Serving.playerProfile(players, profiles, name))
+        ("player_result.json",
+          Serving.playerProfile(players, profiles, req("name")))
       case _ =>
-        val Array(date, label) =
-          req.select($"date", $"label").as[(String, String)].head()
-            .productIterator.map(_.toString).toArray
-        val out = Serving.matchInfo(matches, players, teams, date, label)
-        val res = if (out.isEmpty)
-          Seq("Not Found").toDF("status")
-        else out
+        // one evaluation of the match plan; the response is its rows
+        val out = Serving.matchInfo(matches, players, teams, req("date"),
+          req("label"))
+        val rows = out.collect()
+        val res =
+          if (rows.isEmpty) Seq("Not Found").toDF("status")
+          else spark.createDataFrame(rows.toSeq.asJava, out.schema)
         ("match_details.json", res)
     }
   }

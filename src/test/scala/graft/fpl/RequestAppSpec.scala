@@ -1,7 +1,10 @@
 package graft.fpl
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Golden request/response flows (SURVEY §5.2 item 5, FIXTURES.md A5). */
 class RequestAppSpec extends SparkSpec {
@@ -80,6 +83,99 @@ class RequestAppSpec extends SparkSpec {
     val (_, notFound) = RequestApp.handle(spark, miss, players, teams,
       emptyChem, emptyRatings, emptyProfiles, matches)
     assert(notFound.as[String].head() == "Not Found")
+  }
+
+  private def malformed(req: String): String = intercept[IllegalArgumentException] {
+    RequestApp.handle(spark, req, playersDim,
+      Seq(("Alpha FC", 100L)).toDF("name", "Id"), emptyChem,
+      emptyRatings, emptyProfiles, matches)
+  }.getMessage
+
+  test("req_type 1: a missing team or player field is named") {
+    val noTeam2 = s"""{"req_type": 1, ${teamJson("team1", "Alpha", 0)}}"""
+    assert(malformed(noTeam2).contains("'team2.name'"))
+    val noPlayer7 = s"""{"req_type": 1, ${teamJson("team1", "Alpha", 0)},
+      ${teamJson("team2", "Beta", 11).replace(""""player7": "P17", """, "")}}"""
+    assert(malformed(noPlayer7).contains("'team2.player7'"))
+  }
+
+  test("req_type 2: a missing name field is named") {
+    assert(malformed("""{"req_type": 2}""").contains("'name'"))
+  }
+
+  test("req_type 3 and absent: a missing date or label field is named") {
+    assert(malformed("""{"req_type": 3, "label": "x"}""").contains("'date'"))
+    assert(malformed("""{"date": "2018-05-20"}""").contains("'label'"))
+  }
+
+  /** Spark jobs started by `body`, counted by a listener on a job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobs per request")
+    try body
+    finally {
+      sc.clearJobGroup()
+      TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("jobs per request: handle plus the response collect, per type") {
+    // the serving tables as a serving process sees them: parquet files
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
+    def table(name: String, df: DataFrame): DataFrame = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val ids = 0L until 22L
+    val players = table("players", playersDim)
+    val teams = table("teams", Ingest.teams(spark, tmp("t.csv", Fixture.teamsCsv)))
+    val chem = table("chem", (for (a <- ids; b <- ids if a != b)
+      yield (a, b, 0.4 + (a + b) % 5 / 10.0)).toDF("p1", "p2", "chemistry"))
+    val ratings = table("ratings", ids.map(i => (i, 0.3 + i % 4 / 10.0))
+      .toDF("playerId", "rating"))
+    val profiles = table("profiles", ids.map(i => (i, 1L, 0L, 0L, 0.5, 1L))
+      .toDF("playerId", "fouls", "goals", "own_goals", "pass_accuracy",
+        "shots_on_target"))
+    val matchTable = table("matches", matches)
+    def jobs(req: String): Int = jobsOf {
+      val (_, out) = RequestApp.handle(spark, req, players, teams, chem,
+        ratings, profiles, matchTable)
+      out.toJSON.collect()
+    }
+    val win = s"""{"req_type": 1, ${teamJson("team1", "Alpha", 0)},
+      ${teamJson("team2", "Beta", 11)}}"""
+    val invalid = win.replace("\"P10\"", "\"P11\"")
+    val counts = Map(
+      "win" -> jobs(win),
+      "invalid win" -> jobs(invalid),
+      "profile" -> jobs("""{"req_type": 2, "name": "P3"}"""),
+      "match" -> jobs(
+        """{"date": "2018-05-20", "label": "Alpha FC - Beta FC, 2 - 1"}"""),
+      "not found" -> jobs("""{"date": "2019-01-01", "label": "nope"}"""))
+    info(s"jobs per request: $counts")
+    // Before the requests were parsed on the driver and served from
+    // bounded key lookups (Spark's JSON reader plus one head() job per
+    // field, a cached-squad join plan, the match plan run twice), this
+    // fixture took: win 15, invalid win 9, profile 5, match 12, not
+    // found 6.
+    // An empty match plan takes 4 or 5 jobs: adaptive execution may
+    // cancel a sibling stage once one stage turns out empty, or not
+    // yet, by timing.
+    val bounds = Map("win" -> 4, "invalid win" -> 2, "profile" -> 2,
+      "match" -> 6, "not found" -> 5)
+    for ((k, n) <- bounds)
+      assert(counts(k) <= n, s"$k: ${counts(k)} jobs, bound $n ($counts)")
   }
 
   private def tmp(name: String, content: String): String = {
