@@ -16,49 +16,30 @@ case class GQuery(
 
 object GQuery {
 
-  /** Per-JVM root for kept-until-exit query RESULTS. Each
-    * [[withTempTable]] execution parks its (result-sized) output here
-    * and the whole root is removed once at JVM exit — so repeated
-    * harness executions leak at most one result file per execution for
-    * the life of the process, never a lifecycle table, and the driver
-    * never materializes result rows (the pre-r7 `collect()` grew with
-    * sf: stream_sessions alone is ~95k rows at sf1). */
-  private lazy val resultsRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-results")
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => deleteTree(p)))
-    p
-  }
-
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
   /** Table-lifecycle query harness: run `body` against a fresh temp
     * dir, persist its result OFF the temp dir, and ALWAYS delete the
     * dir — harnesses execute each query several times (warm-up +
     * timed rounds), so a leaked lifecycle dir per execution would
-    * accumulate unboundedly in the temp filesystem. The dir is created
-    * INSIDE the try: a failure during table SETUP (base/delta/stream
-    * writes) cleans up too, not just a failure during the read-back.
+    * accumulate unboundedly in the temp filesystem. The whole body
+    * runs INSIDE the try: a failure during table SETUP (base/delta/
+    * stream writes) cleans up too, not just a failure during the
+    * read-back.
     *
     * The result is written as ONE parquet file and read back lazily:
     * a single file preserves the body's output order exactly, and no
     * result row ever lands on the driver (executor-side write +
-    * re-scan, O(1) driver memory at any SF). */
+    * re-scan, O(1) driver memory at any SF). The result is parked
+    * under the [[StandingState]] root, which is removed once at JVM
+    * exit: repeated executions leak at most one result file each for
+    * the life of the process, never a lifecycle table. */
   def withTempTable(s: SparkSession, prefix: String)
       (body: String => DataFrame): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     try {
       val rows = body(dir)
-      val out = resultsRoot
-        .resolve(java.util.UUID.randomUUID().toString).toString
+      val out = StandingState.freshDir("graft-results")
       rows.coalesce(1).write.parquet(out)
       s.read.parquet(out)
-    } finally deleteTree(java.nio.file.Paths.get(dir))
+    } finally StandingState.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

@@ -23,11 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Serving {
 
-  /** Squad validation thresholds (spec p.8: GK=1, DF≥3, MD≥2, FW≥1;
-    * SURVEY §2.9 Q5 keeps them configurable). */
-  case class RoleRules(gk: Int = 1, dfMin: Int = 3, mdMin: Int = 2,
-      fwMin: Int = 1)
-
   /** One side of a win-prediction request. */
   case class TeamRequest(name: String, players: Seq[String])
 
@@ -57,15 +52,16 @@ object Serving {
         if (r.isNullAt(3)) None else Some(r.getDouble(3)))
   }
 
-  /** Exactly two team groups, each of 11 entries that pass the role
-    * rules. Equal team names make one group, a side with no known
-    * player none, so both are invalid. */
-  private def validSquad(squad: Seq[Member], rules: RoleRules): Boolean = {
+  /** Exactly two team groups, each of 11 entries that pass the spec's
+    * role rules (p.8: GK = 1, DF ≥ 3, MD ≥ 2, FW ≥ 1). Equal team names
+    * make one group, a side with no known player none, so both are
+    * invalid. */
+  private def validSquad(squad: Seq[Member]): Boolean = {
     val teams = squad.groupBy(_.team)
     teams.size == 2 && teams.values.forall { ms =>
       def n(role: String) = ms.count(_.role == role)
-      n("GK") == rules.gk && n("DF") >= rules.dfMin &&
-        n("MD") >= rules.mdMin && n("FW") >= rules.fwMin && ms.size == 11
+      n("GK") == 1 && n("DF") >= 3 && n("MD") >= 2 && n("FW") >= 1 &&
+        ms.size == 11
     }
   }
 
@@ -126,10 +122,9 @@ object Serving {
       players: DataFrame,           // name, role, Id
       chemistrySym: DataFrame,      // p1, p2, chemistry (symmetric)
       ratings: DataFrame,           // playerId, rating
-      team1: TeamRequest, team2: TeamRequest,
-      rules: RoleRules = RoleRules()): Option[Seq[TeamChance]] = {
+      team1: TeamRequest, team2: TeamRequest): Option[Seq[TeamChance]] = {
     val squad = lookupSquad(players, team1, team2)
-    if (!validSquad(squad, rules)) None
+    if (!validSquad(squad)) None
     else Some(chances(squad, chemistrySym, ratings, team1, team2))
   }
 
@@ -148,7 +143,7 @@ object Serving {
       profiles: DataFrame,          // Folds.profiles output
       ratingHistory: DataFrame,     // playerId, rating + age training rows
       team1: TeamRequest, team2: TeamRequest, date: String,
-      rules: RoleRules = RoleRules(), minMatches: Long = 5L)
+      minMatches: Long = 5L)
       : Either[Map[String, Seq[String]], Seq[TeamChance]] = {
     import spark.implicits._
     val scorer = MLCapabilities.ratingVsAge(ratingHistory)
@@ -158,7 +153,7 @@ object Serving {
     val retired = scorer(ages).filter($"retired")
       .select($"name").as[String].collect().toSeq
     if (retired.nonEmpty) Left(Map("retired" -> retired))
-    else if (!validSquad(squad, rules))
+    else if (!validSquad(squad))
       Left(Map("invalid" -> Seq("Invalid Team")))
     else {
       val effective = MLCapabilities.fallbackRatings(profiles, ratings,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.StandingState
 
 /** Persisted ANN (vector) index lifecycle — VERDICT-r11 item 1, the
   * [[IndexOps]]/graph_edges build-once/probe-many discipline applied
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   * coarse quantizer and PQ codebooks once per corpus epoch, persists
   * centroids/codebooks/cell-partitioned codes, and serves every query
   * off the warm index; this object is that lifecycle, derived ONCE
-  * per (JVM, sf dir) and certified-never-trusted — the probe gates'
+  * per (JVM, sf dir) in [[graft.StandingState]] and
+  * certified-never-trusted — the probe gates'
   * oracles re-derive their answers from raw `embeddings` from
   * scratch, so a wrong or stale segment breaks the hash/recall gates
   * immediately.
@@ -134,69 +136,44 @@ object AnnIndex {
         lit(0.0), (acc, x) => acc + x).as("vn2"))
   }
 
-  private lazy val annRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ann-index")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p)))
-    p
-  }
-
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val splitCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Pricing hook (ScaleSweep): forget AND delete the memoized
-    * segments so the next probe re-derives — the
-    * [[IndexOps.resetIndexCache]] discipline, including the
-    * ADVICE-r11 delete-on-reset (a rounds=N sweep must not accumulate
-    * N+1 full index copies). */
-  def resetIndexCache(): Unit = {
-    (cache.values ++ splitCache.values)
-      .foreach(d => deleteTree(java.nio.file.Paths.get(d)))
-    cache.clear()
-    splitCache.clear()
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
   // ---------------------------------------------------------- build
 
-  /** Derive-once: train both quantizers on one bounded driver sample,
+  /** Park a quantizer's centroids and codebooks under `out` (the
+    * `centroids` and `codebooks` metadata tables). */
+  private def writeQuantizer(s: SparkSession, q: Quantizer,
+      out: String): Unit = {
+    import s.implicits._
+    q.coarse.zipWithIndex
+      .map { case (cv, i) => (i, cv.toSeq, n2Of(cv)) }.toSeq
+      .toDF("cell", "cv", "n2")
+      .coalesce(1).write.parquet(s"$out/centroids")
+    q.books.zipWithIndex.flatMap { case (bk, j) =>
+      bk.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq, n2Of(cv)) }
+    }.toSeq.toDF("j", "c", "cv", "n2")
+      .coalesce(1).write.parquet(s"$out/codebooks")
+  }
+
+  /** Derive-once (see [[graft.StandingState]]): train both quantizers
+    * on one bounded driver sample,
     * park centroids/codebooks, encode the corpus MAP-SIDE against the
     * broadcast literals (no shuffle — cell assignment and PQ encoding
     * are projections), and write the cell-partitioned corpus table. */
   private def segmentDir(s: SparkSession, d: String): String =
-    cache.getOrElseUpdate(d, {
-      import s.implicits._
-      val out = annRoot
-        .resolve(java.util.UUID.randomUUID().toString).toString
+    StandingState.dir(StandingState.Ann, d) { out =>
       val vecs = graft.Tables.embeddings(s, d)
         .where(col("embedding").isNotNull)
       val q = trainQuantizer(vecs, "embedding")
-      q.coarse.zipWithIndex
-        .map { case (cv, i) => (i, cv.toSeq, n2Of(cv)) }.toSeq
-        .toDF("cell", "cv", "n2")
-        .coalesce(1).write.parquet(s"$out/centroids")
-      q.books.zipWithIndex.flatMap { case (bk, j) =>
-        bk.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq, n2Of(cv)) }
-      }.toSeq.toDF("j", "c", "cv", "n2")
-        .coalesce(1).write.parquet(s"$out/codebooks")
+      writeQuantizer(s, q, out)
       encode(q, vecs, "vec_id", "embedding")
         .write.partitionBy("cell").parquet(s"$out/cells")
-      out
-    })
+    }
 
   /** Memoized SPLIT segments for the refresh-leg pricing entries
     * (VERDICT-r12 item 6): the corpus vec-disjoint-partitioned into a
     * base segment (90%, vec_id % 10 ≠ 7 — the ann_ivm_merge split)
     * whose quantizer is trained on BASE ONLY, plus the delta's encoded
-    * cells — all derived once per (JVM, sf dir). A deployment has
+    * cells — all derived once per (JVM, sf dir) in
+    * [[graft.StandingState]]. A deployment has
     * these on disk already when a refresh epoch arrives, so gates
     * pricing the STEADY-STATE legs (encode(delta)+merged probe;
     * compact+probe) read them warm, while the whole-cycle gates
@@ -204,29 +181,18 @@ object AnnIndex {
     * deliberately. Layout mirrors [[segmentDir]]: centroids/codebooks
     * metadata + cell-partitioned base_cells and delta_cells. */
   def splitSegmentDir(s: SparkSession, d: String): String =
-    splitCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val out = annRoot
-        .resolve(java.util.UUID.randomUUID().toString).toString
+    StandingState.dir(StandingState.AnnSplit, d) { out =>
       val vecs = graft.Tables.embeddings(s, d)
         .where(col("embedding").isNotNull)
       val base = vecs.filter(col("vec_id") % 10L =!= 7L)
       val delta = vecs.filter(col("vec_id") % 10L === 7L)
       val q = trainQuantizer(base, "embedding")
-      q.coarse.zipWithIndex
-        .map { case (cv, i) => (i, cv.toSeq, n2Of(cv)) }.toSeq
-        .toDF("cell", "cv", "n2")
-        .coalesce(1).write.parquet(s"$out/centroids")
-      q.books.zipWithIndex.flatMap { case (bk, j) =>
-        bk.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq, n2Of(cv)) }
-      }.toSeq.toDF("j", "c", "cv", "n2")
-        .coalesce(1).write.parquet(s"$out/codebooks")
+      writeQuantizer(s, q, out)
       encode(q, base, "vec_id", "embedding")
         .write.partitionBy("cell").parquet(s"$out/base_cells")
       encode(q, delta, "vec_id", "embedding")
         .write.partitionBy("cell").parquet(s"$out/delta_cells")
-      out
-    })
+    }
 
   /** Rehydrate a [[Quantizer]] from a persisted segment dir's
     * centroid/codebook metadata — the ANN-server open() step for the

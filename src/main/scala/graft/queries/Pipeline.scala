@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{GQuery, Tables => T}
+import graft.{GQuery, StandingState, Tables => T}
 import graft.operators.{Contamination, Dedup, Mix, Pack, Similarity,
   Sketch, TextAnalysis => TA}
 
@@ -14,54 +14,19 @@ import graft.operators.{Contamination, Dedup, Mix, Pack, Similarity,
   */
 object Pipeline {
 
-  /** Standing bucketed tables for [[bucketed_join]] (r14): written
-    * once per (session catalog, sf dir) under deterministic names,
-    * files parked until JVM exit — the repeated joins the bucketing
-    * pattern exists to serve then skip both fact shuffles every run.
-    * `tableExists` is re-checked per call (not memoized in a map) so
-    * a fresh session in the test tree rebuilds its own catalog
-    * entries instead of trusting another session's. */
-  private lazy val bucketRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-bucket-std")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }))
-    p
-  }
-
   /** Standing shingle-postings segments for
     * [[dedup_containment_incremental]] (r14): the base corpus's
     * `post_all` (verification side) and `post_capped` (df ≤ dfCap
-    * probe side), derived once per (JVM, sf dir) — the query's own
-    * docstring argues these are persisted state a deployment keeps
-    * between ingest batches; the oracle re-derives the admission from
-    * raw documents, so a stale segment breaks the hash. */
-  private val contCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Pricing hook (ScaleSweep / ADVICE-r14): forget the parked
-    * containment segments and drop the standing bucketed catalog
-    * tables so a sweep can price the cold build legs — the
-    * [[graft.operators.GraphOps.resetEdgeCache]] discipline. Parked
-    * dirs stay on disk until the JVM-exit sweep. */
-  def resetStandingState(s: org.apache.spark.sql.SparkSession): Unit = {
-    contCache.clear()
-    s.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_bkt_"))
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
+    * probe side), derived once per (JVM, sf dir, dfCap) in
+    * [[graft.StandingState]] — the query's own docstring argues these
+    * are persisted state a deployment keeps between ingest batches; the
+    * oracle re-derives the admission from raw documents, so a stale
+    * segment breaks the hash. `dfCap` is part of the key (ADVICE-r14):
+    * a caller passing a different cap must not silently receive
+    * segments built with the old one. */
   private def contStateDir(s: org.apache.spark.sql.SparkSession,
       d: String, dfCap: Int): String =
-    // keyed by (dir, dfCap) — ADVICE-r14: a caller passing a different
-    // dfCap must not silently receive segments built with the old cap
-    contCache.getOrElseUpdate(s"$d#$dfCap", {
-      val t = bucketRoot
-        .resolve("cont-" + java.util.UUID.randomUUID().toString).toString
+    StandingState.dir(StandingState.Containment, d, dfCap.toString) { t =>
       val base = T.spread(T.documents(s, d)
         .select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 5 =!= 4))
@@ -74,11 +39,22 @@ object Pipeline {
         .filter(col("dfc") <= dfCap).select(col("sh"))
         .join(postAll, "sh")
         .write.parquet(s"$t/post_capped")
-      t
-    })
+    }
 
+  /** Standing bucketed tables for [[bucketed_join]] (r14): written
+    * once per (session catalog, sf dir) under deterministic names,
+    * files parked in the sf dir's [[graft.StandingState]] directory —
+    * the repeated joins the bucketing pattern exists to serve then
+    * skip both fact shuffles every run. `tableExists` is re-checked
+    * per call (not memoized in a map) so a fresh session in the test
+    * tree rebuilds its own catalog entries, each into its own
+    * subdirectory, instead of trusting another session's. A table
+    * located outside the parked directory is stale (a reset of the
+    * kind deleted its files) and is dropped and rewritten. The drops
+    * and writes hold the store's lock. */
   private def bucketedTables(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) = synchronized {
+      d: String): (String, String) = StandingState.synchronized {
+    val dir = StandingState.dir(StandingState.Bucketed, d)(_ => ())
     // collision-safe tag (ADVICE-r14): hashCode collisions between two
     // dataset dirs in one JVM would silently serve the other dir's
     // bucketed data; md5 of the full path cannot collide in practice
@@ -87,17 +63,20 @@ object Pipeline {
       .map("%02x".format(_)).mkString.take(16)
     val no = s"graft_bkt_orders_$tag"
     val nl = s"graft_bkt_lineitem_$tag"
-    if (!s.catalog.tableExists(no) || !s.catalog.tableExists(nl)) {
-      val dir = bucketRoot
-        .resolve(java.util.UUID.randomUUID().toString).toString
+    def live(t: String) = s.catalog.tableExists(t) &&
+      s.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t))
+        .location.getPath.startsWith(dir)
+    if (!live(no) || !live(nl)) {
+      val sub = s"$dir/${java.util.UUID.randomUUID()}"
       s.sql(s"DROP TABLE IF EXISTS $no")
       s.sql(s"DROP TABLE IF EXISTS $nl")
       T.orders(s, d).write.format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$dir/orders").saveAsTable(no)
+        .option("path", s"$sub/orders").saveAsTable(no)
       T.lineitem(s, d).write.format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$dir/lineitem").saveAsTable(nl)
+        .option("path", s"$sub/lineitem").saveAsTable(nl)
     }
     (no, nl)
   }
@@ -1478,7 +1457,7 @@ object Pipeline {
     * metadata segments must carry exactly nlist centroids and m·ksub
     * codebook entries. The derivation is memoized per (JVM, sf dir)
     * and paid by whichever lifecycle query runs first; sweeps pricing
-    * the BUILD call AnnIndex.resetIndexCache() (the
+    * the BUILD reset StandingState.Ann first (the
     * index_persist_build discipline). */
   val ann_index_build = GQuery(
     "ann_index_build",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{GQuery, Tables => T}
+import graft.operators.IndexOps.{postingsOf, statsOf, trgmsOf}
 import graft.streaming.StreamOps
 
 /** Driver hash gates for the §2.7 watermark operators — all four run
@@ -709,17 +710,6 @@ object Streaming {
     "stream_index_ingest",
     (s, d) => graft.GQuery.withTempTable(s, "graft-stream-ingest") { t =>
       import s.implicits._
-      def toksOf(c: org.apache.spark.sql.Column) =
-        filter(split(lower(c), " "), x => x =!= "")
-      def postingsOf(dd: DataFrame) =
-        dd.select($"doc_id", size(toksOf($"text")).cast("long").as("dl"),
-            explode(toksOf($"text")).as("term"))
-          .groupBy($"term", $"doc_id", $"dl")
-          .agg(count(lit(1)).as("tf"))
-          .select("term", "doc_id", "tf", "dl")
-      def statsOf(dd: DataFrame) =
-        dd.agg(count(lit(1)).as("n_docs"),
-          sum(size(toksOf($"text")).cast("long")).as("sum_dl"))
       val docs = T.spread(T.documents(s, d))
       // init: the base segment, written once (the IndexOps layout).
       // localCheckpoint before repartitionByRange (r15, guide §1.2):
@@ -903,11 +893,6 @@ object Streaming {
     "stream_trgm_ingest",
     (s, d) => graft.GQuery.withTempTable(s, "graft-stream-trgm") { t =>
       import s.implicits._
-      def trgmsOf(dd: DataFrame) =
-        dd.select($"doc_id", explode(expr(
-          "transform(sequence(1, greatest(length(text) - 2, 1))," +
-            " i -> substring(text, i, 3))")).as("g"))
-          .distinct()
       val docs = T.spread(T.documents(s, d))
       // localCheckpoint before repartitionByRange (r15, guide §1.2):
       // the range-boundary sampling job otherwise re-runs the base

@@ -69,8 +69,7 @@ class ServingSpec extends SparkSpec {
     * unrated), averaged per team. */
   private def specPlan(spark: SparkSession, players: DataFrame,
       chemistrySym: DataFrame, ratings: DataFrame,
-      team1: Serving.TeamRequest, team2: Serving.TeamRequest,
-      rules: Serving.RoleRules = Serving.RoleRules())
+      team1: Serving.TeamRequest, team2: Serving.TeamRequest)
       : Option[Seq[Serving.TeamChance]] = {
     import spark.implicits._
     val req = (team1.players.map((team1.name, _)) ++
@@ -84,8 +83,8 @@ class ServingSpec extends SparkSpec {
       sum(when($"role" === "FW", 1).otherwise(0)).as("fw"),
       count(lit(1)).as("n")).collect()
     val valid = roleCounts.length == 2 && roleCounts.forall { r =>
-      r.getAs[Long]("gk") == rules.gk && r.getAs[Long]("df") >= rules.dfMin &&
-      r.getAs[Long]("md") >= rules.mdMin && r.getAs[Long]("fw") >= rules.fwMin &&
+      r.getAs[Long]("gk") == 1 && r.getAs[Long]("df") >= 3 &&
+      r.getAs[Long]("md") >= 2 && r.getAs[Long]("fw") >= 1 &&
       r.getAs[Long]("n") == 11
     }
     if (!valid) None

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *    return (the same-oracle dual path, pinned without DuckDB in the
   *    loop so the suite catches a divergence even when the fixture
   *    changes);
-  *  - the segment cache is refreshed after resetIndexCache (the
-  *    ScaleSweep pricing hook actually re-derives);
+  *  - the segment cache is refreshed after a StandingState reset
+  *    (the ScaleSweep pricing hook actually re-derives);
   *  - index_ivm_merge's merge algebra holds over EVERY term, not just
   *    the gated top-50: merged dict == full-rebuild dict exactly;
   *  - quantile_bins_approx's GK contract is LOAD-BEARING at fixture
@@ -51,7 +51,7 @@ class Round11Spec extends SparkSpec {
     val before = IndexOps.dict(spark, sf).inputFiles.toSet
     val rows = Registry.queryMap("index_persist_build")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    IndexOps.resetIndexCache()
+    graft.StandingState.reset(graft.StandingState.Postings)
     val after = IndexOps.dict(spark, sf).inputFiles.toSet
     assert(before.intersect(after).isEmpty,
       "reset did not re-derive - same segment files re-read")

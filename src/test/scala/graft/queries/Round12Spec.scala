@@ -83,7 +83,7 @@ class Round12Spec extends SparkSpec {
     assert(inPlanPq == warmPq,
       "warm IVF-PQ probe diverged from the in-plan twin")
     // the pricing hook re-derives: reset, probe again, same rows
-    graft.operators.AnnIndex.resetIndexCache()
+    graft.StandingState.reset(graft.StandingState.Ann)
     val rederived = rows(graft.operators.AnnIndex.ivfProbePersisted(
       spark, sf, q, "vec_id", "embedding", 5, nprobe = 4))
     assert(rederived == warmIvf,

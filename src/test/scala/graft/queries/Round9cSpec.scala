@@ -70,13 +70,7 @@ class Round9cSpec extends SparkSpec {
         s"planted shift not at day 9: ${out("shifted")}")
       assert(out("flat") == (0L, 0L),
         s"flat series must tie-break to day 0: ${out("flat")}")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally graft.StandingState.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("graph_ivm_edges: planted delta classes - pure duplicates " +
@@ -112,13 +106,7 @@ class Round9cSpec extends SparkSpec {
         (8L, 9L, 1L))
       assert(got == expected,
         s"merged edges $got differ from planted expectation")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally graft.StandingState.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("ndv_sketch_merge: merge-tree associativity holds, estimates " +

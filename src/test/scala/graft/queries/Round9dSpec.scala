@@ -18,13 +18,7 @@ class Round9dSpec extends SparkSpec {
   private def withPlant(prefix: String)(body: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     try body(dir)
-    finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    finally graft.StandingState.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bpe_train: reproduces a hand-computed merge table, including " +
