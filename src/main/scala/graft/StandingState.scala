@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Per-JVM standing state: the derived tables that analysis sessions
   * reuse instead of re-deriving (persisted index segments, the graph
-  * edge table, the containment postings, the bucketed copies), plus
-  * the parked results of [[GQuery.withTempTable]].
+  * edge table, the containment postings, the bucketed copies, the
+  * served snapshot's fitted models), plus the parked results of
+  * [[GQuery.withTempTable]].
   *
   * Everything lives under ONE lazily created temp root, removed by one
   * shutdown hook at JVM exit. A derived table is parked once per
@@ -13,7 +14,9 @@ import java.nio.file.{Files, Path, Paths}
   * directory, so only the first query of a session pays the build.
   * Every derivation is a pure function of the sf dir's raw tables and
   * every gate's oracle re-derives its answer from those raw tables, so
-  * a wrong or stale directory breaks a hash gate immediately.
+  * a wrong or stale directory breaks a hash gate immediately. The
+  * served models are keyed on their tables' identity instead of an sf
+  * dir (see `graft.fpl.ServedModels`).
   *
   * A pricing harness (ScaleSweep) that wants to time a BUILD calls
   * [[reset]] for that kind first: the kind's directories are forgotten
@@ -46,6 +49,9 @@ object StandingState {
   case object Containment extends Kind("graft-bucket-std")
   /** `Pipeline` bucketed catalog-table files. */
   case object Bucketed extends Kind("graft-bucket-std")
+  /** `graft.fpl.ServedModels` retired flags + fallback ratings of one
+    * served snapshot. */
+  case object ServedModels extends Kind("graft-served-models")
 
   private lazy val root: Path = {
     val p = Files.createTempDirectory("graft-standing")

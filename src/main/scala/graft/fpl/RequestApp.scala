@@ -19,8 +19,10 @@ import scala.jdk.CollectionConverters._
   * the collected rows. Jobs per request, `handle` plus the response
   * collect, recorded on the season benchmark (traced `serve_mix`, seed
   * 311): win 4 (the reference: ~44), profile 2, match info 7, dated
-  * win 32 (mostly the k-means and regression fits; varies by seed). A
-  * request missing a field its type needs fails with an
+  * win 4. The first dated win of a served snapshot also fits the
+  * k-means and the age regression ([[ServedModels]]); later ones read
+  * the fitted outputs. A request missing a field its type needs, or a
+  * win whose `date` is not a `yyyy-MM-dd` date, fails with an
   * `IllegalArgumentException` naming the field.
   */
 object RequestApp {
@@ -59,21 +61,19 @@ object RequestApp {
     req.reqType match {
       case 1L =>
         val (team1, team2) = (req.team("team1"), req.team("team2"))
+        val date = req.opt("date").map(Serving.requestDate)
         // full §2.8 model flow when the request carries a date and the
-        // dims carry birthDate: fallback ratings + age model + retired
-        val result = req.opt("date").filter(_ =>
-            players.columns.contains("birthDate") &&
-            profiles.columns.contains("matches_played")) match {
-          case Some(date) =>
-            val hist = ratings.join(players.select($"Id".as("playerId"),
-                MLCapabilities.ageAt($"birthDate", to_date(lit(date)))
-                  .as("age")), Seq("playerId"))
-              .select($"age", $"rating")
-            Serving.winPredictionFull(spark, players, chemistrySym,
-              ratings, profiles, hist, team1, team2, date).toOption
-          case None => Serving.winPrediction(spark, players, chemistrySym,
+        // dims carry birthDate: fallback ratings + age model + retired,
+        // answered from the snapshot's models (the answer does not
+        // depend on the date, see ServedModels)
+        val result =
+          if (date.nonEmpty && players.columns.contains("birthDate") &&
+              profiles.columns.contains("matches_played"))
+            Serving.winPredictionServed(players, chemistrySym,
+              ServedModels.of(spark, players, ratings, profiles),
+              team1, team2).toOption
+          else Serving.winPrediction(spark, players, chemistrySym,
             ratings, team1, team2)
-        }
         val out = result match {
           case None => Seq("Invalid Team").toDF("status")
           case Some(Seq(t1, t2)) =>

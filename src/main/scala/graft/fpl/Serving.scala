@@ -2,6 +2,9 @@ package graft.fpl
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import java.time.LocalDate
+import java.time.format.{DateTimeFormatter, DateTimeParseException,
+  ResolverStyle}
 
 /** Request serving (reference ui.py, E3). The reference answers a win
   * prediction with two `filter().first()` jobs per player, about 44
@@ -15,10 +18,12 @@ import org.apache.spark.sql.functions._
   *    (≤22 rows). Both `In` filters push into the Parquet scan. The
   *    spec formula then runs on the driver over those rows: 3 jobs, 1
   *    for an invalid squad.
-  *  - dated win prediction: the same lookups, the squad's ages scored
-  *    with the fitted age model, and the cluster-fallback ratings read
-  *    for the squad ids only. The k-means and regression fits are the
-  *    rest of its jobs.
+  *  - dated win prediction: the same `name IN` scan, one `playerId IN`
+  *    read of the snapshot's fitted models ([[ServedModels]]: retired
+  *    flags and cluster-fallback ratings) and, for a squad with no
+  *    retired player that passes validation, the chemistry read: 3
+  *    jobs, 2 for a rejected squad. The first dated request of a
+  *    snapshot also fits the k-means and the age regression.
   *  - profile and match info: one plan each over the persisted tables.
   */
 object Serving {
@@ -28,28 +33,38 @@ object Serving {
 
   case class TeamChance(team: String, winningChance: Double)
 
+  /** A request's `date`, which must be a `yyyy-MM-dd` date. */
+  def requestDate(date: String): LocalDate =
+    try LocalDate.parse(date, DateFormat)
+    catch { case e: DateTimeParseException =>
+      throw new IllegalArgumentException(
+        s"request field 'date' is not a yyyy-MM-dd date: $date", e)
+    }
+
+  private val DateFormat = DateTimeFormatter.ofPattern("uuuu-MM-dd")
+    .withResolverStyle(ResolverStyle.STRICT)
+
   /** One squad entry: a requested name matched to one dim row. A name
     * with two dim rows gives two entries, an unknown name none, as the
-    * inner join of request and dim does. `age` is set when the lookup
-    * was given a date. */
+    * inner join of request and dim does. `birthDate` (as a string) is
+    * set when the lookup was asked for it and the row has one. */
   private case class Member(team: String, name: String, id: Long,
-      role: String, age: Option[Double])
+      role: String, birthDate: Option[String])
 
   /** The dim rows of the requested names, from one `name IN (...)` scan,
-    * matched to the request's slots team by team; with a `date`, each
-    * row carries the player's age at that date. */
+    * matched to the request's slots team by team. */
   private def lookupSquad(players: DataFrame, team1: TeamRequest,
-      team2: TeamRequest, date: Option[String] = None): Seq[Member] = {
+      team2: TeamRequest, withBirthDate: Boolean = false): Seq[Member] = {
     val names = (team1.players ++ team2.players).distinct
-    val age = date.fold(lit(null).cast("double"))(d =>
-      MLCapabilities.ageAt(col("birthDate"), to_date(lit(d))))
+    val birthDate = if (withBirthDate) col("birthDate").cast("string")
+      else lit(null).cast("string")
     val rows = players.filter(col("name").isin(names: _*))
-      .select(col("name"), col("Id").cast("long"), col("role"), age)
+      .select(col("name"), col("Id").cast("long"), col("role"), birthDate)
       .collect().groupBy(_.getString(0))
     for (t <- Seq(team1, team2); n <- t.players;
          r <- rows.getOrElse(n, Array.empty[Row]))
       yield Member(t.name, n, r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+        Option(r.getString(3)))
   }
 
   /** Exactly two team groups, each of 11 entries that pass the spec's
@@ -65,8 +80,18 @@ object Serving {
     }
   }
 
-  /** The spec chances of a valid squad. Reads the chemistry of the
-    * squad's pairs and the ratings of its players, then evaluates
+  /** A null value counts 0.5, the initial chemistry and rating. */
+  private def orInit(r: Row, i: Int) =
+    if (r.isNullAt(i)) 0.5 else r.getDouble(i)
+
+  /** Rows grouped by their long id in column 0, one value (column `i`)
+    * per row. */
+  private def byId(rows: Seq[Row], i: Int): Map[Long, Seq[Double]] =
+    rows.groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(orInit(_, i)) }
+
+  /** The spec chances of a valid squad, given the ratings of its
+    * players (one value per ratings row). Reads the chemistry of the
+    * squad's pairs, then evaluates
     *   strength(p) = mean(chemistry(p, mate) over entries mate ≠ p)
     *                 · rating(p)
     *   strength(team) = mean over the team's distinct players
@@ -74,20 +99,15 @@ object Serving {
     * contributes each row, a missing key or null value counts 0.5 (the
     * initial chemistry and rating). */
   private def chances(squad: Seq[Member], chemistrySym: DataFrame,
-      ratings: DataFrame, team1: TeamRequest,
+      rating: Map[Long, Seq[Double]], team1: TeamRequest,
       team2: TeamRequest): Seq[TeamChance] = {
     val ids = squad.map(_.id).distinct
-    def orInit(r: Row, i: Int) = if (r.isNullAt(i)) 0.5 else r.getDouble(i)
     val chem = chemistrySym
       .filter(col("p1").isin(ids: _*) && col("p2").isin(ids: _*))
       .select(col("p1").cast("long"), col("p2").cast("long"),
         col("chemistry").cast("double"))
       .collect().groupBy(r => (r.getLong(0), r.getLong(1)))
       .map { case (k, rs) => k -> rs.toSeq.map(orInit(_, 2)) }
-    val rating = ratings.filter(col("playerId").isin(ids: _*))
-      .select(col("playerId").cast("long"), col("rating").cast("double"))
-      .collect().groupBy(_.getLong(0))
-      .map { case (k, rs) => k -> rs.toSeq.map(orInit(_, 1)) }
     def mean(xs: Seq[Double]) = xs.sum / xs.size
     def strength(team: String): Double = {
       val ms = squad.filter(_.team == team)
@@ -125,16 +145,23 @@ object Serving {
       team1: TeamRequest, team2: TeamRequest): Option[Seq[TeamChance]] = {
     val squad = lookupSquad(players, team1, team2)
     if (!validSquad(squad)) None
-    else Some(chances(squad, chemistrySym, ratings, team1, team2))
+    else {
+      val ids = squad.map(_.id).distinct
+      val rating = byId(ratings.filter(col("playerId").isin(ids: _*))
+        .select(col("playerId").cast("long"), col("rating").cast("double"))
+        .collect().toSeq, 1)
+      Some(chances(squad, chemistrySym, rating, team1, team2))
+    }
   }
 
   /** Full spec flow for win prediction (docs/Specs.pdf pp.7-8, SURVEY
-    * §2.8): the quadratic rating-vs-age model predicts each squad
-    * entry's rating at the request date; any entry predicted below 0.2
-    * is "retired" and the request is rejected with the retired names.
-    * Otherwise the squad is validated, and effective ratings come from
-    * the cluster fallback for sparse players (< minMatches), read for
-    * the squad ids only. */
+    * §2.8): the quadratic rating-vs-age model, fitted on
+    * `ratingHistory`, predicts each squad entry's rating at the request
+    * date; any entry predicted below 0.2 is "retired" and the request
+    * is rejected with the retired names. Otherwise the squad is
+    * validated, and effective ratings come from the cluster fallback
+    * for sparse players (< minMatches). Fits both models, then answers
+    * as [[winPredictionServed]]. */
   def winPredictionFull(
       spark: SparkSession,
       players: DataFrame,           // name, role, Id, birthDate
@@ -144,24 +171,35 @@ object Serving {
       ratingHistory: DataFrame,     // playerId, rating + age training rows
       team1: TeamRequest, team2: TeamRequest, date: String,
       minMatches: Long = 5L)
+      : Either[Map[String, Seq[String]], Seq[TeamChance]] =
+    winPredictionServed(players, chemistrySym,
+      ServedModels.fit(players, ratings, profiles, ratingHistory,
+        requestDate(date), minMatches),
+      team1, team2)
+
+  /** The full flow answered from fitted model outputs (a
+    * [[ServedModels]] frame): the `name IN` scan, one `playerId IN` read
+    * of `models` for the squad's retired flags and effective ratings,
+    * then, for a valid squad with no retired entry, the chances. A squad
+    * entry whose birth date is unknown is not flagged. */
+  def winPredictionServed(players: DataFrame, chemistrySym: DataFrame,
+      models: DataFrame, team1: TeamRequest, team2: TeamRequest)
       : Either[Map[String, Seq[String]], Seq[TeamChance]] = {
-    import spark.implicits._
-    val scorer = MLCapabilities.ratingVsAge(ratingHistory)
-    val squad = lookupSquad(players, team1, team2, Some(date))
-    val ages = squad.map(m => (m.name, m.id, m.age))
-      .toDF("name", "playerId", "age")
-    val retired = scorer(ages).filter($"retired")
-      .select($"name").as[String].collect().toSeq
+    val squad = lookupSquad(players, team1, team2, withBirthDate = true)
+    val (flags, fallback) = models
+      .filter(col("playerId").isin(squad.map(_.id).distinct: _*))
+      .select(col("playerId"), col("birthDate"), col("retired"),
+        col("effective_rating"))
+      .collect().toSeq.partition(!_.isNullAt(2))
+    val retiredRows = flags.filter(_.getBoolean(2))
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    val retired = squad.filter(m => retiredRows((m.id, m.birthDate)))
+      .map(_.name)
     if (retired.nonEmpty) Left(Map("retired" -> retired))
     else if (!validSquad(squad))
       Left(Map("invalid" -> Seq("Invalid Team")))
-    else {
-      val effective = MLCapabilities.fallbackRatings(profiles, ratings,
-        minMatches)
-        .filter($"playerId".isin(squad.map(_.id).distinct: _*))
-        .select($"playerId", $"effective_rating".as("rating"))
-      Right(chances(squad, chemistrySym, effective, team1, team2))
-    }
+    else Right(chances(squad, chemistrySym,
+      byId(fallback, 3), team1, team2))
   }
 
   /** r_type 2 — player profile (ui.py:77-107): background from the dim ⋈

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.format_string
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Golden request/response flows (SURVEY §5.2 item 5, FIXTURES.md A5). */
@@ -99,6 +100,16 @@ class RequestAppSpec extends SparkSpec {
     assert(malformed(noPlayer7).contains("'team2.player7'"))
   }
 
+  test("req_type 1: a date that is not a yyyy-MM-dd date is named") {
+    val body = s"""${teamJson("team1", "Alpha", 0)},
+      ${teamJson("team2", "Beta", 11)}"""
+    for (d <- Seq("2018-5-20", "20-05-2018", "2018-02-30", "2018-05-20T10",
+        "yesterday", "")) {
+      val msg = malformed(s"""{"req_type": 1, "date": "$d", $body}""")
+      assert(msg.contains("'date'"), s"$d: $msg")
+    }
+  }
+
   test("req_type 2: a missing name field is named") {
     assert(malformed("""{"req_type": 2}""").contains("'name'"))
   }
@@ -148,7 +159,15 @@ class RequestAppSpec extends SparkSpec {
       .toDF("playerId", "fouls", "goals", "own_goals", "pass_accuracy",
         "shots_on_target"))
     val matchTable = table("matches", matches)
-    def jobs(req: String): Int = jobsOf {
+    // a dated win reads birth dates and the profiles' match counts
+    val datedPlayers = table("dated_players", playersDim.withColumn(
+      "birthDate", format_string("%d-01-01", $"Id" + 1980)))
+    val datedProfiles = table("dated_profiles", ids.map(i =>
+        (i, i % 3, 0L, 0L, 0.5 + i % 4 / 10.0, i % 5, 2L + i % 6))
+      .toDF("playerId", "fouls", "goals", "own_goals", "pass_accuracy",
+        "shots_on_target", "matches_played"))
+    def jobs(req: String, players: DataFrame = players,
+        profiles: DataFrame = profiles): Int = jobsOf {
       val (_, out) = RequestApp.handle(spark, req, players, teams, chem,
         ratings, profiles, matchTable)
       out.toJSON.collect()
@@ -156,24 +175,31 @@ class RequestAppSpec extends SparkSpec {
     val win = s"""{"req_type": 1, ${teamJson("team1", "Alpha", 0)},
       ${teamJson("team2", "Beta", 11)}}"""
     val invalid = win.replace("\"P10\"", "\"P11\"")
+    val dated = win.replace("{\"req_type\": 1,",
+      "{\"req_type\": 1, \"date\": \"2018-05-20\",")
     val counts = Map(
       "win" -> jobs(win),
       "invalid win" -> jobs(invalid),
       "profile" -> jobs("""{"req_type": 2, "name": "P3"}"""),
       "match" -> jobs(
         """{"date": "2018-05-20", "label": "Alpha FC - Beta FC, 2 - 1"}"""),
-      "not found" -> jobs("""{"date": "2019-01-01", "label": "nope"}"""))
+      "not found" -> jobs("""{"date": "2019-01-01", "label": "nope"}"""),
+      "first dated win" -> jobs(dated, datedPlayers, datedProfiles),
+      "dated win" -> jobs(dated, datedPlayers, datedProfiles))
     info(s"jobs per request: $counts")
     // Before the requests were parsed on the driver and served from
     // bounded key lookups (Spark's JSON reader plus one head() job per
     // field, a cached-squad join plan, the match plan run twice), this
     // fixture took: win 15, invalid win 9, profile 5, match 12, not
     // found 6.
+    // Before a served snapshot's models were fitted once, every dated
+    // win refitted the k-means and the age regression: 30 jobs here,
+    // the second request as the first.
     // An empty match plan takes 4 or 5 jobs: adaptive execution may
     // cancel a sibling stage once one stage turns out empty, or not
     // yet, by timing.
     val bounds = Map("win" -> 4, "invalid win" -> 2, "profile" -> 2,
-      "match" -> 6, "not found" -> 5)
+      "match" -> 6, "not found" -> 5, "dated win" -> 6)
     for ((k, n) <- bounds)
       assert(counts(k) <= n, s"$k: ${counts(k)} jobs, bound $n ($counts)")
   }
