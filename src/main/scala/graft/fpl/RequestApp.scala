@@ -1,9 +1,10 @@
 package graft.fpl
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
+import graft.GraftSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
+  StructType}
 
 /** Request/response dispatch (reference ui.py:20-25 + run.sh:5): a
   * request JSON document, parsed on the driver → typed dispatch on
@@ -14,15 +15,24 @@ import scala.jdk.CollectionConverters._
   *   req_type 2: player profile  → player_result.json
   *   req_type 3 (or absent): match info → match_details.json
   *
-  * Each request runs only the Spark jobs its answer needs (see
-  * [[Serving]]); match info evaluates its plan once and answers with
-  * the collected rows. Jobs per request, `handle` plus the response
-  * collect, recorded on the season benchmark (traced `serve_mix`, seed
-  * 311): win 4 (the reference: ~44), profile 2, match info 7, dated
-  * win 4. The first dated win of a served snapshot also fits the
-  * k-means and the age regression ([[ServedModels]]); later ones read
-  * the fitted outputs. A request missing a field its type needs, or a
-  * win whose `date` is not a `yyyy-MM-dd` date, fails with an
+  * Every request is answered on the driver from the [[ServedSnapshot]]
+  * of its tables, and its response is a local frame, so the response
+  * collect is its only Spark job once the snapshot parts it reads are
+  * collected. That pays off for a process that answers many requests
+  * from one table set: the first request of each type collects its
+  * parts from whole tables (the first dated win also fits the k-means
+  * and the age regression, [[ServedModels]]). A process that answers a
+  * single request (as [[main]] does) gains nothing and pays more than a
+  * key-filtered request did, most for a win, which collects every
+  * chemistry row (cold, on the season benchmark's tables: a win ~2.4 →
+  * ~3.8 s, the other types within ~10%). Jobs per request, `handle`
+  * plus the response collect, on the season benchmark (traced
+  * `serve_mix`, seed 311), after each type's first: 1 for each type,
+  * against win 4 (the reference: ~44), profile 2, match info 7 and
+  * dated win 4 from per-request key lookups. The snapshot holds
+  * O(chemistry pairs) rows: ~79k there, at most 650·649 for a full
+  * season. A request missing a field its type needs, or a win whose
+  * `date` is not a `yyyy-MM-dd` date, fails with an
   * `IllegalArgumentException` naming the field.
   */
 object RequestApp {
@@ -48,6 +58,14 @@ object RequestApp {
       apply(s"$key.name"), (1 to 11).map(i => apply(s"$key.player$i")))
   }
 
+  private val StatusSchema = StructType(Seq(StructField("status", StringType)))
+  private val WinSchema = {
+    val side = StructType(Seq(StructField("name", StringType),
+      StructField("winning chance", DoubleType, nullable = false)))
+    StructType(Seq(StructField("team1", side, nullable = false),
+      StructField("team2", side, nullable = false)))
+  }
+
   /** Parse the request, dispatch, and return (responseFileName,
     * responseDF). The response frame is written as a single JSON
     * document, matching the reference's response files. */
@@ -55,8 +73,12 @@ object RequestApp {
       players: DataFrame, teams: DataFrame, chemistrySym: DataFrame,
       ratings: DataFrame, profiles: DataFrame, matches: DataFrame)
       : (String, DataFrame) = {
-    import spark.implicits._
     val req = new Request(mapper.readTree(requestJson))
+    def local(schema: StructType, row: Row) =
+      spark.createDataFrame(java.util.List.of(row), schema)
+    def status(s: String) = local(StatusSchema, Row(s))
+    def snapshot = ServedSnapshot.of(spark, players, teams, chemistrySym,
+      ratings, profiles, matches)
 
     req.reqType match {
       case 1L =>
@@ -69,35 +91,22 @@ object RequestApp {
         val result =
           if (date.nonEmpty && players.columns.contains("birthDate") &&
               profiles.columns.contains("matches_played"))
-            Serving.winPredictionServed(players, chemistrySym,
-              ServedModels.of(spark, players, ratings, profiles),
-              team1, team2).toOption
-          else Serving.winPrediction(spark, players, chemistrySym,
-            ratings, team1, team2)
+            snapshot.datedWin(team1, team2).toOption
+          else snapshot.win(team1, team2)
         val out = result match {
-          case None => Seq("Invalid Team").toDF("status")
+          case None => status("Invalid Team")
           case Some(Seq(t1, t2)) =>
-            Seq((t1.team, t1.winningChance, t2.team, t2.winningChance))
-              .toDF("t1name", "t1chance", "t2name", "t2chance")
-              .select(
-                struct($"t1name".as("name"),
-                  $"t1chance".as("winning chance")).as("team1"),
-                struct($"t2name".as("name"),
-                  $"t2chance".as("winning chance")).as("team2"))
+            local(WinSchema, Row(Row(t1.team, t1.winningChance),
+              Row(t2.team, t2.winningChance)))
         }
         ("predict_result.json", out)
       case 2L =>
-        ("player_result.json",
-          Serving.playerProfile(players, profiles, req("name")))
+        val name = req("name")
+        ("player_result.json", snapshot.profile(name))
       case _ =>
-        // one evaluation of the match plan; the response is its rows
-        val out = Serving.matchInfo(matches, players, teams, req("date"),
-          req("label"))
-        val rows = out.collect()
-        val res =
-          if (rows.isEmpty) Seq("Not Found").toDF("status")
-          else spark.createDataFrame(rows.toSeq.asJava, out.schema)
-        ("match_details.json", res)
+        val (date, label) = (req("date"), req("label"))
+        ("match_details.json", snapshot.matchInfo(date, label)
+          .getOrElse(status("Not Found")))
     }
   }
 
@@ -109,11 +118,11 @@ object RequestApp {
       "usage: RequestApp <request.json> <stateDir> [outDir]")
     val Array(reqPath, stateDir) = args.take(2)
     val outDir = if (args.length > 2) args(2) else "."
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the tuned session pins the UTC zone
+    val spark = GraftSession.tuned(SparkSession.builder()
+        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val requestJson = new String(java.nio.file.Files.readAllBytes(

@@ -71,20 +71,23 @@ object ServedModels {
     * `profiles`, fitted at [[ReferenceDate]] on the first call for that
     * snapshot and parked as a [[StandingState.ServedModels]] table. */
   def of(spark: SparkSession, players: DataFrame, ratings: DataFrame,
-      profiles: DataFrame): DataFrame = {
-    val key = Seq(players, ratings, profiles).map(snapshot).mkString("\n")
+      profiles: DataFrame): DataFrame =
     spark.read.schema(Schema).parquet(
-      StandingState.dir(StandingState.ServedModels, key) { out =>
+      StandingState.dir(StandingState.ServedModels,
+          key(players, ratings, profiles)) { out =>
         fit(players, ratings, profiles,
           ratingHistory(players, ratings, ReferenceDate), ReferenceDate)
           .coalesce(1).write.parquet(out)
       })
-  }
 
-  /** What identifies a served frame: its input files (Spark names every
-    * written file afresh, so a rewrite and reopen changes them) and its
-    * plan's semantic hash, which tells apart frames with no files (an
-    * in-memory relation hashes its rows). */
-  private def snapshot(df: DataFrame): String =
-    df.inputFiles.sorted.mkString(",") + "#" + df.semanticHash()
+  /** What identifies the served snapshot of [[of]]: its `players`,
+    * `ratings` and `profiles` ([[StandingState.tablesKey]]). */
+  private[fpl] def key(players: DataFrame, ratings: DataFrame,
+      profiles: DataFrame): String =
+    StandingState.tablesKey(players, ratings, profiles)
+
+  /** Forget and delete the parked outputs of the snapshot `key`, if
+    * there are any; the next [[of]] for it refits. */
+  private[fpl] def drop(key: String): Unit =
+    StandingState.drop(StandingState.ServedModels, key)
 }

@@ -81,6 +81,32 @@ class StandingStateSpec extends SparkSpec {
     reset(GraphIvm)
   }
 
+  test("held values: at most HeldPerKind per kind, the least recently " +
+      "used one released; a failed build holds nothing; reset releases") {
+    val released = scala.collection.mutable.Buffer.empty[String]
+    class V(k: String) extends Held { def release(): Unit = released += k }
+    var builds = 0
+    def get(k: String) = held(GraphIvm, s"spec-held-$k") {
+      builds += 1; new V(k)
+    }
+    assert(HeldPerKind == 2)
+    val a = get("a")
+    get("b")
+    assert((get("a") eq a) && builds == 2)
+    get("c")
+    assert(released == Seq("b") && (get("a") eq a) && builds == 3)
+    intercept[IllegalStateException] {
+      held(GraphIvm, "spec-held-d")(throw new IllegalStateException("x"))
+    }
+    assert(released == Seq("b") && builds == 3, "a failed build evicted")
+    get("b")
+    assert(released == Seq("b", "c") && builds == 4)
+    reset(GraphIvm)
+    assert(released.toSet == Set("a", "b", "c") && released.size == 4)
+    assert(!(get("a") eq a) && builds == 5)
+    reset(GraphIvm)
+  }
+
   test("co-purchase edges are deleted on reset and re-derived with the " +
       "same rows") {
     def rows() = operators.GraphOps.coPurchaseEdges(spark, sf)

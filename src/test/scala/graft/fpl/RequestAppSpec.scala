@@ -177,16 +177,28 @@ class RequestAppSpec extends SparkSpec {
     val invalid = win.replace("\"P10\"", "\"P11\"")
     val dated = win.replace("{\"req_type\": 1,",
       "{\"req_type\": 1, \"date\": \"2018-05-20\",")
-    val counts = Map(
+    val profile = """{"req_type": 2, "name": "P3"}"""
+    val matchReq =
+      """{"date": "2018-05-20", "label": "Alpha FC - Beta FC, 2 - 1"}"""
+    val builds = ServedSnapshot.builds
+    // the first request of each type collects the parts of its table
+    // set's snapshot it reads; the first dated win also fits the
+    // snapshot's models
+    val first = Map(
+      "win" -> jobs(win),
+      "profile" -> jobs(profile),
+      "match" -> jobs(matchReq),
+      "dated win" -> jobs(dated, datedPlayers, datedProfiles))
+    val all = Map(
       "win" -> jobs(win),
       "invalid win" -> jobs(invalid),
-      "profile" -> jobs("""{"req_type": 2, "name": "P3"}"""),
-      "match" -> jobs(
-        """{"date": "2018-05-20", "label": "Alpha FC - Beta FC, 2 - 1"}"""),
+      "profile" -> jobs(profile),
+      "match" -> jobs(matchReq),
       "not found" -> jobs("""{"date": "2019-01-01", "label": "nope"}"""),
-      "first dated win" -> jobs(dated, datedPlayers, datedProfiles),
       "dated win" -> jobs(dated, datedPlayers, datedProfiles))
-    info(s"jobs per request: $counts")
+    info(s"first requests $first; then $all")
+    assert(ServedSnapshot.builds - builds == 2,
+      "a request rebuilt its table set's snapshot")
     // Before the requests were parsed on the driver and served from
     // bounded key lookups (Spark's JSON reader plus one head() job per
     // field, a cached-squad join plan, the match plan run twice), this
@@ -195,13 +207,12 @@ class RequestAppSpec extends SparkSpec {
     // Before a served snapshot's models were fitted once, every dated
     // win refitted the k-means and the age regression: 30 jobs here,
     // the second request as the first.
-    // An empty match plan takes 4 or 5 jobs: adaptive execution may
-    // cancel a sibling stage once one stage turns out empty, or not
-    // yet, by timing.
-    val bounds = Map("win" -> 4, "invalid win" -> 2, "profile" -> 2,
-      "match" -> 6, "not found" -> 5, "dated win" -> 6)
-    for ((k, n) <- bounds)
-      assert(counts(k) <= n, s"$k: ${counts(k)} jobs, bound $n ($counts)")
+    // Before requests were answered from a driver-resident snapshot,
+    // each read its keys with Spark jobs: win 4, invalid win 2,
+    // profile 2, match 6, not found 4 or 5 (by adaptive-execution
+    // timing), dated win 4. Now the response collect is the only job.
+    for ((k, n) <- all)
+      assert(n <= 1, s"$k: $n jobs, bound 1 ($all)")
   }
 
   private def tmp(name: String, content: String): String = {

@@ -155,6 +155,11 @@ class ServedModelsSpec extends SparkSpec {
       (open("players"), open("ratings"), open("profiles"))
     val models = ServedModels.of(spark, players, ratings, profiles)
     parked += dirOf(models)
+    // the snapshot the dated requests below are served from
+    val teams = Seq(("Alpha", 1L)).toDF("name", "Id")
+    val snapshot = ServedSnapshot.of(spark, players, teams, chem, ratings,
+      profiles, spark.emptyDataFrame)
+    val builds = ServedSnapshot.builds
     val effective = MLCapabilities.fallbackRatings(profiles, ratings).cache()
     // the fallback rows, multiplicities included (player 5 twice)
     val want = effective.select($"playerId", $"effective_rating")
@@ -169,9 +174,9 @@ class ServedModelsSpec extends SparkSpec {
 
     val kinds = for (date <- dates; (what, (t1, t2)) <- requests) yield {
       val served = Serving.winPredictionServed(players, chem, models, t1, t2)
-      sameAnswer(served,
-        perRequest(spark, players, ratings, effective, t1, t2, date),
-        s"$what at $date")
+      val want = perRequest(spark, players, ratings, effective, t1, t2, date)
+      sameAnswer(served, want, s"$what at $date")
+      sameAnswer(snapshot.datedWin(t1, t2), want, s"snapshot: $what at $date")
       what -> served
     }
     effective.unpersist()
@@ -194,14 +199,15 @@ class ServedModelsSpec extends SparkSpec {
       val (_, out) = RequestApp.handle(spark,
         s"""{"req_type": 1, "date": "$date", ${side("team1", t1)},
           ${side("team2", t2)}}""",
-        players, Seq(("Alpha", 1L)).toDF("name", "Id"), chem, ratings,
-        profiles, spark.emptyDataFrame)
+        players, teams, chem, ratings, profiles, spark.emptyDataFrame)
       val r = out.collect().head
       assert(approx(r.getStruct(0).getDouble(1),
         answers("valid").toOption.get.head.winningChance), date)
     }
     assert(dirOf(ServedModels.of(spark, players, ratings, profiles)) ==
       dirOf(models), "a request refitted an unchanged snapshot")
+    assert(ServedSnapshot.builds == builds,
+      "a request collected an unchanged snapshot again")
   }
 
   test("rewriting ratings or profiles at the same path refits on the next " +
@@ -264,5 +270,39 @@ class ServedModelsSpec extends SparkSpec {
     assert(parked.forall(Files.exists(_)))
     StandingState.reset(StandingState.ServedModels)
     assert(parked.forall(!Files.exists(_)))
+  }
+
+  test("the snapshot memo holds the two latest table sets; an evicted " +
+      "set's parked models are deleted once no held set reads them, and a " +
+      "reset drops every set") {
+    val (t1, t2) = requests.head._2
+    val teams = Seq(("Alpha", 1L)).toDF("name", "Id")
+    def ratings(shift: Double) = ratingRows(shift).toDF("playerId", "rating")
+    def set(shift: Double, chemistry: DataFrame = chem) =
+      ServedSnapshot.of(spark, dim(dimRows), teams, chemistry, ratings(shift),
+        profileRows(allDense = true), spark.emptyDataFrame)
+    // the parked models of a set, read again without a refit
+    def models(shift: Double) = dirOf(ServedModels.of(spark, dim(dimRows),
+      ratings(shift), profileRows(allDense = true)))
+    val builds = ServedSnapshot.builds
+    def built = ServedSnapshot.builds - builds
+    val a = set(0.2)
+    assert(a.datedWin(t1, t2).isRight)
+    val aModels = models(0.2)
+    // other chemistry, the same players, ratings and profiles: a set of
+    // its own that reads a's models
+    val a2 = set(0.2, chem.filter($"p1" =!= 1L))
+    assert(a2.datedWin(t1, t2).isRight && models(0.2) == aModels)
+    val b = set(0.3)
+    assert(built == 3 && Files.exists(aModels),
+      "evicting a deleted the models a2 reads")
+    val c = set(0.4)
+    assert(built == 4 && !Files.exists(aModels),
+      "the last evicted set of the models left them parked")
+    assert((set(0.3) eq b) && (set(0.4) eq c) && built == 4)
+    assert(!(set(0.2) eq a) && built == 5, "an evicted set was still held")
+    StandingState.reset(StandingState.ServedModels)
+    assert(!(set(0.4) eq c) && built == 6, "a reset kept a held set")
+    StandingState.reset(StandingState.ServedModels)
   }
 }

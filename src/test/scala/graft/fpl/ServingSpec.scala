@@ -199,6 +199,142 @@ class ServingSpec extends SparkSpec {
       "2018-05-21", "nope").isEmpty)
   }
 
+  /** The profile plan a request ran before the served snapshot, the
+    * reference for a profile answer: the name's dim rows ⋈ profiles,
+    * zeros for a player with no profile row. */
+  private def profilePlan(players: DataFrame, profiles: DataFrame,
+      name: String): DataFrame =
+    players.filter($"name" === name)
+      .join(profiles, $"Id" === $"playerId", "left_outer")
+      .select($"name", $"birthArea", $"birthDate", $"foot", $"role",
+        $"height", $"passportArea", $"weight",
+        coalesce($"fouls", lit(0L)).as("fouls"),
+        coalesce($"goals", lit(0L)).as("goals"),
+        coalesce($"own_goals", lit(0L)).as("own_goals"),
+        coalesce($"pass_accuracy", lit(0.0)).as("pass_accuracy"),
+        coalesce($"shots_on_target", lit(0L)).as("shots_on_target"))
+
+  /** The match-info plan a request ran before the served snapshot, the
+    * reference for a match answer: one row per match of the date and
+    * label with a known squad player, its scorers repeated per goal, its
+    * booked players once, all sorted. */
+  private def matchPlan(matches: DataFrame, players: DataFrame,
+      teams: DataFrame, date: String, label: String): DataFrame = {
+    val m = matches.filter(substring_index($"dateutc", " ", 1) === date &&
+      $"label" === label)
+    val squad = Flatten.matchSquadStats(m)
+      .join(players.select($"Id", $"name"), $"playerId" === $"Id")
+    def booked(c: String) = sort_array(collect_list(when(col(c) > 0, $"name")))
+    squad.groupBy($"matchId").agg(
+        sort_array(flatten(collect_list(array_repeat($"name", $"goals"))))
+          .as("goals"),
+        sort_array(flatten(collect_list(array_repeat($"name", $"ownGoals"))))
+          .as("own_goals"),
+        booked("yellowCards").as("yellow_cards"),
+        booked("redCards").as("red_cards"))
+      .join(m.join(teams.select($"Id".as("winner"), $"name".as("winnerName")),
+        Seq("winner"), "left_outer"), $"matchId" === $"wyId")
+      .select(substring_index($"dateutc", " ", 1).as("date"), $"duration",
+        coalesce($"winnerName", lit("draw")).as("winner"), $"venue",
+        $"gameweek", $"goals", $"own_goals", $"yellow_cards", $"red_cards")
+  }
+
+  private def json(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq.sorted
+
+  test("the served snapshot answers every request type as the per-request " +
+      "plans") {
+    val none = spark.emptyDataFrame
+    val builds = ServedSnapshot.builds
+
+    // win: one table set with duplicate dim names (N7 with its own Id
+    // again, N20 with another Id), a row with a null Id (NoId, which
+    // counts for the roles but matches no chemistry or rating row),
+    // duplicate chemistry and rating rows, null values and missing pairs
+    // and ratings
+    val rnd = new scala.util.Random(9311)
+    def role(id: Long) =
+      if (id < 6) "GK" else if (id < 18) "DF" else if (id < 30) "MD" else "FW"
+    val dim = (0L until 36L).map(i => (s"N$i", role(i), Option(i))) ++
+      Seq(("N7", "DF", Some(7L)), ("N20", "MD", Some(120L)),
+        ("NoId", "DF", None))
+    val ids = dim.flatMap(_._3).distinct
+    val chemRows = for (a <- ids; b <- ids if a < b && rnd.nextDouble() < 0.6;
+      v = if (rnd.nextDouble() < 0.05) None else Some(rnd.nextDouble());
+      pair <- Seq((a, b, v), (b, a, v))) yield pair
+    val ratingRows = ids.filter(_ => rnd.nextDouble() < 0.7)
+      .map(i => (i, Option(rnd.nextDouble())))
+    val players = dim.toDF("name", "role", "Id")
+    val chem = (chemRows :+ ((0L, 8L, Some(0.25)))).toDF("p1", "p2", "chemistry")
+    val ratings = (ratingRows ++ Seq((8L, Some(0.9)), (9L, None)))
+      .toDF("playerId", "rating")
+    // the win tables alone: a win reads no profile or match part
+    val wins = ServedSnapshot.of(spark, players, none, chem, ratings, none,
+      none)
+    def n(is: Int*) = is.map(i => s"N$i")
+    val s1 = n(0, 8, 9, 10, 11, 18, 19, 21, 22, 30, 31)
+    val s2 = n(1, 12, 13, 14, 15, 23, 24, 25, 26, 32, 33)
+    val cases = Seq(
+      "valid" -> (s1, s2),
+      "duplicate, same id" -> (s1.updated(1, "N7").updated(10, "Ghost"), s2),
+      "duplicate, another id" -> (s1.updated(5, "N20").updated(10, "Ghost"), s2),
+      "null id" -> (s1.updated(4, "NoId"), s2),
+      "unknown name" -> (s1, s2.updated(3, "Ghost")),
+      "no known players" -> (s1, s2.indices.map(i => s"Ghost$i")),
+      "two GKs" -> (s1.updated(1, "N2"), s2))
+    val valid = for ((what, (p1, p2)) <- cases) yield {
+      val (t1, t2) = (Serving.TeamRequest("Alpha", p1),
+        Serving.TeamRequest("Beta", p2))
+      val got = wins.win(t1, t2)
+      val want = specPlan(spark, players, chem, ratings, t1, t2)
+      assert(got.map(_.map(_.team)) == want.map(_.map(_.team)), what)
+      for ((g, w) <- got.toSeq.flatten.zip(want.toSeq.flatten))
+        assert(approx(g.winningChance, w.winningChance), s"$what: $g vs $w")
+      what -> want.isDefined
+    }
+    assert(valid.filter(_._2).map(_._1) ==
+      Seq("valid", "duplicate, same id", "duplicate, another id", "null id"))
+    val sameName = (Serving.TeamRequest("Alpha", s1),
+      Serving.TeamRequest("Alpha", s2))
+    assert(wins.win(sameName._1, sameName._2).isEmpty &&
+      specPlan(spark, players, chem, ratings, sameName._1, sameName._2).isEmpty)
+
+    // profile and match info: the fixture dims with a second "Bob" (its
+    // own Id, no profile), and a second match of the fixture's date and
+    // label
+    val dims = Ingest.players(spark, writeTmp("players.csv",
+      Fixture.playersCsv + "\nBob,Y,1995-01-01,left,FW,170,Y,65,99"))
+    val teams = Ingest.teams(spark, writeTmp("teams.csv", Fixture.teamsCsv))
+    val matches = Ingest.matches(Ingest.parse(Seq(Fixture.matchJson,
+      Fixture.matchJson.replace("\"wyId\":1001", "\"wyId\":1003")
+        .replace("\"winner\":100", "\"winner\":200")
+        .replace("Stadio Alpha", "Stadio Beta"),
+      Fixture.minute90MatchJson).toDF("value")))
+    val profiles = Seq((1L, 3L, 0L, 0L, 0.77, 2L, 4L),
+        (2L, 1L, 1L, 0L, 0.5, 1L, 4L))
+      .toDF("playerId", "fouls", "goals", "own_goals", "pass_accuracy",
+        "shots_on_target", "matches_played")
+    val served = ServedSnapshot.of(spark, dims, teams, chem, ratings,
+      profiles, matches)
+    for (name <- Seq("Alice", "Dan", "Bob", "Zed")) {
+      val want = json(profilePlan(dims, profiles, name))
+      assert(json(served.profile(name)) == want, name)
+      assert(want.size == (name match { case "Bob" => 2 case "Zed" => 0
+        case _ => 1 }), name)
+    }
+    for ((date, label, rows) <- Seq(
+        ("2018-05-20", "Alpha FC - Beta FC, 2 - 1", 2),
+        ("2018-05-21", "Gamma FC - Delta FC, 0 - 0", 0), // no known player
+        ("2018-05-21", "Alpha FC - Beta FC, 2 - 1", 0))) {
+      val want = json(matchPlan(matches, dims, teams, date, label))
+      assert(served.matchInfo(date, label).map(json).getOrElse(Nil) == want,
+        s"$date $label")
+      assert(want.size == rows, s"$date $label")
+    }
+    assert(ServedSnapshot.of(spark, players, none, chem, ratings, none,
+      none) eq wins, "an unchanged table set was collected again")
+    assert(ServedSnapshot.builds - builds == 2)
+  }
+
   private def writeTmp(name: String, content: String): String = {
     val p = java.nio.file.Files.createTempDirectory("graft").resolve(name)
     java.nio.file.Files.writeString(p, content)
