@@ -100,7 +100,9 @@ object Bench {
     // cpus-suffixed copy beside the legacy path (additions-only: the
     // legacy path keeps its contract for every existing parser), so
     // two consecutive driver passes at different core counts both
-    // leave their full maps on disk.
+    // leave their full maps on disk. Two passes at the SAME cpus still
+    // overwrite both files; set SPARK_GRAFT_BENCH_OUT per pass to keep
+    // each pass's map.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "docs/bench_driver_last.json")
     val outPaths =
@@ -133,6 +135,51 @@ object Bench {
     System.out.flush()
   }
 
+  /** A deterministic synthetic season of `nMatches` matches, each a
+    * match JSON line followed by `eventsPerMatch` event lines, the
+    * input of [[streamingLegs]]. */
+  def synthSeason(nMatches: Int, eventsPerMatch: Int): Seq[String] = {
+    val rnd = new scala.util.Random(42)
+    (1 to nMatches).flatMap { m =>
+      val home = 100 + (m % 20)
+      val away = 100 + ((m + 7) % 20)
+      def squad(t: Int) = (0 until 14).map(i => t * 100 + i)
+      val lineup = (t: Int) => squad(t).take(11).map(p =>
+        s"""{"playerId":$p,"goals":"0","ownGoals":"0","yellowCards":"0","redCards":"0"}""")
+        .mkString("[", ",", "]")
+      val bench = (t: Int) => squad(t).drop(11).map(p =>
+        s"""{"playerId":$p,"goals":"0","ownGoals":"0","yellowCards":"0","redCards":"0"}""")
+        .mkString("[", ",", "]")
+      val matchJson =
+        s"""{"wyId":$m,"dateutc":"2018-01-01 12:00:00","duration":"Regular",
+           |"gameweek":${(m - 1) / 10 + 1},"label":"M$m","status":"Played",
+           |"venue":"V","winner":$home,"teamsData":{
+           |"$home":{"hasFormation":1,"score":1,"side":"home","teamId":$home,
+           | "formation":{"lineup":${lineup(home)},"bench":${bench(home)},
+           |  "substitutions":[{"playerIn":${home * 100 + 11},"playerOut":${home * 100},"minute":60}]}},
+           |"$away":{"hasFormation":1,"score":0,"side":"away","teamId":$away,
+           | "formation":{"lineup":${lineup(away)},"bench":${bench(away)},
+           |  "substitutions":[]}}}}""".stripMargin.replaceAll("\n", "")
+      val events = (1 to eventsPerMatch).map { e =>
+        val t = if (rnd.nextBoolean()) home else away
+        val p = t * 100 + rnd.nextInt(11)
+        val eventId = Seq(1, 2, 3, 8, 8, 8, 10)(rnd.nextInt(7))
+        val tags = eventId match {
+          case 8 => if (rnd.nextBoolean()) "[{\"id\":1801}]" else "[{\"id\":1802}]"
+          case 1 => s"""[{"id":${Seq(701, 702, 703)(rnd.nextInt(3))}}]"""
+          case 10 => if (rnd.nextInt(10) == 0) "[{\"id\":1801},{\"id\":101}]"
+            else "[{\"id\":1801}]"
+          case _ => "[]"
+        }
+        s"""{"id":${m * 100000 + e},"eventId":$eventId,"subEventId":0,
+           |"matchId":$m,"matchPeriod":"1H","eventSec":$e.0,
+           |"playerId":$p,"teamId":$t,"tags":$tags}"""
+          .stripMargin.replaceAll("\n", "")
+      }
+      matchJson +: events
+    }
+  }
+
   /** Streaming legs, each measured like the batch queries: one untimed
     * warm-up replay (JIT + codegen of the parse front-half, state-store
     * provider init) against a throwaway checkpoint, then the MIN of two
@@ -146,7 +193,7 @@ object Bench {
   private[graft] def streamingLegs(spark: SparkSession)
       : Map[String, Double] = {
     import org.apache.spark.sql.streaming.Trigger
-    val season = fpl.SeasonBench.synthSeason(80, 800)
+    val season = synthSeason(80, 800)
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench-stream")
     val inDir = tmp.resolve("in")
     java.nio.file.Files.createDirectory(inDir)

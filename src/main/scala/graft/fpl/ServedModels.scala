@@ -1,13 +1,13 @@
 package graft.fpl
 
-import graft.StandingState
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import java.time.LocalDate
 
 /** The model outputs a dated win prediction needs (docs/Specs.pdf
-  * pp.7-8), fitted once per served snapshot instead of per request.
+  * pp.7-8), fitted once per served snapshot instead of per request:
+  * [[ServedSnapshot]] collects this frame, fitted at [[ReferenceDate]],
+  * on its first dated win and holds the rows with its other parts.
   *
   * One frame of two row sets, told apart by `retired`:
   *  - one row per distinct `(playerId, birthDate)` of the players dim
@@ -26,14 +26,11 @@ import java.time.LocalDate
   */
 object ServedModels {
 
-  private val Schema: StructType = StructType(Seq(
-    StructField("playerId", LongType),
-    StructField("birthDate", StringType),
-    StructField("retired", BooleanType),
-    StructField("effective_rating", DoubleType)))
+  private val Columns = Seq("playerId", "birthDate", "retired",
+    "effective_rating")
 
   /** The date a served snapshot's ages are taken at. */
-  private val ReferenceDate: LocalDate = LocalDate.of(2000, 1, 1)
+  private[fpl] val ReferenceDate: LocalDate = LocalDate.of(2000, 1, 1)
 
   /** The model outputs for `players` (name, Id, birthDate), `ratings`
     * (playerId, rating) and `profiles` (Folds.profiles), with the
@@ -55,39 +52,15 @@ object ServedModels {
         minMatches)
       .select(col("playerId").cast("long"), lit(null).cast("string"),
         lit(null).cast("boolean"), col("effective_rating").cast("double"))
-    retired.union(fallback).toDF(Schema.fieldNames: _*)
+    retired.union(fallback).toDF(Columns: _*)
   }
 
   /** The training rows of the rating-vs-age model: each rated player's
     * rating with its age at `at`, once per matching dim row. */
-  private def ratingHistory(players: DataFrame, ratings: DataFrame,
+  private[fpl] def ratingHistory(players: DataFrame, ratings: DataFrame,
       at: LocalDate): DataFrame =
     ratings.join(players.select(col("Id").as("playerId"),
         MLCapabilities.ageAt(col("birthDate"),
           lit(java.sql.Date.valueOf(at))).as("age")), Seq("playerId"))
       .select(col("age"), col("rating"))
-
-  /** The model outputs of the served snapshot `players`, `ratings`,
-    * `profiles`, fitted at [[ReferenceDate]] on the first call for that
-    * snapshot and parked as a [[StandingState.ServedModels]] table. */
-  def of(spark: SparkSession, players: DataFrame, ratings: DataFrame,
-      profiles: DataFrame): DataFrame =
-    spark.read.schema(Schema).parquet(
-      StandingState.dir(StandingState.ServedModels,
-          key(players, ratings, profiles)) { out =>
-        fit(players, ratings, profiles,
-          ratingHistory(players, ratings, ReferenceDate), ReferenceDate)
-          .coalesce(1).write.parquet(out)
-      })
-
-  /** What identifies the served snapshot of [[of]]: its `players`,
-    * `ratings` and `profiles` ([[StandingState.tablesKey]]). */
-  private[fpl] def key(players: DataFrame, ratings: DataFrame,
-      profiles: DataFrame): String =
-    StandingState.tablesKey(players, ratings, profiles)
-
-  /** Forget and delete the parked outputs of the snapshot `key`, if
-    * there are any; the next [[of]] for it refits. */
-  private[fpl] def drop(key: String): Unit =
-    StandingState.drop(StandingState.ServedModels, key)
 }

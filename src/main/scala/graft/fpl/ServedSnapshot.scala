@@ -19,28 +19,27 @@ import scala.jdk.CollectionConverters._
   *  - the profile answer rows by `name` ([[Serving.profileRows]]);
   *  - the match-info answer rows by `(date, label)`
   *    ([[Serving.matchRows]]);
-  *  - the dated win's model rows ([[ServedModels.of]]).
+  *  - the dated win's model rows, fitted on the players, ratings and
+  *    profiles at [[ServedModels.ReferenceDate]] ([[ServedModels.fit]]).
   * Each answer is the one the per-request functions of [[Serving]] give
   * for the same tables: both read through the same definitions, here
   * over every row instead of the request's keys. A part reads whole
   * tables, so it pays off over the many requests a serving process
   * answers from one table set, not for a process that answers one.
   *
-  * Memory is O(chemistry pairs): ~79k rows for the season benchmark's
-  * tables, at most 650·649 for a full season's 650 players. The memo
-  * holds the [[StandingState.HeldPerKind]] most recently used table
-  * sets (kind [[StandingState.ServedModels]]); an evicted snapshot's
-  * parked models are deleted unless a held snapshot shares them, and
-  * `StandingState.reset(ServedModels)` drops every snapshot.
+  * The snapshot is the one memo of a served table set: its fitted
+  * models are held with it and go when it goes, so a set that differs
+  * from a held one in any table fits its own. Memory is O(chemistry
+  * pairs): ~79k rows for the season benchmark's tables, at most 650·649
+  * for a full season's 650 players. The memo holds the
+  * [[StandingState.HeldPerKind]] most recently used table sets (kind
+  * [[StandingState.ServedSnapshots]]), and
+  * `StandingState.reset(ServedSnapshots)` drops every snapshot.
   */
 final class ServedSnapshot private (spark: SparkSession, players: DataFrame,
     teams: DataFrame, chemistrySym: DataFrame, ratings: DataFrame,
-    profiles: DataFrame, matches: DataFrame) extends StandingState.Held {
+    profiles: DataFrame, matches: DataFrame) {
   import ServedSnapshot.{Answers, part, rows}
-
-  /** The parked models this snapshot reads, shared by every snapshot of
-    * the same players, ratings and profiles. */
-  private val modelsKey = ServedModels.key(players, ratings, profiles)
 
   private lazy val dim = part("players")(Serving.dimByName(players))(rows)
   private lazy val rating = part("ratings")(Serving.ratingsById(ratings))(rows)
@@ -51,18 +50,17 @@ final class ServedSnapshot private (spark: SparkSession, players: DataFrame,
   private lazy val matchAnswers = part("matches")(new Answers(
     Serving.matchRows(matches, players, teams), Seq("date", "label"),
     hidden = Seq("label")))(_.size)
-  // read under the StandingState lock, so an eviction cannot delete the
-  // parked files while they are collected
-  private lazy val models = StandingState.synchronized(part("models")(
-    Serving.modelRows(ServedModels.of(spark, players, ratings, profiles)))(
-    m => m.retired.size + rows(m.fallback)))
+  private[fpl] lazy val models = part("models")(Serving.modelRows(
+    ServedModels.fit(players, ratings, profiles, ServedModels.ratingHistory(
+      players, ratings, ServedModels.ReferenceDate),
+      ServedModels.ReferenceDate)))(m => m.retired.size + rows(m.fallback))
 
   /** r_type 1 — [[Serving.winPrediction]] over the snapshot. */
   def win(team1: Serving.TeamRequest, team2: Serving.TeamRequest)
       : Option[Seq[Serving.TeamChance]] =
     Serving.win(dim, _ => chem, _ => rating, team1, team2)
 
-  /** r_type 1 with a date — [[Serving.winPredictionServed]] over the
+  /** r_type 1 with a date — [[Serving.winPredictionFull]] over the
     * snapshot and its fitted models. */
   def datedWin(team1: Serving.TeamRequest, team2: Serving.TeamRequest)
       : Either[Map[String, Seq[String]], Seq[Serving.TeamChance]] =
@@ -77,14 +75,6 @@ final class ServedSnapshot private (spark: SparkSession, players: DataFrame,
   def matchInfo(date: String, label: String): Option[DataFrame] =
     Some(matchAnswers(date, label)).filter(_.nonEmpty)
       .map(matchAnswers.frame(spark, _))
-
-  /** Deletes the parked models, unless another held snapshot reads
-    * them. */
-  def release(): Unit =
-    if (!StandingState.heldOf(StandingState.ServedModels).exists {
-        case s: ServedSnapshot => s.modelsKey == modelsKey
-        case _ => false
-      }) ServedModels.drop(modelsKey)
 }
 
 object ServedSnapshot {
@@ -97,18 +87,26 @@ object ServedSnapshot {
   def builds: Long = built.get
 
   /** The snapshot of these served tables, made on the first call for
-    * them (their identity is [[StandingState.tablesKey]]) and reused by
-    * every later call. Its parts are collected as requests read them. */
+    * them (their identity is [[tablesKey]]) and reused by every later
+    * call. Its parts are collected as requests read them. */
   def of(spark: SparkSession, players: DataFrame, teams: DataFrame,
       chemistrySym: DataFrame, ratings: DataFrame, profiles: DataFrame,
       matches: DataFrame): ServedSnapshot =
-    StandingState.held(StandingState.ServedModels, StandingState.tablesKey(
+    StandingState.held(StandingState.ServedSnapshots, tablesKey(
         players, teams, chemistrySym, ratings, profiles, matches)) {
       val s = new ServedSnapshot(spark, players, teams, chemistrySym,
         ratings, profiles, matches)
       built.incrementAndGet()
       s
     }
+
+  /** What identifies a set of served frames: each frame's input files
+    * (Spark names every written file afresh, so a rewrite and reopen
+    * changes them) and its plan's semantic hash, which tells apart
+    * frames with no files (an in-memory relation hashes its rows). */
+  private def tablesKey(frames: DataFrame*): String =
+    frames.map(f => f.inputFiles.sorted.mkString(",") + "#" + f.semanticHash())
+      .mkString("\n")
 
   /** One part, collected now; logs one line with its rows and ms. */
   private def part[T](name: String)(collect: => T)(size: T => Int): T = {

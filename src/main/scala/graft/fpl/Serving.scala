@@ -22,7 +22,7 @@ import java.time.format.{DateTimeFormatter, DateTimeParseException,
   *    `p1 IN ids AND p2 IN ids` / `playerId IN ids` reads, each pushed
   *    into the Parquet scan: 3 jobs, 1 for an invalid squad.
   *  - dated win prediction: the same dim rows, the squad's rows of the
-  *    snapshot's fitted models ([[ServedModels]]: retired flags and
+  *    fitted models ([[ServedModels]]: retired flags and
   *    cluster-fallback ratings) and, for a squad with no retired player
   *    that passes validation, the chemistry: 3 jobs, 2 for a rejected
   *    squad.
@@ -241,7 +241,10 @@ object Serving {
     * is rejected with the retired names. Otherwise the squad is
     * validated, and effective ratings come from the cluster fallback
     * for sparse players (< minMatches). Fits both models, then answers
-    * as [[winPredictionServed]]. */
+    * from the `name IN` scan, one `playerId IN` read of the fitted
+    * outputs for the squad's retired flags and effective ratings and,
+    * for a valid squad with no retired entry, the chemistry of its
+    * pairs. A squad entry whose birth date is unknown is not flagged. */
   def winPredictionFull(
       spark: SparkSession,
       players: DataFrame,           // name, role, Id, birthDate
@@ -251,23 +254,13 @@ object Serving {
       ratingHistory: DataFrame,     // playerId, rating + age training rows
       team1: TeamRequest, team2: TeamRequest, date: String,
       minMatches: Long = 5L)
-      : Either[Map[String, Seq[String]], Seq[TeamChance]] =
-    winPredictionServed(players, chemistrySym,
-      ServedModels.fit(players, ratings, profiles, ratingHistory,
-        requestDate(date), minMatches),
-      team1, team2)
-
-  /** The full flow answered from fitted model outputs (a
-    * [[ServedModels]] frame): the `name IN` scan, one `playerId IN` read
-    * of `models` for the squad's retired flags and effective ratings,
-    * then, for a valid squad with no retired entry, the chances. A squad
-    * entry whose birth date is unknown is not flagged. */
-  def winPredictionServed(players: DataFrame, chemistrySym: DataFrame,
-      models: DataFrame, team1: TeamRequest, team2: TeamRequest)
-      : Either[Map[String, Seq[String]], Seq[TeamChance]] =
+      : Either[Map[String, Seq[String]], Seq[TeamChance]] = {
+    val models = ServedModels.fit(players, ratings, profiles, ratingHistory,
+      requestDate(date), minMatches)
     datedWin(dimOf(players, team1, team2),
       ids => modelRows(models.filter(col("playerId").isin(ids: _*))),
       chemOf(chemistrySym), team1, team2)
+  }
 
   /** r_type 2 — player profile (ui.py:77-107): background from the dim ⋈
     * cumulative profile metrics. */

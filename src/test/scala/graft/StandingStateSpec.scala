@@ -81,29 +81,30 @@ class StandingStateSpec extends SparkSpec {
     reset(GraphIvm)
   }
 
-  test("held values: at most HeldPerKind per kind, the least recently " +
-      "used one released; a failed build holds nothing; reset releases") {
-    val released = scala.collection.mutable.Buffer.empty[String]
-    class V(k: String) extends Held { def release(): Unit = released += k }
+  test("held values: at most two per kind, LRU evicted, reset forgets") {
+    class V
     var builds = 0
     def get(k: String) = held(GraphIvm, s"spec-held-$k") {
-      builds += 1; new V(k)
+      builds += 1; new V
     }
     assert(HeldPerKind == 2)
     val a = get("a")
-    get("b")
+    val b = get("b")
     assert((get("a") eq a) && builds == 2)
-    get("c")
-    assert(released == Seq("b") && (get("a") eq a) && builds == 3)
+    // a is the most recently used, so c evicts b
+    val c = get("c")
+    assert((get("a") eq a) && (get("c") eq c) && builds == 3)
     intercept[IllegalStateException] {
       held(GraphIvm, "spec-held-d")(throw new IllegalStateException("x"))
     }
-    assert(released == Seq("b") && builds == 3, "a failed build evicted")
-    get("b")
-    assert(released == Seq("b", "c") && builds == 4)
-    reset(GraphIvm)
-    assert(released.toSet == Set("a", "b", "c") && released.size == 4)
+    assert((get("a") eq a) && (get("c") eq c) && builds == 3,
+      "a failed build evicted")
+    assert(!(get("b") eq b) && builds == 4, "an evicted value was held")
+    // b evicted a, the least recently used
+    assert((get("c") eq c) && builds == 4)
     assert(!(get("a") eq a) && builds == 5)
+    reset(GraphIvm)
+    assert(!(get("c") eq c) && builds == 6, "a reset kept a held value")
     reset(GraphIvm)
   }
 

@@ -3,11 +3,12 @@ package graft.fpl
 import graft.{SparkSpec, StandingState}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 
 /** A served snapshot's fitted models ([[ServedModels]]): a dated win
   * answered from them equals the per-request fit at every date, and a
-  * changed or different snapshot gets its own fit. */
+  * changed or different table set gets a snapshot, and a fit, of its
+  * own. */
 class ServedModelsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -119,6 +120,12 @@ class ServedModelsSpec extends SparkSpec {
       .select($"playerId", $"effective_rating").as[(Long, Option[Double])]
       .collect().toSeq.sorted
 
+  /** The fallback rows a snapshot's dated win reads, sorted; a null
+    * effective rating reads as 0.5. */
+  private def fallback(s: ServedSnapshot): Seq[(Long, Option[Double])] =
+    s.models.fallback.toSeq
+      .flatMap { case (p, vs) => vs.map(v => (p, Option(v))) }.sorted
+
   private def sameRows(got: Seq[(Long, Option[Double])],
       want: Seq[(Long, Option[Double])], what: String): Unit = {
     assert(got.map(_._1) == want.map(_._1), what)
@@ -127,10 +134,6 @@ class ServedModelsSpec extends SparkSpec {
         g.zip(w).forall { case (x, y) => approx(x, y) },
         s"$what, player $p: $g vs $w")
   }
-
-  /** The parked directory a models frame reads. */
-  private def dirOf(models: DataFrame): Path =
-    Paths.get(new java.net.URI(models.inputFiles.head)).getParent
 
   private def write(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
@@ -146,25 +149,25 @@ class ServedModelsSpec extends SparkSpec {
     d
   }
   private def open(name: String) = spark.read.parquet(s"$tables/$name")
-  /** Every models directory the suite has parked. */
-  private val parked = scala.collection.mutable.Set.empty[Path]
+  private lazy val teams = Seq(("Alpha", 1L)).toDF("name", "Id")
+  /** The snapshot of the parquet tables as they are now. */
+  private def opened() = ServedSnapshot.of(spark, open("players"), teams,
+    chem, open("ratings"), open("profiles"), spark.emptyDataFrame)
 
   test("a dated win from the snapshot's models equals the per-request fit " +
       "at every request date") {
     val (players, ratings, profiles) =
       (open("players"), open("ratings"), open("profiles"))
-    val models = ServedModels.of(spark, players, ratings, profiles)
-    parked += dirOf(models)
     // the snapshot the dated requests below are served from
-    val teams = Seq(("Alpha", 1L)).toDF("name", "Id")
-    val snapshot = ServedSnapshot.of(spark, players, teams, chem, ratings,
-      profiles, spark.emptyDataFrame)
+    val snapshot = opened()
     val builds = ServedSnapshot.builds
     val effective = MLCapabilities.fallbackRatings(profiles, ratings).cache()
     // the fallback rows, multiplicities included (player 5 twice)
     val want = effective.select($"playerId", $"effective_rating")
       .as[(Long, Option[Double])].collect().toSeq.sorted
-    val got = fallback(models)
+    val got = fallback(ServedModels.fit(players, ratings, profiles,
+      ServedModels.ratingHistory(players, ratings, ServedModels.ReferenceDate),
+      ServedModels.ReferenceDate))
     sameRows(got, want, "fallback ratings")
     assert(got.count(_._1 == 5L) == 2)
     // some sparse squad player takes a cluster mean, not its own rating
@@ -173,10 +176,10 @@ class ServedModelsSpec extends SparkSpec {
       id % 4 == 0 && got.find(_._1 == id).flatMap(_._2) != own.get(id) })
 
     val kinds = for (date <- dates; (what, (t1, t2)) <- requests) yield {
-      val served = Serving.winPredictionServed(players, chem, models, t1, t2)
-      val want = perRequest(spark, players, ratings, effective, t1, t2, date)
-      sameAnswer(served, want, s"$what at $date")
-      sameAnswer(snapshot.datedWin(t1, t2), want, s"snapshot: $what at $date")
+      val served = snapshot.datedWin(t1, t2)
+      sameAnswer(served,
+        perRequest(spark, players, ratings, effective, t1, t2, date),
+        s"$what at $date")
       what -> served
     }
     effective.unpersist()
@@ -204,105 +207,85 @@ class ServedModelsSpec extends SparkSpec {
       assert(approx(r.getStruct(0).getDouble(1),
         answers("valid").toOption.get.head.winningChance), date)
     }
-    assert(dirOf(ServedModels.of(spark, players, ratings, profiles)) ==
-      dirOf(models), "a request refitted an unchanged snapshot")
-    assert(ServedSnapshot.builds == builds,
-      "a request collected an unchanged snapshot again")
+    assert((opened() eq snapshot) && ServedSnapshot.builds == builds,
+      "a request made an unchanged table set's snapshot, and fit, again")
   }
 
   test("rewriting ratings or profiles at the same path refits on the next " +
       "dated request") {
     val (t1, t2) = requests.head._2
-    val players = open("players")
-    val first = ServedModels.of(spark, players, open("ratings"),
-      open("profiles"))
-    assert(dirOf(ServedModels.of(spark, open("players"), open("ratings"),
-      open("profiles"))) == dirOf(first), "reopening refitted")
+    val first = opened()
+    assert(opened() eq first, "reopening made a new snapshot")
 
     val ratings = write(ratingRows(0.05).toDF("playerId", "rating"),
       s"$tables/ratings")
-    val reRated = ServedModels.of(spark, players, ratings, open("profiles"))
-    parked ++= Seq(dirOf(first), dirOf(reRated))
-    assert(dirOf(reRated) != dirOf(first))
+    val reRated = opened()
+    assert(!(reRated eq first))
     // a dense player's effective rating is its new rating
-    assert(fallback(reRated).find(_._1 == 1L).flatMap(_._2)
-      .exists(approx(_, ratingRows(0.05).toMap.apply(1L))))
+    assert(fallback(reRated).filter(_._1 == 1L).map(_._2) ==
+      Seq(Some(ratingRows(0.05).toMap.apply(1L))))
 
     // every player dense: the effective ratings are the ratings rows, and
     // a dated win answers as a plain win over them
-    val profiles = write(profileRows(allDense = true), s"$tables/profiles")
-    val models = ServedModels.of(spark, players, ratings, profiles)
-    parked += dirOf(models)
-    assert(dirOf(models) != dirOf(reRated))
-    sameRows(fallback(models), (ratingRows(0.05).filter(_._1 != 11L)
-      .map { case (p, r) => (p, Option(r)) } :+ ((71L, None))).sorted,
+    write(profileRows(allDense = true), s"$tables/profiles")
+    val reProfiled = opened()
+    assert(!(reProfiled eq reRated))
+    sameRows(fallback(reProfiled), (ratingRows(0.05).filter(_._1 != 11L)
+      .map { case (p, r) => (p, Option(r)) } :+ ((71L, Some(0.5)))).sorted,
       "all dense")
-    val dated = Serving.winPredictionServed(players, chem, models, t1, t2)
-    val plain = Serving.winPrediction(spark, players, chem,
+    val plain = Serving.winPrediction(spark, open("players"), chem,
       ratings.filter($"playerId" =!= 11L), t1, t2)
-    sameAnswer(dated, plain.toRight(Map.empty), "after the rewrite")
+    sameAnswer(reProfiled.datedWin(t1, t2), plain.toRight(Map.empty),
+      "after the rewrite")
+  }
+
+  /** A table set of in-memory frames: the fixture dim and chemistry (or
+    * `chemistry`), ratings shifted by `shift`, every profile dense. */
+  private def inMemory(shift: Double, chemistry: DataFrame = chem) =
+    ServedSnapshot.of(spark, dim(dimRows), teams, chemistry,
+      ratingRows(shift).toDF("playerId", "rating"),
+      profileRows(allDense = true), spark.emptyDataFrame)
+
+  /** The plain win over `chemistry` and the ratings shifted by `shift`,
+    * which a dated win over all-dense profiles answers as. A10 has no
+    * profile, so no fallback row: it counts 0.5 both ways. */
+  private def plainWin(shift: Double, chemistry: DataFrame = chem): Answer = {
+    val (t1, t2) = requests.head._2
+    Serving.winPrediction(spark, dim(dimRows), chemistry,
+      ratingRows(shift).toDF("playerId", "rating")
+        .filter($"playerId" =!= 11L), t1, t2).toRight(Map.empty)
   }
 
   test("two in-memory snapshots in one JVM get their own models") {
     val (t1, t2) = requests.head._2
-    val players = dim(dimRows)
-    val profiles = profileRows(allDense = true)
-    def ratings(shift: Double) = ratingRows(shift).toDF("playerId", "rating")
-    val a = ServedModels.of(spark, players, ratings(0.0), profiles)
-    val b = ServedModels.of(spark, players, ratings(0.1), profiles)
-    parked ++= Seq(dirOf(a), dirOf(b))
-    assert(dirOf(a) != dirOf(b))
-    assert(dirOf(ServedModels.of(spark, dim(dimRows), ratings(0.0),
-      profileRows(allDense = true))) == dirOf(a),
-      "equal in-memory rows were refitted")
-    for ((models, shift) <- Seq(a -> 0.0, b -> 0.1)) {
-      // A10 has no profile, so no fallback row: it counts 0.5 both ways
-      val plain = Serving.winPrediction(spark, players, chem,
-        ratings(shift).filter($"playerId" =!= 11L), t1, t2)
-      sameAnswer(Serving.winPredictionServed(players, chem, models, t1, t2),
-        plain.toRight(Map.empty), s"shift $shift")
-    }
+    val builds = ServedSnapshot.builds
+    val (a, b) = (inMemory(0.0), inMemory(0.1))
+    assert(!(a eq b))
+    assert(inMemory(0.0) eq a, "equal in-memory rows were collected again")
+    assert(ServedSnapshot.builds - builds == 2)
+    for ((s, shift) <- Seq(a -> 0.0, b -> 0.1))
+      sameAnswer(s.datedWin(t1, t2), plainWin(shift), s"shift $shift")
   }
 
-  test("reset(ServedModels) deletes the parked files") {
-    parked += dirOf(ServedModels.of(spark, open("players"), open("ratings"),
-      open("profiles")))
-    assert(parked.forall(Files.exists(_)))
-    StandingState.reset(StandingState.ServedModels)
-    assert(parked.forall(!Files.exists(_)))
-  }
-
-  test("the snapshot memo holds the two latest table sets; an evicted " +
-      "set's parked models are deleted once no held set reads them, and a " +
-      "reset drops every set") {
+  test("the snapshot memo holds two table sets; a reset drops them") {
     val (t1, t2) = requests.head._2
-    val teams = Seq(("Alpha", 1L)).toDF("name", "Id")
-    def ratings(shift: Double) = ratingRows(shift).toDF("playerId", "rating")
-    def set(shift: Double, chemistry: DataFrame = chem) =
-      ServedSnapshot.of(spark, dim(dimRows), teams, chemistry, ratings(shift),
-        profileRows(allDense = true), spark.emptyDataFrame)
-    // the parked models of a set, read again without a refit
-    def models(shift: Double) = dirOf(ServedModels.of(spark, dim(dimRows),
-      ratings(shift), profileRows(allDense = true)))
     val builds = ServedSnapshot.builds
     def built = ServedSnapshot.builds - builds
-    val a = set(0.2)
-    assert(a.datedWin(t1, t2).isRight)
-    val aModels = models(0.2)
-    // other chemistry, the same players, ratings and profiles: a set of
-    // its own that reads a's models
-    val a2 = set(0.2, chem.filter($"p1" =!= 1L))
-    assert(a2.datedWin(t1, t2).isRight && models(0.2) == aModels)
-    val b = set(0.3)
-    assert(built == 3 && Files.exists(aModels),
-      "evicting a deleted the models a2 reads")
-    val c = set(0.4)
-    assert(built == 4 && !Files.exists(aModels),
-      "the last evicted set of the models left them parked")
-    assert((set(0.3) eq b) && (set(0.4) eq c) && built == 4)
-    assert(!(set(0.2) eq a) && built == 5, "an evicted set was still held")
-    StandingState.reset(StandingState.ServedModels)
-    assert(!(set(0.4) eq c) && built == 6, "a reset kept a held set")
-    StandingState.reset(StandingState.ServedModels)
+    val a = inMemory(0.2)
+    // other chemistry, the same players, ratings and profiles: a set, and
+    // a dated win, of its own
+    val otherChem = chem.filter($"p1" =!= 1L)
+    val a2 = inMemory(0.2, otherChem)
+    sameAnswer(a.datedWin(t1, t2), plainWin(0.2), "a")
+    sameAnswer(a2.datedWin(t1, t2), plainWin(0.2, otherChem), "a2")
+    assert(a.datedWin(t1, t2) != a2.datedWin(t1, t2))
+    val b = inMemory(0.3)
+    val c = inMemory(0.4)
+    assert(built == 4)
+    assert((inMemory(0.3) eq b) && (inMemory(0.4) eq c) && built == 4)
+    assert(!(inMemory(0.2) eq a) && built == 5, "an evicted set was still held")
+    StandingState.reset(StandingState.ServedSnapshots)
+    assert(!(inMemory(0.4) eq c) && built == 6, "a reset kept a held set")
+    StandingState.reset(StandingState.ServedSnapshots)
   }
 }
