@@ -56,18 +56,12 @@ object Chemistry {
   def chemistryTable(ratingDeltas: DataFrame): DataFrame =
     fromPairDeltas(pairDeltas(ratingDeltas))
 
-  /** Chemistry from an (incrementally appended) pair-delta table.
-    * `clamp` bounds the coefficient to [0,1] per the spec's "must be
-    * bound between 0 and 1" (docs/Specs.pdf p.6); the reference never
-    * clamps, so the default preserves its behavior. */
-  def fromPairDeltas(pairs: DataFrame, clamp: Boolean = false): DataFrame = {
-    val raw = pairs.groupBy(col("p1"), col("p2"))
+  /** Chemistry from an (incrementally appended) pair-delta table,
+    * unbounded as in the reference (docs/Specs.pdf p.6 asks for a bound
+    * between 0 and 1; the reference never clamps). */
+  def fromPairDeltas(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("p1"), col("p2"))
       .agg((lit(0.5) + sum(col("pairDelta"))).as("chemistry"))
-    if (clamp)
-      raw.withColumn("chemistry",
-        least(greatest(col("chemistry"), lit(0.0)), lit(1.0)))
-    else raw
-  }
 
   /** Symmetric view (both (p1,p2) and (p2,p1)) for lookup joins. */
   def symmetric(chem: DataFrame): DataFrame =

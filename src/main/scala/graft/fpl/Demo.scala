@@ -1,11 +1,12 @@
 package graft.fpl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end demo of the football-analytics pipeline over a replayed
-  * JSON line stream: ingest → metric algebra → minutes → ratings →
-  * chemistry → profiles → serving. Run:
+  * JSON line stream: the serving tables (ratings, profiles, chemistry)
+  * of the batch path, then the streaming replay. Run:
   *   sbt "runMain graft.fpl.Demo [path-to-jsonl]"
   * Without an argument it replays the built-in synthetic match. */
 object Demo {
@@ -24,34 +25,23 @@ object Demo {
       if (args.nonEmpty) spark.read.text(args(0))
       else DemoFixture.lines.toDF("value")
 
-    val parsed = Ingest.parse(lines)
-    val events = Ingest.events(parsed).cache()
-    val matches = Ingest.matches(parsed).cache()
-
-    println("=== per-(match,player) final metrics (A1+A2) ===")
-    val fm = MetricsAlgebra.playerMatchMetrics(events)
-    fm.orderBy("matchId", "playerId").show(30, false)
-
-    println("=== on-pitch minutes (G1) ===")
-    val pm = Flatten.playerMinutes(matches)
-    pm.orderBy("playerId").show(30, false)
-
-    println("=== ratings trajectory (A4) ===")
-    val ratings = Folds.ratings(spark, fm, pm)
-    ratings.orderBy("matchId", "playerId").show(30, false)
-
-    println("=== chemistry (J4+A5) ===")
-    Chemistry.chemistryTable(
-        ratings.select($"matchId", $"playerId", $"teamId", $"delta"))
-      .orderBy("p1", "p2").show(20, false)
-
-    println("=== cumulative profiles (A3) ===")
-    Folds.profiles(fm).orderBy("playerId").show(30, false)
+    // Batch: the serving tables, from the stream's kernel over the whole
+    // replay (the demo has no player or team dims).
+    val tmp = java.nio.file.Files.createTempDirectory("graft-demo")
+    val tables = tmp.resolve("tables").toString
+    def noRows(schema: StructType) =
+      spark.createDataFrame(java.util.List.of[Row](), schema)
+    ServingTables.write(lines, noRows(Schemas.playerSchema),
+      noRows(Schemas.teamSchema), tables)
+    for (name <- Seq("ratings", "profiles", "chemistry_sym")) {
+      println(s"=== serving table $name ===")
+      val t = spark.read.parquet(s"$tables/$name")
+      t.orderBy(t.columns.take(2).map(col).toSeq: _*).show(30, false)
+    }
 
     // Streaming replay: the same lines through a real file-source
     // readStream → stateful match-close pipeline → parquet sink.
     println("=== streaming replay (FplStream, AvailableNow) ===")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-demo")
     val inDir = tmp.resolve("in"); java.nio.file.Files.createDirectory(inDir)
     // a trailing match record acts as season-end punctuation so the
     // last real match rolls over and emits (spec: match JSON precedes

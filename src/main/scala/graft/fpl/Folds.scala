@@ -1,125 +1,29 @@
 package graft.fpl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoder, Encoders}
+import graft.streaming.FplStream
 
-/** Order-dependent folds (reference A3 getPlayerProfile master.py:242-259
-  * and A4 updatePlayerRating master.py:214-239).
-  *
-  * These are NOT commutative aggregations — `(new+old)/2` chains depend on
-  * match order, which the reference gets implicitly from socket arrival.
-  * Batch-side we make the order explicit (gameweek / matchId sequence) and
-  * fold with typed `Aggregator`s whose buffers carry (seq, value) pairs:
-  * merge is concatenation (associative, any partial-aggregation tree is
-  * fine), and only `finish` sorts and folds — so the result is
-  * deterministic under Spark's arbitrary partial-agg order. Per-key
-  * cardinality is one row per match (≤38/season), so buffers stay tiny
-  * at any data scale.
-  */
+/** The rating and profile tables (reference A4 updatePlayerRating
+  * master.py:214-239, A3 getPlayerProfile master.py:242-259) of
+  * `MetricsAlgebra.playerMatchMetrics` rows, by the stream's kernel
+  * (`FplStream.closesOf`). Only the season benchmark (`perfbench/`)
+  * calls them, to time these layers, until it moves onto
+  * [[ServingTables]]. */
 object Folds {
 
-  case class SeqVal(playerId: Long, seq: Long, value: Double)
-  case class RatingIn(playerId: Long, matchId: Long, seq: Long,
-      contribution: Double, factor: Double)
-  case class RatingPoint(playerId: Long, matchId: Long, rating: Double,
-      delta: Double)
+  /** A4: one (playerId, matchId, rating, delta, teamId) row per close of
+    * the metric rows and minutes ([[Flatten.playerMinutes]]); a match
+    * with no minutes row is rated with factor 1.05. `spark` is unused. */
+  def ratings(spark: SparkSession, playerMatchMetrics: DataFrame,
+      playerMinutes: DataFrame): DataFrame =
+    FplStream.closesOf(FplStream.counterMessages(playerMatchMetrics, lit(0L))
+        .unionByName(FplStream.minuteMessages(playerMinutes)))
+      .select("playerId", "matchId", "rating", "delta", "teamId")
 
-  /** A3's pass-accuracy chain: r₁ = x₁, rₙ = (xₙ + rₙ₋₁)/2. */
-  class AvgOfAvgs extends Aggregator[SeqVal, List[(Long, Double)], Double] {
-    def zero: List[(Long, Double)] = Nil
-    def reduce(b: List[(Long, Double)], a: SeqVal): List[(Long, Double)] =
-      (a.seq, a.value) :: b
-    def merge(b1: List[(Long, Double)], b2: List[(Long, Double)]) = b1 ::: b2
-    def finish(b: List[(Long, Double)]): Double = b.sortBy(_._1) match {
-      case Nil => 0.0
-      case (_, h) :: t => t.foldLeft(h) { case (acc, (_, x)) => (x + acc) / 2 }
-    }
-    def bufferEncoder: Encoder[List[(Long, Double)]] =
-      Encoders.kryo[List[(Long, Double)]]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  /** Batch profile table (A3): cumulative sums for the counters, the
-    * order-dependent chain for pass accuracy (spec Q6: one update per
-    * match, not per micro-batch). */
-  def profiles(finalMetrics: DataFrame): DataFrame = {
-    val chainTerm =
-      // closed form of the chain (powers of two are exact):
-      // rₙ = x₁·2^-(n-1) + Σ_{i≥2} xᵢ·2^-(n-i+1)
-      col("pass_accuracy") *
-        when(col("rn") === 1, pow(lit(0.5), col("cnt") - 1))
-          .otherwise(pow(lit(0.5), col("cnt") - col("rn") + 1))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("playerId")).orderBy(col("matchId"))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("playerId"))
-    finalMetrics
-      .withColumn("rn", row_number().over(w))
-      .withColumn("cnt", count(lit(1)).over(wAll))
-      .withColumn("chain_term", chainTerm)
-      .groupBy(col("playerId"))
-      .agg(
-        sum(col("fouls")).as("fouls"),
-        sum(col("goals")).as("goals"),
-        sum(col("own_goals")).as("own_goals"),
-        sum(col("chain_term")).as("pass_accuracy"),
-        sum(col("shots_on_target")).as("shots_on_target"),
-        count(lit(1)).as("matches_played"))
-  }
-
-  /** A4 rating trajectory: r₀ = 0.5; per match (ordered by seq)
-    * r' = factor · (contribution + r)/2, emitting (rating, Δ).
-    *
-    * factor (spec Q2, docs/Specs.pdf p.6 §1c): 1.05 for
-    * never-substituted starters, minutes/90 otherwise.
-    *
-    * The per-player recurrence has a per-match multiplier, so there is
-    * no closed form — implemented as a typed groupByKey + in-memory fold
-    * over each player's ≤38 match rows (one shuffle; state bounded by
-    * matches-per-player, not data size). */
-  def ratingTrajectory(in: Dataset[RatingIn]): Dataset[RatingPoint] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(_.playerId).flatMapGroups { (pid, it) =>
-      val sorted = it.toIndexedSeq.sortBy(_.seq)
-      var rating = 0.5
-      sorted.iterator.map { m =>
-        val finalContrib = (m.contribution + rating) / 2
-        val next = m.factor * finalContrib
-        val delta = next - rating
-        rating = next
-        RatingPoint(pid, m.matchId, next, delta)
-      }
-    }
-  }
-
-  /** Assemble RatingIn rows from the metric + minutes frames. */
-  def ratingInputs(finalMetrics: DataFrame, playerMinutes: DataFrame)
-      : DataFrame = {
-    val factor = when(col("neverSubstituted"), lit(1.05))
-      .otherwise(col("minutesPlayed").cast("double") / 90.0)
-    finalMetrics
-      .join(playerMinutes.select(col("matchId"), col("playerId"),
-        col("teamId"), col("minutesPlayed"), col("neverSubstituted")),
-        Seq("matchId", "playerId"), "inner")
-      .select(col("playerId"), col("matchId"),
-        col("matchId").as("seq"),
-        MetricsAlgebra.contribution.as("contribution"),
-        factor.as("factor"), col("teamId"))
-  }
-
-  /** Full batch rating table: metrics ⋈ minutes → ordered fold →
-    * (playerId, matchId, rating, delta, teamId). */
-  def ratings(spark: SparkSession, finalMetrics: DataFrame,
-      playerMinutes: DataFrame): DataFrame = {
-    import spark.implicits._
-    val in = ratingInputs(finalMetrics, playerMinutes)
-    val traj = ratingTrajectory(
-      in.select("playerId", "matchId", "seq", "contribution", "factor")
-        .as[RatingIn])
-    traj.toDF.join(
-      in.select(col("playerId"), col("matchId"), col("teamId")),
-      Seq("playerId", "matchId"), "inner")
-  }
+  /** The profile table (A3) of the metric rows: see
+    * [[ServingTables.profiles]]. */
+  def profiles(playerMatchMetrics: DataFrame): DataFrame =
+    ServingTables.profiles(FplStream.closesOf(
+      FplStream.counterMessages(playerMatchMetrics, lit(0L))).toDF)
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object MLCapabilities {
 
-  /** Cluster player profiles (k=5). Input: the Folds.profiles frame.
+  /** Cluster player profiles (k=5). Input: the profiles serving table.
     * Returns (playerId, cluster). Players with < minMatches matches are
     * the intended *consumers* of the fallback (their cluster centroid's
     * mean rating/chemistry substitutes for their own history). */

@@ -2,12 +2,15 @@ package graft.fpl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.streaming.FplStream
 
-/** The event→metric algebra (reference `getMetrics` master.py:48-138 +
-  * `metricsCounterCalc` master.py:140-175 + `getFinalMetrics`
-  * master.py:177-212; semantics authoritative in docs/Specs.pdf pp.4-5).
+/** The event→counter algebra (reference `getMetrics` master.py:48-138 +
+  * `metricsCounterCalc` master.py:140-175; semantics authoritative in
+  * docs/Specs.pdf pp.4-5). The final metrics over the counters
+  * (`getFinalMetrics` master.py:177-212) are the stream kernel's
+  * per-match step, `FplStream.closeMatch`.
   *
-  * Everything is a pure `Column` expression — zero UDFs, fully inside
+  * The counters are pure `Column` expressions — zero UDFs, fully inside
   * whole-stage codegen, identical for `spark.read` and `spark.readStream`
   * inputs. Per SURVEY.md §2.9 Q1 we take the spec: goal/own-goal tags
   * count on ANY event type (the reference's catch-all branch has an
@@ -27,7 +30,7 @@ object MetricsAlgebra {
   private def b(c: Column): Column = c.cast("int")
 
   /** The 17 per-event counter columns, one struct-free select list.
-    * Names are the columns `perMatchCounters` sums. */
+    * Names are the columns `playerMatchMetrics` sums. */
   def counterColumns: Seq[(String, Column)] = {
     val isPass = col("eventId") === 8
     val isDuel = col("eventId") === 1
@@ -65,48 +68,27 @@ object MetricsAlgebra {
       df.withColumn(n, c)
     }
 
-  /** A1: per-(match, player) counter sums. The reference holds these in
-    * `updateStateByKey` with reset-on-match-change; batch-side they are
-    * exactly one keyed aggregation — a single shuffle on
-    * (matchId, playerId), partial map-side sums included for free. */
-  def perMatchCounters(events: DataFrame): DataFrame =
-    withCounters(events)
+  /** A1+A2: per-(match, player) counter sums ([[counterNames]]), the
+    * teamId of the first event, and the ratios pass_accuracy,
+    * duel_effectiveness, shot_effectiveness and free_kick_effectiveness
+    * from the kernel's step (`FplStream.foldAll`); all-zero rows close
+    * nothing and are dropped. `Folds` reruns the kernel on these rows.
+    * Only the season benchmark (`perfbench/`) calls this, to time the
+    * layer, until it moves onto `ServingTables`. */
+  def playerMatchMetrics(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    val sums = withCounters(events)
       .groupBy(col("matchId"), col("playerId"))
-      .agg(
-        sum(col(counterNames.head)).as(counterNames.head),
-        counterNames.tail.map(n => sum(col(n)).as(n)): _*)
-
-  /** Guarded ratio: division-by-zero ⇒ 0 (the reference's bare
-    * `except`, which the spec's "bound between 0 and 1" implies). */
-  def ratio(num: Column, den: Column): Column =
-    when(den === 0, 0.0).otherwise(num.cast("double") / den.cast("double"))
-
-  /** A2: per-match final metrics over the summed counters
-    * (docs/Specs.pdf pp.4-5 formulas). */
-  def finalMetrics(perMatch: DataFrame): DataFrame =
-    perMatch.select(
-      col("matchId"), col("playerId"),
-      ratio(col("accurate_normal_passes") + col("accurate_key_passes") * 2,
-        col("normal_passes") + col("key_passes") * 2).as("pass_accuracy"),
-      ratio(col("duels_won") + col("neutral_duels") * 0.5,
-        col("total_duels")).as("duel_effectiveness"),
-      ratio(col("shots_on_target_goal") + col("shots_on_target_no_goal") * 0.5,
-        col("shots")).as("shot_effectiveness"),
-      col("fouls"), col("own_goals"), col("shots_on_target"),
-      ratio(col("effective_free_kicks") + col("penalties_scored"),
-        col("free_kicks")).as("free_kick_effectiveness"),
-      col("goals"))
-
-  /** Full pipeline: raw events → per-(match,player) final metrics. */
-  def playerMatchMetrics(events: DataFrame): DataFrame =
-    finalMetrics(perMatchCounters(events))
-
-  /** Per-match player contribution (reference updatePlayerRating
-    * master.py:230-232): mean of the 4 performance numbers, then the
-    * foul/own-goal penalty. */
-  def contribution: Column = {
-    val base = (col("pass_accuracy") + col("duel_effectiveness") +
-      col("shot_effectiveness") + col("shots_on_target")) / 4
-    base - (lit(0.005) * col("fouls") + lit(0.05) * col("own_goals")) * base
+      .agg(min_by(col("teamId"), col("id")).as("teamId"),
+        counterNames.map(n => sum(col(n)).as(n)): _*)
+    FplStream.counterMessages(sums, lit(0L))
+      .flatMap(m => FplStream.foldAll(m.playerId, Iterator(m)).map(m -> _))
+      .select(Seq(col("_2.matchId"), col("_2.playerId"), col("_2.teamId"),
+          col("_2.passAccuracy").as("pass_accuracy"),
+          col("_2.duelEffectiveness").as("duel_effectiveness"),
+          col("_2.shotEffectiveness").as("shot_effectiveness"),
+          col("_2.freeKickEffectiveness").as("free_kick_effectiveness")) ++
+        counterNames.indices.map(i =>
+          col("_1.counters")(i).as(counterNames(i))): _*)
   }
 }

@@ -33,7 +33,7 @@ object ServedModels {
   private[fpl] val ReferenceDate: LocalDate = LocalDate.of(2000, 1, 1)
 
   /** The model outputs for `players` (name, Id, birthDate), `ratings`
-    * (playerId, rating) and `profiles` (Folds.profiles), with the
+    * (playerId, rating) and `profiles` (ServingTables.profiles), with the
     * rating-vs-age model fitted on `ratingHistory` (age, rating) and
     * the dim's ages taken at `at`. Runs both fits now; the frame is
     * lazy in their outputs. */

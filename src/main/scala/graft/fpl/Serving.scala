@@ -250,7 +250,7 @@ object Serving {
       players: DataFrame,           // name, role, Id, birthDate
       chemistrySym: DataFrame,
       ratings: DataFrame,           // playerId, rating (last snapshot)
-      profiles: DataFrame,          // Folds.profiles output
+      profiles: DataFrame,          // ServingTables.profiles output
       ratingHistory: DataFrame,     // playerId, rating + age training rows
       team1: TeamRequest, team2: TeamRequest, date: String,
       minMatches: Long = 5L)

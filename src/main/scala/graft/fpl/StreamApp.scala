@@ -2,6 +2,7 @@ package graft.fpl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
+import graft.GraftSession
 import graft.streaming.{FplStream, LineSource}
 
 /** The reference's `spark-submit master.py` replacement: one streaming
@@ -24,6 +25,9 @@ import graft.streaming.{FplStream, LineSource}
   * --replay starts a local feeder socket streaming the file once (line
   * per ~0.1 ms) and terminates when the stream drains — a
   * self-contained end-to-end run for demos and tests.
+  *
+  * The stream writes closes and pair deltas; the serving tables
+  * `RequestApp` reads come from [[ServingTables]] over the same lines.
   */
 object StreamApp {
 
@@ -31,16 +35,22 @@ object StreamApp {
     require(args.length >= 3, "usage: StreamApp <host> <port> <stateDir> " +
       "| --replay <file.jsonl> <stateDir> " +
       "| --conf k=v [--conf k=v ...] <stateDir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-fpl-stream")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // The shuffle partition count is frozen into the checkpoint at the
+    // first start, so it stays 8 whatever the core count.
+    val spark = GraftSession.tuned(SparkSession.builder()
+        .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+        .appName("graft-fpl-stream")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false"))
+      // a long-lived stream keeps Spark's default state maintenance
+      // interval, not the tuned one sized for short-lived queries
+      .config("spark.sql.streaming.stateStore.maintenanceInterval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    for (k <- Seq("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled",
+        "spark.sql.streaming.stateStore.maintenanceInterval"))
+      println(s"$k=${spark.conf.get(k)}")
 
     val (srcConf, stateDir, bounded) =
       if (args(0) == "--replay") {

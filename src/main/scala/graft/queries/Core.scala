@@ -363,8 +363,8 @@ object Core {
     * avg). r_n = (x_n + r_{n-1})/2, r_1 = x_1. Closed form
     * r_n = x_1·2^-(n-1) + Σ_{i≥2} x_i·2^-(n-i+1); powers of two are
     * exact in IEEE754, so only the final summation order differs →
-    * rounded to 6. The Spark side runs the same closed form the typed
-    * Aggregator (graft.fpl.Folds) is property-tested against. */
+    * rounded to 6. FplProperties checks the closed form against the
+    * sequential fold the stream kernel (FplStream.closeMatch) runs. */
   val a3_fold_avg_of_avgs = GQuery(
     "a3_fold_avg_of_avgs",
     (s, d) => {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -12,8 +12,10 @@ import graft.fpl.{Flatten, Ingest, MetricsAlgebra}
   *
   * Design (SURVEY §2.7/§7 phase 7): ONE input line stream (socket in
   * prod, file/MemoryStream in tests) → single `from_json` parse → the
-  * SAME column algebra as batch (`MetricsAlgebra`) → typed per-player
-  * state via `flatMapGroupsWithState` keyed by playerId.
+  * event counter algebra (`MetricsAlgebra`) → typed per-player state via
+  * `flatMapGroupsWithState` keyed by playerId. The batch paths run the
+  * same per-player fold over a bounded frame ([[closesOf]]), so the
+  * spec's per-match formulas have one definition ([[closeMatch]]).
   *
   * Match boundaries are data punctuation: the spec guarantees a match
   * record precedes its events (docs/Specs.pdf p.2), and each match
@@ -49,26 +51,40 @@ object FplStream {
   val NumCounters: Int = MetricsAlgebra.counterNames.size
 
   /** Raw lines → typed per-player messages (the streaming front half;
-    * identical plan for batch frames). */
+    * identical plan for batch frames): one counter message per event and
+    * one minutes message per squad member. */
   def toMessages(lines: DataFrame): Dataset[PlayerMsg] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
     val parsed = Ingest.parse(lines)
-    val events = MetricsAlgebra.withCounters(Ingest.events(parsed))
-      .select(col("playerId"), col("matchId"),
-        col("id").as("order"), lit(1).as("kind"), lit(0.0).as("factor"),
-        col("teamId"),
+    counterMessages(MetricsAlgebra.withCounters(Ingest.events(parsed)),
+        col("id"))
+      .unionByName(minuteMessages(
+        Flatten.playerMinutes(Ingest.matches(parsed))))
+  }
+
+  /** Counter messages (kind 1) from rows carrying playerId, matchId,
+    * teamId and the counter columns ([[MetricsAlgebra.counterNames]]). */
+  def counterMessages(rows: DataFrame, order: Column): Dataset[PlayerMsg] = {
+    import rows.sparkSession.implicits._
+    rows.select(col("playerId"), col("matchId"), order.as("order"),
+        lit(1).as("kind"), lit(0.0).as("factor"), col("teamId"),
         array(MetricsAlgebra.counterNames.map(c => col(c).cast("long")): _*)
           .as("counters"))
-    val minutes = Flatten.playerMinutes(Ingest.matches(parsed))
-      .select(col("playerId"), col("matchId"), lit(0L).as("order"),
+      .as[PlayerMsg]
+  }
+
+  /** [[Flatten.playerMinutes]] rows → one minutes message (kind 0) per
+    * squad member, carrying the rating factor (spec §1c, docs/Specs.pdf
+    * p.6): 1.05 for a never-substituted starter, minutes/90 otherwise. */
+  def minuteMessages(playerMinutes: DataFrame): Dataset[PlayerMsg] = {
+    import playerMinutes.sparkSession.implicits._
+    playerMinutes.select(col("playerId"), col("matchId"), lit(0L).as("order"),
         lit(0).as("kind"),
         when(col("neverSubstituted"), lit(1.05))
           .otherwise(col("minutesPlayed").cast("double") / 90.0)
           .as("factor"),
         col("teamId"),
         array((0 until NumCounters).map(_ => lit(0L)): _*).as("counters"))
-    events.unionByName(minutes).as[PlayerMsg]
+      .as[PlayerMsg]
   }
 
   val initialState: PlayerState =
@@ -85,19 +101,16 @@ object FplStream {
     out.iterator
   }
 
-  /** Pure per-key fold — ONE kernel shared by the
-    * flatMapGroupsWithState and transformWithState paths (and directly
-    * callable in tests). Messages are replayed in (matchId, order)
-    * sequence; a matchId greater than the open one closes it. */
-  def foldMessages(playerId: Long, start: PlayerState,
-      msgs: Iterator[PlayerMsg]): (PlayerState, Seq[MatchClose]) = {
-    var st = start
-    val out = scala.collection.mutable.ArrayBuffer.empty[MatchClose]
-
-    // Only event-producing players emit and update state (the batch
-    // pipeline and the reference key everything off event-derived
-    // metric rows; squad members without events get no rating row).
-    def close(): Unit = if (st.matchId >= 0 && st.counters.exists(_ != 0)) {
+  /** The spec's per-match step (docs/Specs.pdf pp.4-6), the one
+    * definition of its formulas: counters → the four metric ratios (0
+    * over a zero denominator) → contribution with its foul/own-goal
+    * penalty → r' = factor·(c+r)/2 → the pass-accuracy chain and the
+    * profile sums. Returns the close and the next state; None when no
+    * match is open or its counters are all zero (no close, no rating). */
+  def closeMatch(playerId: Long, st: PlayerState)
+      : Option[(MatchClose, PlayerState)] =
+    if (st.matchId < 0 || st.counters.forall(_ == 0)) None
+    else {
       val c = st.counters
       def ratio(num: Double, den: Double): Double =
         if (den == 0) 0.0 else num / den
@@ -111,14 +124,29 @@ object FplStream {
       val profPassAcc =
         if (st.profMatches == 0) passAcc
         else (passAcc + st.profPassAcc) / 2
-      out += MatchClose(playerId, st.matchId, st.teamId, passAcc,
-        duelEff, shotEff, c(11), c(12), c(10), fkEff, c(16), contrib,
-        nextRating, nextRating - st.rating, profPassAcc,
-        st.profMatches + 1)
-      st = PlayerState(-1L, 1.05, -1L, new Array[Long](NumCounters),
-        nextRating, st.profFouls + c(11), st.profGoals + c(16),
-        st.profOwnGoals + c(12), profPassAcc, st.profShots + c(10),
-        st.profMatches + 1)
+      Some((MatchClose(playerId, st.matchId, st.teamId, passAcc, duelEff,
+          shotEff, c(11), c(12), c(10), fkEff, c(16), contrib, nextRating,
+          nextRating - st.rating, profPassAcc, st.profMatches + 1),
+        PlayerState(-1L, 1.05, -1L, new Array[Long](NumCounters),
+          nextRating, st.profFouls + c(11), st.profGoals + c(16),
+          st.profOwnGoals + c(12), profPassAcc, st.profShots + c(10),
+          st.profMatches + 1)))
+    }
+
+  /** Pure per-key fold — ONE kernel shared by the
+    * flatMapGroupsWithState and transformWithState paths and the batch
+    * driver [[closesOf]] (and directly callable in tests). Messages are
+    * replayed in (matchId, order) sequence; a matchId greater than the
+    * open one closes it. */
+  def foldMessages(playerId: Long, start: PlayerState,
+      msgs: Iterator[PlayerMsg]): (PlayerState, Seq[MatchClose]) = {
+    var st = start
+    val out = scala.collection.mutable.ArrayBuffer.empty[MatchClose]
+
+    def close(): Unit = closeMatch(playerId, st) match {
+      case Some((c, next)) => out += c; st = next
+      // nothing closed: the next match starts from the defaults too
+      case None => st = st.copy(matchId = -1L, factor = 1.05, teamId = -1L)
     }
 
     msgs.toSeq.sortBy(m => (m.matchId, m.kind, m.order)).foreach { m =>
@@ -153,6 +181,22 @@ object FplStream {
     msgs.groupByKey(_.playerId)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(handle)
+  }
+
+  /** One player's whole bounded input folded from [[initialState]] by
+    * [[foldMessages]]; the match still open at the end of the input is
+    * closed by the same step ([[closeMatch]]), as an end-of-data timer
+    * would close it in the stream. */
+  def foldAll(playerId: Long, msgs: Iterator[PlayerMsg]): Seq[MatchClose] = {
+    val (st, out) = foldMessages(playerId, initialState, msgs)
+    out ++ closeMatch(playerId, st).map(_._1)
+  }
+
+  /** Bounded (batch) messages → every match close, by [[foldAll]] per
+    * player: the batch paths run the stream's kernel. */
+  def closesOf(msgs: Dataset[PlayerMsg]): Dataset[MatchClose] = {
+    import msgs.sparkSession.implicits._
+    msgs.groupByKey(_.playerId).flatMapGroups((p, it) => foldAll(p, it))
   }
 
   /** Idempotent per-batch parquet write: the table is partitioned by

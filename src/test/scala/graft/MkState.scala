@@ -1,30 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.fpl._
+
+import java.nio.file.Files
+import graft.fpl.{Fixture, ServingTables}
+
+/** Fixture serving tables for `RequestApp`:
+  *   sbt "Test/runMain graft.MkState <outDir>" */
 object MkState {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val out = args(0)
-    val parsed = Ingest.parse(Fixture.allLines.toDF("value"))
-    val fm = MetricsAlgebra.playerMatchMetrics(Ingest.events(parsed))
-    val pm = Flatten.playerMinutes(Ingest.matches(parsed))
-    val ratings = Folds.ratings(spark, fm, pm)
-    val chem = Chemistry.chemistryTable(ratings.select($"matchId",$"playerId",$"teamId",$"delta"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/tmp/players.csv"), Fixture.playersCsv)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/tmp/teams.csv"), Fixture.teamsCsv)
-    Ingest.players(spark, "/tmp/players.csv").write.mode("overwrite").parquet(s"$out/players")
-    Ingest.teams(spark, "/tmp/teams.csv").write.mode("overwrite").parquet(s"$out/teams")
-    Chemistry.symmetric(chem).write.mode("overwrite").parquet(s"$out/chemistry_sym")
-    // max_by picks the rating of the highest matchId deterministically
-    // (last() in a batch agg has no defined ordering across partitions)
-    ratings.groupBy($"playerId").agg(org.apache.spark.sql.functions.max_by($"rating", $"matchId").as("rating"))
-      .write.mode("overwrite").parquet(s"$out/ratings")
-    Folds.profiles(fm).write.mode("overwrite").parquet(s"$out/profiles")
-    Ingest.matches(parsed).write.mode("overwrite").parquet(s"$out/matches")
-    spark.stop()
+    val in = Files.createTempDirectory("mkstate")
+    def put(name: String, text: String): String =
+      Files.writeString(in.resolve(name), text).toString
+    ServingTables.main(Array(
+      put("season.jsonl", Fixture.allLines.mkString("\n")),
+      put("players.csv", Fixture.playersCsv),
+      put("teams.csv", Fixture.teamsCsv), args(0)))
   }
 }

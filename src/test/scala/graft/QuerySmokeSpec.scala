@@ -43,10 +43,68 @@ class QuerySmokeSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  /** What one registry query showed: the three plan audits (ScalaUDF or
+    * PythonUDF in the optimized plan, CartesianProduct and an
+    * UnboundedFollowing frame in the physical plan) and the error its
+    * execution threw, if any. */
+  private case class Pass(udf: Boolean, cartesian: Boolean,
+      unboundedFollowing: Boolean, failure: Option[String])
+
+  /** One pass over the registry at sf0.001, in registry order: each
+    * query's frame is built once, its plans are read for the three
+    * audits, and then it executes, before the next query is built (a
+    * lifecycle query sets up its tables when `fn` runs, and a later
+    * query's set-up may reset them). Only the results are kept; a query
+    * whose construction or planning throws keeps the error. */
+  private lazy val passes: Seq[(String, Either[String, Pass])] = {
+    val sf = "/root/testdata/sf0.001"
+    import org.apache.spark.sql.catalyst.expressions.{ScalaUDF,
+      SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+    def error(e: Throwable) = String.valueOf(e).take(160)
+    def isUdf(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists {
+        case _: ScalaUDF => true
+        case x => x.getClass.getSimpleName.contains("PythonUDF")
+      }
+    Registry.all.map { q =>
+      q.name -> (try {
+        val df = q.fn(spark, sf)
+        val optimized = df.queryExecution.optimizedPlan
+        val physical = df.queryExecution.sparkPlan
+        val pass = Pass(
+          udf = optimized.expressions.exists(isUdf) ||
+            optimized.collect {
+              case p if p.expressions.exists(isUdf) => p
+            }.nonEmpty,
+          cartesian = physical.collect {
+            case n if n.getClass.getSimpleName == "CartesianProductExec" => n
+          }.nonEmpty,
+          unboundedFollowing = physical.collect {
+            case n if n.expressions.exists(_.exists {
+              case SpecifiedWindowFrame(_, lower, UnboundedFollowing) =>
+                lower != UnboundedPreceding
+              case _ => false
+            }) => n
+          }.nonEmpty,
+          failure = None)
+        Right(try { df.count(); pass } catch {
+          case e: Throwable => pass.copy(failure = Some(error(e)))
+        })
+      } catch { case e: Throwable => Left(error(e)) })
+    }
+  }
+
+  /** The names of the planned queries for which `audit` holds; fails the
+    * calling test first if any query could not be built or planned. */
+  private def offending(audit: Pass => Boolean): Seq[String] = {
+    val unplanned = passes.collect { case (n, Left(e)) => s"$n: $e" }
+    assert(unplanned.isEmpty, s"queries that could not be planned:\n" +
+      unplanned.mkString("\n"))
+    passes.collect { case (n, Right(p)) if audit(p) => n }
+  }
+
   test("registry-wide: no ScalaUDF/PythonUDF in any query's optimized " +
       "plan (codegen'd expressions only)") {
-    val sf = "/root/testdata/sf0.001"
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     // Framework-INTERNAL UDFs, not authored in this repo: MLlib's
     // model.transform prediction column is a ScalaUDF inside Spark
     // itself (the KMeans/regression contract queries are spec-mandated
@@ -55,40 +113,18 @@ class QuerySmokeSpec extends SparkSpec {
     // expressions; any new name appearing here is a regression.
     val frameworkUdfQueries = Set(
       "ml_kmeans_contract", "ml_quadfit_contract", "sample_stratified")
-    val offenders = Registry.all
-      .filterNot(q => frameworkUdfQueries(q.name)).flatMap { q =>
-      // analyzed, not executed: lifecycle queries run their table
-      // setup when fn is invoked, but plan inspection adds no second
-      // execution
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-      val hasUdf = plan.expressions.exists(_.exists {
-        case _: ScalaUDF => true
-        case e => e.getClass.getSimpleName.contains("PythonUDF")
-      }) || plan.collect {
-        case p if p.expressions.exists(_.exists {
-          case _: ScalaUDF => true
-          case e => e.getClass.getSimpleName.contains("PythonUDF")
-        }) => p
-      }.nonEmpty
-      if (hasUdf) Some(q.name) else None
-    }
+    val offenders = offending(_.udf).filterNot(frameworkUdfQueries)
     assert(offenders.isEmpty,
       s"queries carrying UDFs in the hot path: $offenders")
   }
 
   test("registry-wide: no CartesianProduct in any query's physical " +
       "plan (1-row assemblies must broadcast)") {
-    val sf = "/root/testdata/sf0.001"
     // deliberate cross joins in the registry are 1-row contract /
     // bounds assemblies — they must plan as BroadcastNestedLoopJoin,
     // never CartesianProductExec (which shuffles BOTH sides N×M and
     // is the canonical 100 TB plan disaster)
-    val offenders = Registry.all.flatMap { q =>
-      val p = q.fn(spark, sf).queryExecution.sparkPlan
-      if (p.collect {
-        case n if n.getClass.getSimpleName == "CartesianProductExec" => n
-      }.nonEmpty) Some(q.name) else None
-    }
+    val offenders = offending(_.cartesian)
     assert(offenders.isEmpty,
       s"queries planning a cartesian product: $offenders")
   }
@@ -96,7 +132,6 @@ class QuerySmokeSpec extends SparkSpec {
   test("registry-wide: no UnboundedFollowing window frame in any " +
       "query's physical plan (O(n²) per key — use a reversed running " +
       "frame)") {
-    val sf = "/root/testdata/sf0.001"
     // Spark's UnboundedFollowingWindowFunctionFrame re-aggregates the
     // ENTIRE remaining frame for every row: O(n²) per partition key.
     // resample_interp's first spelling sat single-threaded >20 min at
@@ -110,31 +145,15 @@ class QuerySmokeSpec extends SparkSpec {
     // partition end pays the per-row rescan. This audit makes the
     // lesson structural: any query that reintroduces the frame fails
     // here with a name, not in a wedged benchmark.
-    import org.apache.spark.sql.catalyst.expressions.{
-      SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
-    val offenders = Registry.all.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.sparkPlan
-      val hit = plan.collect {
-        case n if n.expressions.exists(_.exists {
-          case SpecifiedWindowFrame(_, lower, UnboundedFollowing) =>
-            lower != UnboundedPreceding
-          case _ => false
-        }) => n
-      }.nonEmpty
-      if (hit) Some(q.name) else None
-    }
+    val offenders = offending(_.unboundedFollowing)
     assert(offenders.isEmpty,
       s"queries planning an UnboundedFollowing window frame: $offenders")
   }
 
   test("every registered query executes at sf0.001") {
-    val sf = "/root/testdata/sf0.001"
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.fn(spark, sf).count(); None
-      } catch {
-        case e: Throwable => Some(q.name -> String.valueOf(e).take(160))
-      }
+    val failures = passes.flatMap {
+      case (n, Left(e)) => Some(n -> e)
+      case (n, Right(p)) => p.failure.map(n -> _)
     }
     assert(failures.isEmpty,
       failures.map { case (n, m) => s"$n: $m" }.mkString("\n"))

@@ -37,15 +37,12 @@ class ChemistrySpec extends SparkSpec {
     assert(pairs.length == 3) // C(3,2), not 6 directed
   }
 
-  test("clamp option bounds chemistry to [0,1] (spec); default preserves reference") {
+  test("chemistry is unbounded like the reference (0.5 + 1.8 = 2.3)") {
     val pairs = Seq((1L, 10L, 20L, 0.9), (2L, 10L, 20L, 0.9))
       .toDF("matchId", "p1", "p2", "pairDelta")
     val raw = Chemistry.fromPairDeltas(pairs)
       .select("chemistry").as[Double].head()
     assert(approx(raw, 2.3))   // 0.5 + 1.8, unbounded like the reference
-    val clamped = Chemistry.fromPairDeltas(pairs, clamp = true)
-      .select("chemistry").as[Double].head()
-    assert(clamped == 1.0)
   }
 
   test("chemistry accumulates from 0.5 across matches, symmetric view") {

@@ -1,19 +1,45 @@
 package graft.fpl
 
 import graft.SparkSpec
+import graft.streaming.FplStream
+import graft.streaming.FplStream.PlayerMsg
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class FoldsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A counter block with the named counters set. */
+  private def counters(set: (String, Long)*): Array[Long] = {
+    val c = new Array[Long](FplStream.NumCounters)
+    set.foreach { case (n, v) => c(MetricsAlgebra.counterNames.indexOf(n)) = v }
+    c
+  }
+
+  /** Counters whose pass accuracy is x (accurate normal passes of 5). */
+  private def passes(x: Double): Seq[(String, Long)] =
+    Seq("accurate_normal_passes" -> math.round(x * 5), "normal_passes" -> 5L)
+
+  /** `playerMatchMetrics`-shaped rows of player 10 (team 100). */
+  private def metricRows(rows: (Long, Array[Long])*): DataFrame =
+    rows.map { case (m, c) => (m, 10L, 100L, c) }
+      .toDF("matchId", "playerId", "teamId", "counters")
+      .select(Seq(col("matchId"), col("playerId"), col("teamId")) ++
+        MetricsAlgebra.counterNames.indices.map(i =>
+          col("counters")(i).as(MetricsAlgebra.counterNames(i))): _*)
+
+  /** A counter message of player 10 in match `m`. */
+  private def counted(m: Long, c: Array[Long]) =
+    PlayerMsg(10L, m, 1L, 1, 0.0, 100L, c)
+
   test("profile pass-accuracy chain r₁=x₁, rₙ=(xₙ+rₙ₋₁)/2 (A3)") {
     // matches in order: 0.8, 0.4, 0.6 → r = ((0.8+… ) chain)
-    val fm = Seq(
-      (1L, 10L, 0.8, 0L, 0L, 0L, 2L),
-      (2L, 10L, 0.4, 1L, 0L, 1L, 1L),
-      (3L, 10L, 0.6, 0L, 1L, 2L, 0L))
-      .toDF("matchId", "playerId", "pass_accuracy", "fouls", "own_goals",
-        "shots_on_target", "goals")
+    val fm = metricRows(
+      1L -> counters(passes(0.8) :+ ("goals" -> 2L): _*),
+      2L -> counters(passes(0.4) ++ Seq("fouls" -> 1L,
+        "shots_on_target" -> 1L, "goals" -> 1L): _*),
+      3L -> counters(passes(0.6) ++ Seq("own_goals" -> 1L,
+        "shots_on_target" -> 2L): _*))
     val p = Folds.profiles(fm).collect().head
     val expected = (((0.8 + 0.4) / 2) + 0.6) / 2
     assert(approx(p.getAs[Double]("pass_accuracy"), expected))
@@ -25,34 +51,50 @@ class FoldsSpec extends SparkSpec {
   }
 
   test("profile chain is order-sensitive (matchId defines order)") {
-    val fwd = Seq((1L, 10L, 0.8), (2L, 10L, 0.2), (3L, 10L, 0.6))
-    val rev = Seq((1L, 10L, 0.6), (2L, 10L, 0.2), (3L, 10L, 0.8))
-    def run(rows: Seq[(Long, Long, Double)]): Double =
-      Folds.profiles(rows.toDF("matchId", "playerId", "pass_accuracy")
-          .withColumn("fouls", lit(0L)).withColumn("own_goals", lit(0L))
-          .withColumn("shots_on_target", lit(0L)).withColumn("goals", lit(0L)))
+    val fwd = Seq(0.8, 0.2, 0.6)
+    val rev = Seq(0.6, 0.2, 0.8)
+    def run(xs: Seq[Double]): Double =
+      Folds.profiles(metricRows(xs.zipWithIndex.map { case (x, i) =>
+          (i + 1L) -> counters(passes(x): _*) }: _*))
         .collect().head.getAs[Double]("pass_accuracy")
     assert(approx(run(fwd), 0.55))  // ((0.8→0.2)=0.5 → with 0.6)/2
     assert(approx(run(rev), 0.6))   // ((0.6→0.2)=0.4 → with 0.8)/2
   }
 
-  test("AvgOfAvgs typed Aggregator matches the closed form") {
-    val agg = new Folds.AvgOfAvgs().toColumn
-    val ds = Seq(Folds.SeqVal(10L, 1L, 0.8), Folds.SeqVal(10L, 2L, 0.4),
-      Folds.SeqVal(10L, 3L, 0.6)).toDS()
-    val out = ds.groupByKey(_.playerId).agg(agg).collect().head._2
-    assert(approx(out, (((0.8 + 0.4) / 2) + 0.6) / 2))
+  test("kernel pass-accuracy chain matches the closed form") {
+    val closes = FplStream.foldAll(10L, Iterator(
+      counted(1L, counters(passes(0.8): _*)),
+      counted(2L, counters(passes(0.4): _*)),
+      counted(3L, counters(passes(0.6): _*))))
+    assert(approx(closes.last.profilePassAccuracy,
+      (((0.8 + 0.4) / 2) + 0.6) / 2))
   }
 
-  test("rating trajectory r₀=0.5, r'=factor·(c+r)/2, emits Δ (A4)") {
-    val in = Seq(
-      Folds.RatingIn(10L, 1L, 1L, 0.6, 1.05),
-      Folds.RatingIn(10L, 2L, 2L, 0.4, 30.0 / 90.0)).toDS()
-    val pts = Folds.ratingTrajectory(in).collect().sortBy(_.matchId)
+  test("kernel rating trajectory r₀=0.5, r'=factor·(c+r)/2, emits Δ (A4)") {
+    def minutes(m: Long, factor: Double) =
+      PlayerMsg(10L, m, 0L, 0, factor, 100L, counters())
+    // contributions: (0.4 + 2 shots on target)/4 = 0.6, (0.6 + 1)/4 = 0.4
+    val pts = FplStream.foldAll(10L, Iterator(
+      minutes(1L, 1.05),
+      counted(1L, counters(passes(0.4) :+ ("shots_on_target" -> 2L): _*)),
+      minutes(2L, 30.0 / 90.0),
+      counted(2L, counters(passes(0.6) :+ ("shots_on_target" -> 1L): _*))))
     val r1 = 1.05 * (0.6 + 0.5) / 2
     val r2 = (30.0 / 90.0) * (0.4 + r1) / 2
     assert(approx(pts(0).rating, r1) && approx(pts(0).delta, r1 - 0.5))
     assert(approx(pts(1).rating, r2) && approx(pts(1).delta, r2 - r1))
+  }
+
+  test("kernel: a match that closes nothing leaves no factor or team " +
+      "behind") {
+    // match 1: an unused substitute (factor 0, team 100); match 2 lost
+    // its record, so only its events (team 200) arrive
+    val closes = FplStream.foldAll(10L, Iterator(
+      PlayerMsg(10L, 1L, 0L, 0, 0.0, 100L, counters()),
+      PlayerMsg(10L, 2L, 1L, 1, 0.0, 200L,
+        counters(passes(0.4) :+ ("shots_on_target" -> 2L): _*))))
+    assert(closes.map(c => (c.matchId, c.teamId)) == Seq((2L, 200L)))
+    assert(approx(closes.head.rating, 1.05 * (0.6 + 0.5) / 2))
   }
 
   test("end-to-end ratings over the fixture (metrics ⋈ minutes)") {

@@ -5,13 +5,11 @@ import graft.fpl._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-class StreamingSpec extends SparkSpec {
-  import spark.implicits._
+/** The two-match season the stream ≡ batch tests replay. */
+object StreamingSpec {
 
-  /** Second match: same squads, no substitutions, different events;
-    * third match record acts as season-end punctuation that flushes
-    * match 2 state for every squad player. */
-  private def matchJson(mid: Long, gw: Int): String =
+  /** A match record with the fixture's squads and no substitutions. */
+  def matchJson(mid: Long, gw: Int): String =
     Fixture.matchJson
       .replace("\"wyId\":1001", s""""wyId":$mid""")
       .replace("\"gameweek\":1", s""""gameweek":$gw""")
@@ -19,7 +17,7 @@ class StreamingSpec extends SparkSpec {
         """"substitutions":[{"playerIn":4,"playerOut":3,"minute":60}]""",
         """"substitutions":[]""")
 
-  private def ev(id: Int, mid: Long, eventId: Int, pid: Int, tid: Int,
+  def ev(id: Int, mid: Long, eventId: Int, pid: Int, tid: Int,
       tags: Seq[Int]): String = {
     val tagStr = tags.map(t => s"""{"id":$t}""").mkString(",")
     s"""{"id":$id,"eventId":$eventId,"subEventId":0,"matchId":$mid,
@@ -27,16 +25,26 @@ class StreamingSpec extends SparkSpec {
        |"teamId":$tid,"tags":[$tagStr]}""".stripMargin.replaceAll("\n", "")
   }
 
-  private val match2Events = Seq(
+  /** Match 1002: different events from match 1001. */
+  val match2Events = Seq(
     ev(101, 1002, 8, 1, 100, Seq(1801)),
     ev(102, 1002, 8, 1, 100, Seq(1801)),
     ev(103, 1002, 10, 3, 100, Seq(1801, 101)),
     ev(104, 1002, 1, 11, 200, Seq(703)),
     ev(105, 1002, 2, 12, 200, Seq()))
 
-  private val season: Seq[String] =
-    (Fixture.allLines :+ matchJson(1002, 2)) ++ match2Events :+
-      matchJson(1003, 3)
+  /** Both matches, no punctuation after match 2. */
+  val twoMatches: Seq[String] =
+    (Fixture.allLines :+ matchJson(1002, 2)) ++ match2Events
+}
+
+class StreamingSpec extends SparkSpec {
+  import spark.implicits._
+  import StreamingSpec._
+
+  /** The third match record acts as season-end punctuation that flushes
+    * match 2 state for every squad player. */
+  private val season: Seq[String] = twoMatches :+ matchJson(1003, 3)
 
   test("streaming match-close equals batch library (split across batches)") {
     implicit val sc = spark.sqlContext
@@ -176,6 +184,63 @@ class StreamingSpec extends SparkSpec {
       assert(approx(got, expected),
         s"straggler corrupted match-1002 counters: $got vs $expected")
     } finally q.stop()
+  }
+
+  /** (playerId, matchId) → (rating, delta, teamId) of the stream's
+    * closes over `lines`, replayed in chunks of 3, and of the batch
+    * rating table over the same lines. */
+  private def streamAndBatch(name: String, lines: Seq[String]) = {
+    implicit val sc = spark.sqlContext
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.select("playerId", "matchId", "rating", "delta", "teamId")
+        .as[(Long, Long, Double, Double, Long)].collect()
+        .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+    val stream = MemoryStream[String]
+    val q = FplStream.matchCloses(FplStream.toMessages(stream.toDF()))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    val streamed = try {
+      lines.grouped(3).foreach { chunk =>
+        stream.addData(chunk); q.processAllAvailable()
+      }
+      byKey(spark.table(name))
+    } finally q.stop()
+    val parsed = Ingest.parse(lines.toDF("value"))
+    val batch = byKey(Folds.ratings(spark,
+      MetricsAlgebra.playerMatchMetrics(Ingest.events(parsed)),
+      Flatten.playerMinutes(Ingest.matches(parsed))))
+    (streamed, batch)
+  }
+
+  test("(A) a player whose only events no counter counts is rated by " +
+      "neither path") {
+    // player 14 (bench, team 200) touches the ball once: eventId 7, no
+    // tags; match 1002 is the punctuation that closes 1001
+    val (streamed, batch) = streamAndBatch("closes_uncounted",
+      (Fixture.allLines :+ ev(16, 1001, 7, 14, 200, Seq())) :+
+        matchJson(1002, 2))
+    assert(streamed.size == 7 && !streamed.contains((14L, 1001L)))
+    assert(batch == streamed, s"batch ${batch.keySet} vs ${streamed.keySet}")
+  }
+
+  test("(B) events with no match record are rated with factor 1.05 and " +
+      "the events' teamId by both paths") {
+    // match 2001 has events but its record was lost; the record of 2002
+    // is the punctuation that closes 2001
+    val (streamed, batch) = streamAndBatch("closes_no_record", Seq(
+      ev(201, 2001, 8, 1, 100, Seq(1801)),
+      ev(202, 2001, 1, 11, 200, Seq(703)),
+      matchJson(2002, 2)))
+    // p1: pass accuracy 1 → contribution 1/4; p11: duel won → 1/4
+    val r = 1.05 * (0.25 + 0.5) / 2
+    assert(streamed.keySet == Set((1L, 2001L), (11L, 2001L)))
+    assert(approx(streamed((1L, 2001L))._1, r) &&
+      streamed((11L, 2001L))._3 == 200L)
+    assert(batch.keySet == streamed.keySet)
+    batch.foreach { case (k, (rating, delta, team)) =>
+      val (sr, sd, st) = streamed(k)
+      assert(approx(rating, sr) && approx(delta, sd) && team == st, s"$k")
+    }
   }
 
   test("windowed aggregation with watermark over a replayed event stream") {
