@@ -28,6 +28,12 @@ import java.time.format.{DateTimeFormatter, DateTimeParseException,
   *    squad.
   *  - profile and match info: one plan each, every row keyed by name or
   *    by (date, label), filtered to the request's key.
+  *
+  * The per-request functions ([[winPrediction]], [[winPredictionFull]],
+  * [[playerProfile]], [[matchInfo]]) have no production caller:
+  * [[RequestApp]] answers from the snapshot. They are the reference
+  * plans that the tests and perfbench's traced `Serving.winPrediction`
+  * span compare the snapshot path against.
   */
 object Serving {
 

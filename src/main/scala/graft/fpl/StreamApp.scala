@@ -104,11 +104,19 @@ object StreamApp {
       }
       query.stop()
       println(s"replay complete; state tables in $stateDir")
-      val closes = spark.read.parquet(s"$stateDir/closes")
-      println(s"closes rows: ${closes.count()}")
+      println(s"closes rows: ${closesRows(spark, stateDir)}")
     } else {
       query.awaitTermination()
     }
     spark.stop()
+  }
+
+  /** The closes a stopped stream committed under `stateDir`: 0 when it
+    * closed no match, since the closes sink writes nothing until then. */
+  private[graft] def closesRows(spark: SparkSession, stateDir: String)
+      : Long = {
+    val dir = s"$stateDir/closes"
+    if (FplStream.dirHasData(spark, dir)) spark.read.parquet(dir).count()
+    else 0L
   }
 }

@@ -263,7 +263,7 @@ object GraphOps {
   // ------------------------------------------- shared edge lifecycle
   /** Standing state for the graph-IVM gate, derived ONCE per
     * (JVM, sf dir) and parked as parquet in [[graft.StandingState]] —
-    * the `IndexOps.splitSegmentDir` discipline applied to the edge-table
+    * the `Segments.Kind.splitStore` discipline applied to the edge-table
     * IVM lifecycle (r14: the gate previously rebuilt P, E and Δ inside
     * every timed body, so it priced the from-scratch base build, not
     * the refresh its docstring argues; the refresh legs of the

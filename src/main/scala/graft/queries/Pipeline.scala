@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{GQuery, StandingState, Tables => T}
-import graft.operators.{Contamination, Dedup, Mix, Pack, Similarity,
-  Sketch, TextAnalysis => TA}
+import graft.operators.{AnnIndex, Contamination, Dedup, Mix, Pack,
+  Segments, Similarity, Sketch, TextAnalysis => TA}
+import graft.operators.Segments.{Cells, Commit, VecRefresh}
 
 /** LLM-training-data pipeline operator surface (builder prompt §extras):
   * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding
@@ -1555,7 +1556,6 @@ object Pipeline {
   val sim_ivfpq_probe_recall = GQuery(
     "sim_ivfpq_probe_recall",
     (s, d) => {
-      import s.implicits._
       val vecs = T.embeddings(s, d)
       val q = vecs.filter(col("vec_id") < 50)
       val probe = graft.operators.AnnIndex.ivfPqProbePersisted(s, d, q,
@@ -1575,6 +1575,23 @@ object Pipeline {
     Some("""
       SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ok
       FROM embeddings WHERE vec_id < 50"""))
+
+  /** The lifecycle gates' 10 query vectors (ids < 10). */
+  private def vec10(s: org.apache.spark.sql.SparkSession, d: String)
+      : DataFrame =
+    T.embeddings(s, d).filter(col("vec_id") < 10)
+
+  /** The drifted arrival batch: every refresh-batch vector pulled toward
+    * ONE region of the (unit-norm) embedding space — v → 0.2·v + e₁ —
+    * the "new domain entered the stream" shift: norms stay ~1 (in
+    * distribution) but the whole batch concentrates around e₁, so a
+    * frozen quantizer funnels it into the cell(s) nearest e₁. */
+  private def driftedArrivals(vecs: DataFrame): DataFrame =
+    VecRefresh.delta(vecs)
+      .select(col("vec_id"), transform(col("embedding"),
+        (x, i) => (x * lit(0.2) +
+          when(i === 0, lit(1.0)).otherwise(lit(0.0))).cast("float"))
+        .as("embedding"))
 
   /** ANN segment merge — the incremental-refresh leg the persisted
     * lifecycle owed (the vector-side mirror of index_ivm_merge /
@@ -1596,20 +1613,14 @@ object Pipeline {
     "ann_ivm_merge",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-ivm") { dir =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
+      val A = AnnIndex
       val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-      // init: train on base only, encode base (paid once per epoch)
-      val q = A.trainQuantizer(base, "embedding")
-      A.encode(q, base, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/base_cells")
+      // init: train on base only, encode base (paid once per epoch);
       // refresh: encode(delta) against the frozen quantizer — the
       // whole incremental cost; the base corpus is never rescanned
-      A.encode(q, delta, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/delta_cells")
-      val b = s.read.parquet(s"$dir/base_cells")
-      val dl = s.read.parquet(s"$dir/delta_cells")
+      Cells.encodeSplit(Cells.trainBase(vecs), vecs, dir)
+      val b = s.read.parquet(Cells.base(dir))
+      val dl = s.read.parquet(Cells.delta(dir))
       def segAgg(seg: org.apache.spark.sql.DataFrame) = seg.agg(
         count(lit(1)).as("n"),
         bool_and($"cell" >= 0 && $"cell" < A.NList &&
@@ -1651,24 +1662,12 @@ object Pipeline {
   val sim_ivf_probe_merged = GQuery(
     "sim_ivf_probe_merged",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-merge") { dir =>
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-      val q = A.trainQuantizer(base, "embedding")
-      A.encode(q, base, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/base_cells")
-      A.encode(q, delta, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/delta_cells")
-      A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          cents = q.centroidMeta,
-          loadCells = cellSet =>
-            s.read.parquet(s"$dir/base_cells")
-              .unionByName(s.read.parquet(s"$dir/delta_cells"))
-              .where($"cell".isin(cellSet: _*)))
-        .orderBy($"query_id", $"rank")
+      val vecs = T.embeddings(s, d).where(col("embedding").isNotNull)
+      val q = Cells.trainBase(vecs)
+      Cells.encodeSplit(q, vecs, dir)
+      AnnIndex.ivfFullProbe(vec10(s, d), 5, q.centroidMeta)(
+          Segments.probed(Cells.rows(s, dir)))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10Oracle))
 
@@ -1723,18 +1722,10 @@ object Pipeline {
   val ann_probe_tombstoned = GQuery(
     "ann_probe_tombstoned",
     (s, d) => {
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val tomb = A.cells(s, d).filter($"vec_id" % 17L === 3L)
-        .select($"cell", $"vec_id")
-      A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          cents = A.centroidMetaOf(s, d),
-          loadCells = cellSet =>
-            A.cells(s, d).where($"cell".isin(cellSet: _*))
-              .join(tomb.where($"cell".isin(cellSet: _*)),
-                Seq("cell", "vec_id"), "left_anti"))
-        .orderBy($"query_id", $"rank")
+      val tomb = Cells.tombstones(AnnIndex.cells(s, d))
+      AnnIndex.ivfFullProbe(vec10(s, d), 5, AnnIndex.centroidMetaOf(s, d))(
+          Segments.liveProbed(AnnIndex.cells(s, d), tomb))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10TombOracle))
 
@@ -1752,20 +1743,14 @@ object Pipeline {
   val ann_pq_probe_tombstoned = GQuery(
     "ann_pq_probe_tombstoned",
     (s, d) => {
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val tomb = A.cells(s, d).filter($"vec_id" % 17L === 3L)
-        .select($"cell", $"vec_id")
-      A.ivfPqProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          rerank = Int.MaxValue,
+      val A = AnnIndex
+      val tomb = Cells.tombstones(A.cells(s, d))
+      A.ivfPqProbe(vec10(s, d), "vec_id", "embedding", k = 5,
+          nprobe = A.NList, rerank = Int.MaxValue,
           cents = A.centroidMetaOf(s, d),
           books = A.codebookMetaOf(s, d),
-          loadCells = cellSet =>
-            A.cells(s, d).where($"cell".isin(cellSet: _*))
-              .join(tomb.where($"cell".isin(cellSet: _*)),
-                Seq("cell", "vec_id"), "left_anti"))
-        .orderBy($"query_id", $"rank")
+          loadCells = Segments.liveProbed(A.cells(s, d), tomb))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10TombOracle))
 
@@ -1784,28 +1769,13 @@ object Pipeline {
   val ann_compact = GQuery(
     "ann_compact",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-compact") { dir =>
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-      val q = A.trainQuantizer(base, "embedding")
-      A.encode(q, base, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/base_cells")
-      A.encode(q, delta, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/delta_cells")
-      // compact: union minus tombstones, one fresh segment
-      s.read.parquet(s"$dir/base_cells")
-        .unionByName(s.read.parquet(s"$dir/delta_cells"))
-        .filter($"vec_id" % 17L =!= 3L)
-        .write.partitionBy("cell").parquet(s"$dir/compacted_cells")
-      A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          cents = q.centroidMeta,
-          loadCells = cellSet =>
-            s.read.parquet(s"$dir/compacted_cells")
-              .where($"cell".isin(cellSet: _*)))
-        .orderBy($"query_id", $"rank")
+      val vecs = T.embeddings(s, d).where(col("embedding").isNotNull)
+      val q = Cells.trainBase(vecs)
+      Cells.encodeSplit(q, vecs, dir)
+      Cells.compact(s, dir, dir)
+      AnnIndex.ivfFullProbe(vec10(s, d), 5, q.centroidMeta)(
+          Segments.probed(s.read.parquet(Cells.compacted(dir))))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10TombOracle))
 
@@ -1823,22 +1793,15 @@ object Pipeline {
   val ann_probe_refresh = GQuery(
     "ann_probe_refresh",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-refresh") { dir =>
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val seg = A.splitSegmentDir(s, d)
-      val qz = A.loadQuantizer(s, seg)
+      val seg = Cells.splitStore(s, d)
+      val qz = AnnIndex.loadQuantizer(s, seg)
       // the refresh leg: encode(delta) against the frozen quantizer
-      A.encode(qz, T.embeddings(s, d).where($"embedding".isNotNull)
-            .filter($"vec_id" % 10L === 7L), "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/delta_cells")
-      A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          cents = qz.centroidMeta,
-          loadCells = cellSet =>
-            s.read.parquet(s"$seg/base_cells")
-              .unionByName(s.read.parquet(s"$dir/delta_cells"))
-              .where($"cell".isin(cellSet: _*)))
-        .orderBy($"query_id", $"rank")
+      Cells.write(AnnIndex.encode(qz, VecRefresh.delta(
+          T.embeddings(s, d).where(col("embedding").isNotNull)),
+        "vec_id", "embedding"), Cells.delta(dir))
+      AnnIndex.ivfFullProbe(vec10(s, d), 5, qz.centroidMeta)(
+          Segments.probed(Cells.rows(s, seg, dir)))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10Oracle))
 
@@ -1854,20 +1817,11 @@ object Pipeline {
   val ann_compact_warm = GQuery(
     "ann_compact_warm",
     (s, d) => graft.GQuery.withTempTable(s, "graft-annc-warm") { dir =>
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val seg = A.splitSegmentDir(s, d)
-      s.read.parquet(s"$seg/base_cells")
-        .unionByName(s.read.parquet(s"$seg/delta_cells"))
-        .filter($"vec_id" % 17L =!= 3L)
-        .write.partitionBy("cell").parquet(s"$dir/compacted_cells")
-      A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          cents = A.loadCentroids(s, seg),
-          loadCells = cellSet =>
-            s.read.parquet(s"$dir/compacted_cells")
-              .where($"cell".isin(cellSet: _*)))
-        .orderBy($"query_id", $"rank")
+      val seg = Cells.splitStore(s, d)
+      Cells.compact(s, seg, dir)
+      AnnIndex.ivfFullProbe(vec10(s, d), 5, AnnIndex.loadCentroids(s, seg))(
+          Segments.probed(s.read.parquet(Cells.compacted(dir))))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10TombOracle))
 
@@ -1913,21 +1867,11 @@ object Pipeline {
     "ann_retrain_apply",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-retrain") { dir =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
-      val qz = A.loadQuantizer(s, A.splitSegmentDir(s, d))
+      val A = AnnIndex
+      val qz = A.loadQuantizer(s, Cells.splitStore(s, d))
       val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-        .select($"vec_id", $"embedding")
-      // the drifted arrival batch: every delta vector pulled toward ONE
-      // region of the (unit-norm) embedding space — v → 0.2·v + e₁ —
-      // the "new domain entered the stream" shift: norms stay ~1 (in
-      // distribution) but the whole batch concentrates around e₁, so
-      // the frozen quantizer funnels it into the cell(s) nearest e₁
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-        .select($"vec_id", transform($"embedding",
-          (x, i) => (x * lit(0.2) +
-            when(i === 0, lit(1.0)).otherwise(lit(0.0))).cast("float"))
-          .as("embedding"))
+      val base = VecRefresh.base(vecs).select($"vec_id", $"embedding")
+      val delta = driftedArrivals(vecs)
       val union = base.unionByName(delta)
       def skew(counts: DataFrame, v: String, r: String) =
         counts.agg(
@@ -1941,15 +1885,13 @@ object Pipeline {
       // the retrain epoch: rebuild the quantizer on base ∪ arrivals,
       // re-encode everything into a fresh cell-partitioned segment
       val q1 = A.trainQuantizer(union, "embedding")
-      A.encode(q1, union, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/retrained_cells")
+      Cells.write(A.encode(q1, union, "vec_id", "embedding"),
+        s"$dir/retrained_cells")
       val seg = s.read.parquet(s"$dir/retrained_cells")
       val post = skew(seg.groupBy($"cell").agg(count(lit(1)).as("n")),
         "post_retrain_needed", "post_ratio")
-      val probe = A.ivfProbe(union.filter($"vec_id" < 10L),
-        "vec_id", "embedding", k = 5, nprobe = A.NList,
-        cents = q1.centroidMeta,
-        loadCells = cellSet => seg.where($"cell".isin(cellSet: _*)))
+      val probe = A.ivfFullProbe(union.filter($"vec_id" < 10L), 5,
+        q1.centroidMeta)(Segments.probed(seg))
       val bf = Similarity.bruteForceTopK(union,
         union.filter($"vec_id" < 10L), "vec_id", "embedding", 5)
       val exact = probe.unionByName(bf)
@@ -1989,21 +1931,14 @@ object Pipeline {
     "ann_probe_asof",
     (s, d) => graft.GQuery.withTempTable(s, "graft-ann-asof") { t =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
-      val seg = A.splitSegmentDir(s, d)
-      Seq((1, s"$seg/base_cells"), (2, s"$seg/delta_cells"))
-        .toDF("epoch", "path")
-        .coalesce(1).write.parquet(s"$t/manifest")
-      val cents = A.loadCentroids(s, seg)
-      def probeAsOf(epoch: Int) = A.ivfProbe(
-          T.embeddings(s, d).filter($"vec_id" < 10L),
-          "vec_id", "embedding", k = 5, nprobe = A.NList, cents = cents,
-          loadCells = cellSet =>
-            s.read.parquet(s"$t/manifest").filter($"epoch" <= epoch)
-              .collect()
-              .map(r => s.read.parquet(r.getAs[String]("path")))
-              .reduce(_ unionByName _)
-              .where($"cell".isin(cellSet: _*)))
+      val seg = Cells.splitStore(s, d)
+      Segments.writeManifest(s, s"$t/manifest",
+        Seq(Commit(1, Cells.base(seg)), Commit(2, Cells.delta(seg))))
+      val cents = AnnIndex.loadCentroids(s, seg)
+      def probeAsOf(epoch: Int) =
+        AnnIndex.ivfFullProbe(vec10(s, d), 5, cents)(
+          Segments.probed(Segments.readAsOf(s,
+            Segments.commits(s, s"$t/manifest", Some(epoch)), epoch)))
         .withColumn("epoch", lit(epoch))
       probeAsOf(1).unionByName(probeAsOf(2))
         .select($"epoch", $"query_id", $"neighbor_id", $"rank", $"cos")
@@ -2057,25 +1992,19 @@ object Pipeline {
     "ann_retrain_epoch",
     (s, d) => graft.GQuery.withTempTable(s, "graft-retrain-epoch") { t =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
-      val seg = A.splitSegmentDir(s, d)
+      val A = AnnIndex
+      val seg = Cells.splitStore(s, d)
       val qz1 = A.loadQuantizer(s, seg)
       val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-        .select($"vec_id", $"embedding")
-      // the drifted arrival batch (the ann_retrain_apply shift)
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-        .select($"vec_id", transform($"embedding",
-          (x, i) => (x * lit(0.2) +
-            when(i === 0, lit(1.0)).otherwise(lit(0.0))).cast("float"))
-          .as("embedding"))
+      val base = VecRefresh.base(vecs).select($"vec_id", $"embedding")
+      val delta = driftedArrivals(vecs)
       // epoch-2 commit: arrivals encoded under the FROZEN v1 quantizer
-      A.encode(qz1, delta, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$t/delta_cells")
+      Cells.write(A.encode(qz1, delta, "vec_id", "embedding"),
+        Cells.delta(t))
       var manifest = Seq(
-        (1, s"$seg/base_cells", "cells", 1),
-        (1, s"$seg/centroids", "centroids", 1),
-        (2, s"$t/delta_cells", "cells", 1))
+        Commit(1, Cells.base(seg), "cells"),
+        Commit(1, s"$seg/centroids", "centroids"),
+        Commit(2, Cells.delta(t), "cells"))
       // the drift verdict over the arrival batch — the decision that
       // gates the retrain commit (1-row driver action)
       val fired = delta
@@ -2089,43 +2018,22 @@ object Pipeline {
         // re-encode ALL, commit as a REPLACING (qver 2) manifest row
         val union = base.unionByName(delta)
         val q2 = A.trainQuantizer(union, "embedding")
-        A.encode(q2, union, "vec_id", "embedding")
-          .write.partitionBy("cell").parquet(s"$t/retrained_cells")
-        q2.centroidMeta.map { case (i, cv, n2) => (i, cv.toSeq, n2) }
-          .toDF("cell", "cv", "n2")
-          .coalesce(1).write.parquet(s"$t/centroids_v2")
+        Cells.write(A.encode(q2, union, "vec_id", "embedding"),
+          s"$t/retrained_cells")
+        A.writeCentroids(s, q2, s"$t/centroids_v2")
         manifest ++= Seq(
-          (3, s"$t/retrained_cells", "cells", 2),
-          (3, s"$t/centroids_v2", "centroids", 2))
+          Commit(3, s"$t/retrained_cells", "cells", qver = 2),
+          Commit(3, s"$t/centroids_v2", "centroids", qver = 2))
       }
-      manifest.toDF("epoch", "path", "kind", "qver")
-        .coalesce(1).write.parquet(s"$t/manifest")
-      def centsAt(path: String): Seq[(Int, Array[Float], Double)] =
-        s.read.parquet(path).collect()
-          .map(r => (r.getAs[Int]("cell"),
-            r.getAs[scala.collection.Seq[Float]]("cv").toArray,
-            r.getAs[Double]("n2"))).toSeq
+      Segments.writeManifest(s, s"$t/manifest", manifest)
       val queries = base.unionByName(delta).filter($"vec_id" < 10L)
       def probeAsOf(epoch: Int): DataFrame = {
-        // the open() step: manifest prefix, highest quantizer
-        // generation wins (metadata-sized driver read)
-        val m = s.read.parquet(s"$t/manifest")
-          .filter($"epoch" <= epoch).collect()
-        val qv = m.map(_.getAs[Int]("qver")).max
-        val cents = centsAt(m
-          .filter(r => r.getAs[String]("kind") == "centroids" &&
-            r.getAs[Int]("qver") == qv)
-          .map(_.getAs[String]("path")).head)
-        val cellPaths = m
-          .filter(r => r.getAs[String]("kind") == "cells" &&
-            r.getAs[Int]("qver") == qv)
-          .map(_.getAs[String]("path"))
-        A.ivfProbe(queries, "vec_id", "embedding", k = 5,
-            nprobe = A.NList, cents = cents,
-            loadCells = cellSet =>
-              cellPaths.map(p => s.read.parquet(p))
-                .reduce(_ unionByName _)
-                .where($"cell".isin(cellSet: _*)))
+        // the open() step: the manifest prefix at its highest quantizer
+        // generation (metadata-sized driver read)
+        val m = Segments.commits(s, s"$t/manifest", Some(epoch))
+        val cents = A.centroidsAt(s, Segments.asOf(m, epoch, "centroids").head)
+        A.ivfFullProbe(queries, 5, cents)(
+            Segments.probed(Segments.readAsOf(s, m, epoch, "cells")))
           .withColumn("epoch", lit(epoch))
       }
       probeAsOf(1).unionByName(probeAsOf(2)).unionByName(probeAsOf(3))
@@ -2192,25 +2100,14 @@ object Pipeline {
   val sim_ivfpq_probe_merged = GQuery(
     "sim_ivfpq_probe_merged",
     (s, d) => graft.GQuery.withTempTable(s, "graft-annpq-merge") { dir =>
-      import s.implicits._
-      val A = graft.operators.AnnIndex
-      val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-      val q = A.trainQuantizer(base, "embedding")
-      A.encode(q, base, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/base_cells")
-      A.encode(q, delta, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$dir/delta_cells")
-      A.ivfPqProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-          "vec_id", "embedding", k = 5, nprobe = A.NList,
-          rerank = Int.MaxValue,
+      val vecs = T.embeddings(s, d).where(col("embedding").isNotNull)
+      val q = Cells.trainBase(vecs)
+      Cells.encodeSplit(q, vecs, dir)
+      AnnIndex.ivfPqProbe(vec10(s, d), "vec_id", "embedding", k = 5,
+          nprobe = AnnIndex.NList, rerank = Int.MaxValue,
           cents = q.centroidMeta, books = q.bookMeta,
-          loadCells = cellSet =>
-            s.read.parquet(s"$dir/base_cells")
-              .unionByName(s.read.parquet(s"$dir/delta_cells"))
-              .where($"cell".isin(cellSet: _*)))
-        .orderBy($"query_id", $"rank")
+          loadCells = Segments.probed(Cells.rows(s, dir)))
+        .orderBy(col("query_id"), col("rank"))
     },
     Some(bruteTop5Vec10Oracle))
 
@@ -3088,7 +2985,7 @@ object Pipeline {
     * repeated joins on the bucket key skip the shuffle entirely" is
     * the entire point of the pattern — so they are written ONCE per
     * (JVM, sf dir) into parked catalog tables (the
-    * IndexOps.splitSegmentDir discipline) and the timed body prices
+    * Segments.Kind.splitStore discipline) and the timed body prices
     * what a deployment pays per query: the co-located merge join +
     * aggregate + the executed-plan audit. The oracle joins the RAW
     * parquet tables, so a wrong or stale bucketed copy breaks the

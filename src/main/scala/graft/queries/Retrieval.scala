@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{GQuery, Tables => T}
-import graft.operators.IndexOps.{postingsOf, statsOf, toks, trgmsOf,
-  trigramsOfText}
+import graft.operators.{AnnIndex, IndexOps, Segments}
+import graft.operators.IndexOps.{postingsOf, statsOf, toks, trigramsOfText}
+import graft.operators.Segments.{AsDerived, Cells, CheckpointedRanged,
+  Commit, DocRefresh, Postings, Trigrams}
 
 /** Retrieval surface over the document corpus: an inverted-index build
   * and BM25 ranking — the two operations an LLM-data pipeline runs to
@@ -53,6 +55,9 @@ object Retrieval {
     * dominates ranking) and two common ones (df ≈ 77%). Shared with
     * the streaming-ingest gate in [[Streaming]]. */
   private[queries] val QueryTerms = Seq("dup", "vector", "spark")
+
+  /** The fixed substring-search pattern (4 distinct trigrams). */
+  private[queries] val TrgmPattern = "ash jo"
 
   /** Inverted-index statistics per term: document frequency, total
     * term frequency, and the 5-smallest-doc_id posting prefix. */
@@ -109,30 +114,40 @@ object Retrieval {
       (tfD + lit(K1) * (lit(0.25) + lit(B) * dl.cast("double") / avgdl))
   }
 
+  /** The scan-local BM25 scoring of the fixed query: per-doc tf columns
+    * from array HOFs (no explode) beside the 1-row stats header,
+    * broadcast back; returns those rows and their score column. */
+  private def scanLocalBm25(s: org.apache.spark.sql.SparkSession,
+      d: String): (DataFrame, Column) = {
+    // size() is INT; the oracle's len() is BIGINT — cast so the
+    // driver's schema compare sees identical types
+    val tfCols = QueryTerms.map { t =>
+      size(filter(toks(col("text")), x => x === t)).cast("long")
+        .as(s"tf_$t")
+    }
+    val base = T.documents(s, d)
+      .select((col("doc_id") +:
+        size(toks(col("text"))).cast("long").as("dl") +: tfCols): _*)
+    val statCols =
+      count(lit(1)).as("n_docs") +: sum(col("dl")).as("sum_dl") +:
+        QueryTerms.map(t =>
+          sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
+    val stats = base.agg(statCols.head, statCols.tail: _*)
+    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+    val score = QueryTerms
+      .map(t => bm25w(col(s"tf_$t"), col(s"df_$t"), col("dl"),
+        col("n_docs"), avgdl))
+      .reduce(_ + _)
+    (base.crossJoin(broadcast(stats)), score)
+  }
+
   /** Top-10 documents for the fixed query under BM25(k1=1.2, b=0.75). */
   val bm25_topk = GQuery(
     "bm25_topk",
     (s, d) => {
       import s.implicits._
-      // size() is INT; the oracle's len() is BIGINT — cast so the
-      // driver's schema compare sees identical types
-      val tfCols = QueryTerms.map { t =>
-        size(filter(toks($"text"), x => x === t)).cast("long").as(s"tf_$t")
-      }
-      val base = T.documents(s, d)
-        .select(($"doc_id" +:
-          size(toks($"text")).cast("long").as("dl") +: tfCols): _*)
-      val statCols =
-        count(lit(1)).as("n_docs") +: sum($"dl").as("sum_dl") +:
-          QueryTerms.map(t =>
-            sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-      val stats = base.agg(statCols.head, statCols.tail: _*)
-      val avgdl = $"sum_dl".cast("double") / $"n_docs".cast("double")
-      val score = QueryTerms
-        .map(t => bm25w(col(s"tf_$t"), col(s"df_$t"), $"dl",
-          $"n_docs", avgdl))
-        .reduce(_ + _)
-      base.crossJoin(broadcast(stats))
+      val (scored, score) = scanLocalBm25(s, d)
+      scored
         .select(($"doc_id" +: QueryTerms.map(t => col(s"tf_$t")) :+
           round(score, 6).as("score")): _*)
         .orderBy($"score".desc, $"doc_id")
@@ -257,26 +272,14 @@ object Retrieval {
       val tfs = toksed.join(broadcast(q), Seq("term"))
         .groupBy($"doc_id", $"dl", $"term")
         .agg(count(lit(1)).as("tf"))
+      val stats = docs
+        .select(size(toks($"text")).cast("long").as("dl"))
+        .agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
       // df as a window over the (already tiny) matched-tf table — a
       // separate groupBy+broadcast-join would re-execute the whole tfs
       // subplan (a third corpus scan) to build its broadcast side
       // (caught by PlanAuditSpec's scan count)
-      val byTerm = Window.partitionBy($"term")
-      val withDf = tfs.withColumn("df", count(lit(1)).over(byTerm))
-      val stats = docs
-        .select(size(toks($"text")).cast("long").as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
-      val avgdl = $"sum_dl".cast("double") / $"n_docs".cast("double")
-      withDf
-        .crossJoin(broadcast(stats))
-        .withColumn("wd",
-          bm25w($"tf", $"df", $"dl", $"n_docs", avgdl)
-            .cast(org.apache.spark.sql.types.DecimalType(38, 12)))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_terms"),
-          round(sum($"wd").cast("double"), 6).as("score"))
-        .orderBy($"score".desc, $"doc_id")
-        .limit(10)
+      bm25TopFromSliver(tfs, stats)
     },
     Some(bm25JoinOracle))
 
@@ -403,45 +406,15 @@ object Retrieval {
     (s, d) => {
       import s.implicits._
       // ---- lexical leg: bm25_topk's scoring tree, widened to top-50
-      val tfCols = QueryTerms.map { t =>
-        size(filter(toks($"text"), x => x === t)).cast("long")
-          .as(s"tf_$t")
-      }
-      val base = T.documents(s, d)
-        .select(($"doc_id" +:
-          size(toks($"text")).cast("long").as("dl") +: tfCols): _*)
-      val statCols =
-        count(lit(1)).as("n_docs") +: sum($"dl").as("sum_dl") +:
-          QueryTerms.map(t =>
-            sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-      val stats = base.agg(statCols.head, statCols.tail: _*)
-      val avgdl = $"sum_dl".cast("double") / $"n_docs".cast("double")
-      val score = QueryTerms
-        .map(t => bm25w(col(s"tf_$t"), col(s"df_$t"), $"dl",
-          $"n_docs", avgdl))
-        .reduce(_ + _)
-      val lexTop = base.crossJoin(broadcast(stats))
-        .select($"doc_id", round(score, 6).as("score"))
+      val (scored, score) = scanLocalBm25(s, d)
+      val lexTop = scored.select($"doc_id", round(score, 6).as("score"))
         .filter($"score" > 0d)
         .orderBy($"score".desc, $"doc_id")
         .limit(50)
-      val lex = lexTop.select($"doc_id",
-        row_number().over(Window.orderBy($"score".desc, $"doc_id"))
-          .as("lex_rank"))
       // ---- semantic leg: exact cosine top-50 for query vector 0
       val emb = T.embeddings(s, d)
-      val sem = graft.operators.Similarity.bruteForceTopK(
-          emb, emb.filter(col("vec_id") === 0L), "vec_id", "embedding",
-          50)
-        .select(col("neighbor_id").as("doc_id"),
-          col("rank").as("sem_rank"))
-      lex.join(sem, Seq("doc_id"), "full_outer")
-        .select($"doc_id", $"lex_rank", $"sem_rank",
-          (coalesce(expr("1000000 DIV (60 + lex_rank)"), lit(0L)) +
-            coalesce(expr("1000000 DIV (60 + sem_rank)"), lit(0L)))
-            .as("rrf_micro"))
-        .orderBy($"rrf_micro".desc, $"doc_id")
-        .limit(10)
+      rrfFuse(lexTop, graft.operators.Similarity.bruteForceTopK(
+        emb, emb.filter(col("vec_id") === 0L), "vec_id", "embedding", 50))
     },
     Some("""
       WITH base AS (
@@ -763,18 +736,8 @@ object Retrieval {
     val dictQ = graft.operators.IndexOps.dict(s, d)
       .filter($"term".isin(terms: _*))
       .select($"term", $"df")
-    val st = graft.operators.IndexOps.stats(s, d)
-    val avgdl = $"sum_dl".cast("double") / $"n_docs".cast("double")
-    sliver.join(broadcast(dictQ), Seq("term"))
-      .crossJoin(broadcast(st))
-      .withColumn("wd",
-        bm25w($"tf", $"df", $"dl", $"n_docs", avgdl)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 12)))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        round(sum($"wd").cast("double"), 6).as("score"))
-      .orderBy($"score".desc, $"doc_id")
-      .limit(k)
+    bm25Top(sliver.join(broadcast(dictQ), Seq("term")),
+      graft.operators.IndexOps.stats(s, d), k)
   }
 
   /** Substring search served off the warm persisted trigram index:
@@ -792,7 +755,7 @@ object Retrieval {
     "trgm_probe_persisted",
     (s, d) => {
       import s.implicits._
-      trgmProbePersistedFor(s, d, Seq("ash jo").toDF("pattern"))
+      trgmProbePersistedFor(s, d, Seq(TrgmPattern).toDF("pattern"))
     },
     Some(trgmOracle))
 
@@ -813,7 +776,6 @@ object Retrieval {
   private[graft] def trgmProbePersistedFor(s: org.apache.spark.sql
       .SparkSession, d: String, patternDf: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
     val pats = patternDf.select(col("pattern")).limit(2)
       .collect().map(_.getString(0))
     require(pats.length == 1,
@@ -821,20 +783,33 @@ object Retrieval {
         s"(got ${pats.length})")
     val pat = pats(0)
     require(pat.length >= 3, s"pattern '$pat' is shorter than a trigram")
+    trgmProbe(s, d, IndexOps.trigrams(s, d), pat).orderBy(col("doc_id"))
+  }
+
+  /** The substring probe over trigram segments, `segs` any union of
+    * `(g, doc_id)` segments: doc-disjoint, and distinct within each, so
+    * count(*) per doc over the pattern-pruned rows (a pushed In(g)) is
+    * its distinct-trigram count. Candidates are the docs carrying every
+    * trigram of `pat`; `mask` runs on the pruned rows (tombstones). The
+    * verify fetch broadcasts the candidates onto the one corpus scan and
+    * counts occurrences: (len − len(remove(pat))) / |pat|, exact
+    * integer content in a double division. Unordered
+    * `(doc_id, n_occurrences)`. */
+  private[graft] def trgmProbe(s: org.apache.spark.sql.SparkSession,
+      d: String, segs: DataFrame, pat: String,
+      mask: DataFrame => DataFrame = identity): DataFrame = {
     val patTrgs = pat.sliding(3).toSeq.distinct
-    val cands = graft.operators.IndexOps.trigrams(s, d)
-      .filter($"g".isin(patTrgs: _*))
-      .groupBy($"doc_id")
+    val cands = mask(segs.filter(col("g").isin(patTrgs: _*)))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("ng"))
-      .filter($"ng" === patTrgs.size.toLong)
-      .select($"doc_id")
+      .filter(col("ng") === patTrgs.size.toLong)
+      .select(col("doc_id"))
     T.documents(s, d)
       .join(broadcast(cands), Seq("doc_id"))
-      .filter($"text".contains(pat))
-      .select($"doc_id",
-        ((length($"text") - length(replace($"text", lit(pat)))) /
+      .filter(col("text").contains(pat))
+      .select(col("doc_id"),
+        ((length(col("text")) - length(replace(col("text"), lit(pat)))) /
           lit(pat.length)).cast("long").as("n_occurrences"))
-      .orderBy($"doc_id")
   }
 
   /** Incremental segment merge — the Lucene lifecycle step the
@@ -866,10 +841,9 @@ object Retrieval {
           .groupBy($"term")
           .agg(count(lit(1)).as("df"), sum($"tf").as("total_tf"))
       val docs = T.documents(s, d)
-      dictOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$dir/base_dict")
+      dictOf(DocRefresh.base(docs)).write.parquet(s"$dir/base_dict")
       s.read.parquet(s"$dir/base_dict")
-        .unionByName(dictOf(docs.filter($"doc_id" % 10L === 0L)))
+        .unionByName(dictOf(DocRefresh.delta(docs)))
         .groupBy($"term")
         .agg(sum($"df").as("df"), sum($"total_tf").as("total_tf"))
         .orderBy($"df".desc, $"term")
@@ -925,9 +899,14 @@ object Retrieval {
     * (base ∪ delta, masked, compacted, streamed-ingest union) — each
     * gated by the same full-rebuild oracle family. */
   private[graft] def bm25TopFromSliver(sliver: DataFrame,
-      st: DataFrame, k: Int = 10): DataFrame = {
-    val withDf = sliver.withColumn("df",
-      count(lit(1)).over(Window.partitionBy(col("term"))))
+      st: DataFrame, k: Int = 10): DataFrame =
+    bm25Top(sliver.withColumn("df",
+      count(lit(1)).over(Window.partitionBy(col("term")))), st, k)
+
+  /** BM25 top-k of per-(doc, term) rows carrying tf, df and dl against
+    * a 1-row stats header. */
+  private def bm25Top(withDf: DataFrame, st: DataFrame, k: Int)
+      : DataFrame = {
     val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
     withDf.crossJoin(broadcast(st))
       .withColumn("wd",
@@ -943,35 +922,13 @@ object Retrieval {
   val bm25_probe_merged = GQuery(
     "bm25_probe_merged",
     (s, d) => graft.GQuery.withTempTable(s, "graft-seg-merge") { dir =>
-      import s.implicits._
-      val docs = T.spread(T.documents(s, d))
-      // init: the base segment, written once (the IndexOps layout —
-      // range-partitioned so a hot term spans partitions).
-      // localCheckpoint before repartitionByRange (r15, guide §1.2):
-      // RangePartitioner SAMPLES its child in a separate job to pick
-      // boundaries, so the tokenize+aggregate of 90% of the corpus ran
-      // TWICE per timed body; the cut materializes it once and both
-      // the sampling pass and the write read the blocks.
-      postingsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .localCheckpoint()
-        .repartitionByRange($"term", $"doc_id")
-        .sortWithinPartitions("term", "doc_id")
-        .write.parquet(s"$dir/base_postings")
-      statsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$dir/base_stats")
-      // refresh: the delta segment — tokenize(delta) only
-      postingsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$dir/delta_postings")
-      statsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$dir/delta_stats")
+      // init: the ranged base segment; refresh: tokenize(delta) only
+      Postings.writeSplit(T.spread(T.documents(s, d)), dir,
+        CheckpointedRanged, AsDerived)
       // probe: pushed In prunes each segment; union is the merge
-      val merged = s.read.parquet(s"$dir/base_postings")
-        .unionByName(s.read.parquet(s"$dir/delta_postings"))
-      val sliver = merged.filter($"term".isin(QueryTerms: _*))
-      val st = s.read.parquet(s"$dir/base_stats")
-        .unionByName(s.read.parquet(s"$dir/delta_stats"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-      bm25TopFromSliver(sliver, st)
+      bm25TopFromSliver(
+        Postings.rows(s, dir).filter(col("term").isin(QueryTerms: _*)),
+        Postings.header(s, dir))
     },
     Some(bm25JoinOracle))
 
@@ -996,23 +953,12 @@ object Retrieval {
   val bm25_probe_tombstoned = GQuery(
     "bm25_probe_tombstoned",
     (s, d) => graft.GQuery.withTempTable(s, "graft-bm25-tomb") { t =>
-      import s.implicits._
-      // the DELETE operation: tombstones arrive as data; park them
-      // with dl, the per-doc stats mass the header correction needs
-      T.documents(s, d).filter($"doc_id" % 17L === 3L)
-        .select($"doc_id", size(toks($"text")).cast("long").as("dl"))
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      val sliver = graft.operators.IndexOps.postings(s, d)
-        .filter($"term".isin(QueryTerms: _*))
-        .join(tomb.select($"doc_id"), Seq("doc_id"), "left_anti")
-      val corr = tomb.agg(count(lit(1)).as("del_docs"),
-        sum($"dl").as("del_dl"))
-      val st = graft.operators.IndexOps.stats(s, d)
-        .crossJoin(broadcast(corr))
-        .select(($"n_docs" - $"del_docs").as("n_docs"),
-          ($"sum_dl" - $"del_dl").as("sum_dl"))
-      bm25TopFromSliver(sliver, st)
+      // the DELETE operation: tombstones arrive as data
+      val tomb = Segments.parkTombstones(s, Postings, T.documents(s, d), t)
+      bm25TopFromSliver(
+        Segments.mask(IndexOps.postings(s, d)
+          .filter(col("term").isin(QueryTerms: _*)), tomb),
+        Segments.correctedStats(IndexOps.stats(s, d), tomb))
     },
     Some(bm25JoinOracle.replace("FROM documents",
       "FROM documents WHERE doc_id % 17 <> 3")))
@@ -1032,46 +978,26 @@ object Retrieval {
   val index_compact = GQuery(
     "index_compact",
     (s, d) => graft.GQuery.withTempTable(s, "graft-compact") { t =>
-      import s.implicits._
       val docs = T.spread(T.documents(s, d))
-      // init + refresh: the two segments (the bm25_probe_merged shape)
-      postingsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$t/base_postings")
-      postingsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$t/delta_postings")
-      statsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$t/base_stats")
-      statsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$t/delta_stats")
-      // delete: tombstones parked with dl (the stats mass they carry)
-      docs.filter($"doc_id" % 17L === 3L)
-        .select($"doc_id", size(toks($"text")).cast("long").as("dl"))
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      // compact: union minus tombstones, rewritten range-partitioned
-      // (the IndexOps layout), header corrected once
-      s.read.parquet(s"$t/base_postings")
-        .unionByName(s.read.parquet(s"$t/delta_postings"))
-        .join(tomb.select($"doc_id"), Seq("doc_id"), "left_anti")
-        .repartitionByRange($"term", $"doc_id")
-        .sortWithinPartitions("term", "doc_id")
-        .write.parquet(s"$t/compacted_postings")
-      val corr = tomb.agg(count(lit(1)).as("del_docs"),
-        sum($"dl").as("del_dl"))
-      s.read.parquet(s"$t/base_stats")
-        .unionByName(s.read.parquet(s"$t/delta_stats"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-        .crossJoin(corr)
-        .select(($"n_docs" - $"del_docs").as("n_docs"),
-          ($"sum_dl" - $"del_dl").as("sum_dl"))
-        .write.parquet(s"$t/compacted_stats")
-      // probe: ONLY the compacted segment — no anti-join remains
-      val sliver = s.read.parquet(s"$t/compacted_postings")
-        .filter($"term".isin(QueryTerms: _*))
-      bm25TopFromSliver(sliver, s.read.parquet(s"$t/compacted_stats"))
+      // init + refresh: the two segments, both as derived
+      postingsOf(DocRefresh.base(docs)).write.parquet(Postings.base(t))
+      postingsOf(DocRefresh.delta(docs)).write.parquet(Postings.delta(t))
+      statsOf(DocRefresh.base(docs)).write.parquet(s"$t/base_stats")
+      statsOf(DocRefresh.delta(docs)).write.parquet(s"$t/delta_stats")
+      // delete, then compact: header corrected once
+      Postings.compact(s, t, Segments.parkTombstones(s, Postings, docs, t), t)
+      compactedBm25(s, t)
     },
     Some(bm25JoinOracle.replace("FROM documents",
       "FROM documents WHERE doc_id % 17 <> 3")))
+
+  /** BM25 top-10 over ONLY a compacted postings segment and its
+    * corrected header — no anti-join remains. */
+  private def compactedBm25(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    bm25TopFromSliver(s.read.parquet(Postings.compacted(dir))
+        .filter(col("term").isin(QueryTerms: _*)),
+      s.read.parquet(s"$dir/compacted_stats"))
 
   /** Trigram-SEGMENT merge + probe (VERDICT-r12 item 4): the
     * [[bm25_probe_merged]] lifecycle applied to the substring index,
@@ -1092,36 +1018,10 @@ object Retrieval {
   val trgm_probe_merged = GQuery(
     "trgm_probe_merged",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgm-merge") { t =>
-      import s.implicits._
-      val docs = T.spread(T.documents(s, d))
-      // init: the base segment, range-partitioned (IndexOps layout).
-      // localCheckpoint before repartitionByRange (r15, guide §1.2):
-      // the range-boundary sampling job otherwise re-runs the
-      // generate+distinct of 90% of the corpus a second time.
-      trgmsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .localCheckpoint()
-        .repartitionByRange($"g", $"doc_id")
-        .sortWithinPartitions("g", "doc_id")
-        .write.parquet(s"$t/base_trgm")
-      // refresh: generate(delta) only
-      trgmsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$t/delta_trgm")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val merged = s.read.parquet(s"$t/base_trgm")
-        .unionByName(s.read.parquet(s"$t/delta_trgm"))
-      val cands = merged.filter($"g".isin(patTrgs: _*))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      T.documents(s, d)
-        .join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
-        .orderBy($"doc_id")
+      // init: the ranged base segment; refresh: generate(delta) only
+      Trigrams.writeSplit(T.spread(T.documents(s, d)), t,
+        CheckpointedRanged, AsDerived)
+      trgmProbe(s, d, Trigrams.rows(s, t), TrgmPattern).orderBy(col("doc_id"))
     },
     Some(trgmOracle))
 
@@ -1138,27 +1038,9 @@ object Retrieval {
   val trgm_probe_tombstoned = GQuery(
     "trgm_probe_tombstoned",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgm-tomb") { t =>
-      import s.implicits._
-      T.documents(s, d).filter($"doc_id" % 17L === 3L)
-        .select($"doc_id")
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val cands = graft.operators.IndexOps.trigrams(s, d)
-        .filter($"g".isin(patTrgs: _*))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      T.documents(s, d)
-        .join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
-        .orderBy($"doc_id")
+      val tomb = Segments.parkTombstones(s, Trigrams, T.documents(s, d), t)
+      trgmProbe(s, d, IndexOps.trigrams(s, d), TrgmPattern,
+        Segments.mask(_, tomb)).orderBy(col("doc_id"))
     },
     Some(trgmOracle.replace("WHERE contains(text, 'ash jo')",
       "WHERE contains(text, 'ash jo') AND doc_id % 17 <> 3")))
@@ -1178,36 +1060,11 @@ object Retrieval {
   val trgm_compact = GQuery(
     "trgm_compact",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgm-compact") { t =>
-      import s.implicits._
       val docs = T.spread(T.documents(s, d))
-      trgmsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$t/base_trgm")
-      trgmsOf(docs.filter($"doc_id" % 10L === 0L))
-        .write.parquet(s"$t/delta_trgm")
-      docs.filter($"doc_id" % 17L === 3L).select($"doc_id")
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      s.read.parquet(s"$t/base_trgm")
-        .unionByName(s.read.parquet(s"$t/delta_trgm"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .repartitionByRange($"g", $"doc_id")
-        .sortWithinPartitions("g", "doc_id")
-        .write.parquet(s"$t/compacted_trgm")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val cands = s.read.parquet(s"$t/compacted_trgm")
-        .filter($"g".isin(patTrgs: _*))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      T.documents(s, d)
-        .join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
-        .orderBy($"doc_id")
+      Trigrams.writeSplit(docs, t, AsDerived, AsDerived)
+      Trigrams.compact(s, t, Segments.parkTombstones(s, Trigrams, docs, t), t)
+      trgmProbe(s, d, s.read.parquet(Trigrams.compacted(t)), TrgmPattern)
+        .orderBy(col("doc_id"))
     },
     Some(trgmOracle.replace("WHERE contains(text, 'ash jo')",
       "WHERE contains(text, 'ash jo') AND doc_id % 17 <> 3")))
@@ -1231,27 +1088,12 @@ object Retrieval {
   val trgm_probe_refresh = GQuery(
     "trgm_probe_refresh",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgm-refresh") { t =>
-      import s.implicits._
-      val seg = graft.operators.IndexOps.trgmSplitSegmentDir(s, d)
-      val docs = T.documents(s, d)
+      val seg = Trigrams.splitStore(s, d)
       // the refresh leg: generate(delta) only (spread: see Tables.spread)
-      trgmsOf(T.spread(docs.filter($"doc_id" % 10L === 0L)))
-        .write.parquet(s"$t/delta_trgm")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val merged = s.read.parquet(s"$seg/base_trgm")
-        .unionByName(s.read.parquet(s"$t/delta_trgm"))
-      val cands = merged.filter($"g".isin(patTrgs: _*))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      docs.join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
-        .orderBy($"doc_id")
+      Trigrams.writePart(T.spread(DocRefresh.delta(T.documents(s, d))), t,
+        "delta", AsDerived)
+      trgmProbe(s, d, Trigrams.rows(s, seg, t), TrgmPattern)
+        .orderBy(col("doc_id"))
     },
     Some(trgmOracle))
 
@@ -1266,33 +1108,11 @@ object Retrieval {
   val trgm_compact_warm = GQuery(
     "trgm_compact_warm",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgmc-warm") { t =>
-      import s.implicits._
-      val seg = graft.operators.IndexOps.trgmSplitSegmentDir(s, d)
-      T.documents(s, d).filter($"doc_id" % 17L === 3L)
-        .select($"doc_id")
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      s.read.parquet(s"$seg/base_trgm")
-        .unionByName(s.read.parquet(s"$seg/delta_trgm"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .repartitionByRange($"g", $"doc_id")
-        .sortWithinPartitions("g", "doc_id")
-        .write.parquet(s"$t/compacted_trgm")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val cands = s.read.parquet(s"$t/compacted_trgm")
-        .filter($"g".isin(patTrgs: _*))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      T.documents(s, d)
-        .join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
-        .orderBy($"doc_id")
+      val seg = Trigrams.splitStore(s, d)
+      Trigrams.compact(s, seg,
+        Segments.parkTombstones(s, Trigrams, T.documents(s, d), t), t)
+      trgmProbe(s, d, s.read.parquet(Trigrams.compacted(t)), TrgmPattern)
+        .orderBy(col("doc_id"))
     },
     Some(trgmOracle.replace("WHERE contains(text, 'ash jo')",
       "WHERE contains(text, 'ash jo') AND doc_id % 17 <> 3")))
@@ -1303,7 +1123,7 @@ object Retrieval {
     * every run), so the PERF tables could only argue, not show, that
     * a deployment's per-epoch refresh cost is tokenize(delta) + the
     * merged probe. This entry shows it: the base segment comes from
-    * the memoized [[graft.operators.IndexOps.splitSegmentDir]] store
+    * the memoized [[graft.operators.Segments.Kind.splitStore]] store
     * (on disk already when a refresh epoch arrives — warm after the
     * first derivation, exactly like every other IndexOps probe), and
     * the timed body pays ONLY tokenize(delta) + delta write + the
@@ -1313,20 +1133,14 @@ object Retrieval {
   val bm25_probe_refresh = GQuery(
     "bm25_probe_refresh",
     (s, d) => graft.GQuery.withTempTable(s, "graft-seg-refresh") { t =>
-      import s.implicits._
-      val baseDir = graft.operators.IndexOps.splitSegmentDir(s, d)
-      val delta = T.spread(T.documents(s, d).filter($"doc_id" % 10L === 0L))
+      val seg = Postings.splitStore(s, d)
       // the refresh leg: tokenize(delta) into a fresh delta segment
-      postingsOf(delta).write.parquet(s"$t/delta_postings")
-      statsOf(delta).write.parquet(s"$t/delta_stats")
+      Postings.writePart(T.spread(DocRefresh.delta(T.documents(s, d))), t,
+        "delta", AsDerived)
       // the merged probe: pushed In prunes both segments
-      val merged = s.read.parquet(s"$baseDir/base_postings")
-        .unionByName(s.read.parquet(s"$t/delta_postings"))
-      val sliver = merged.filter($"term".isin(QueryTerms: _*))
-      val st = s.read.parquet(s"$baseDir/base_stats")
-        .unionByName(s.read.parquet(s"$t/delta_stats"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-      bm25TopFromSliver(sliver, st)
+      bm25TopFromSliver(
+        Postings.rows(s, seg, t).filter(col("term").isin(QueryTerms: _*)),
+        Postings.header(s, seg, t))
     },
     Some(bm25JoinOracle))
 
@@ -1345,30 +1159,10 @@ object Retrieval {
   val index_compact_warm = GQuery(
     "index_compact_warm",
     (s, d) => graft.GQuery.withTempTable(s, "graft-compact-warm") { t =>
-      import s.implicits._
-      val seg = graft.operators.IndexOps.splitSegmentDir(s, d)
-      T.documents(s, d).filter($"doc_id" % 17L === 3L)
-        .select($"doc_id", size(toks($"text")).cast("long").as("dl"))
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      s.read.parquet(s"$seg/base_postings")
-        .unionByName(s.read.parquet(s"$seg/delta_postings"))
-        .join(tomb.select($"doc_id"), Seq("doc_id"), "left_anti")
-        .repartitionByRange($"term", $"doc_id")
-        .sortWithinPartitions("term", "doc_id")
-        .write.parquet(s"$t/compacted_postings")
-      val corr = tomb.agg(count(lit(1)).as("del_docs"),
-        sum($"dl").as("del_dl"))
-      s.read.parquet(s"$seg/base_stats")
-        .unionByName(s.read.parquet(s"$seg/delta_stats"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-        .crossJoin(corr)
-        .select(($"n_docs" - $"del_docs").as("n_docs"),
-          ($"sum_dl" - $"del_dl").as("sum_dl"))
-        .write.parquet(s"$t/compacted_stats")
-      val sliver = s.read.parquet(s"$t/compacted_postings")
-        .filter($"term".isin(QueryTerms: _*))
-      bm25TopFromSliver(sliver, s.read.parquet(s"$t/compacted_stats"))
+      val seg = Postings.splitStore(s, d)
+      Postings.compact(s, seg,
+        Segments.parkTombstones(s, Postings, T.documents(s, d), t), t)
+      compactedBm25(s, t)
     },
     Some(bm25JoinOracle.replace("FROM documents",
       "FROM documents WHERE doc_id % 17 <> 3")))
@@ -1539,24 +1333,13 @@ object Retrieval {
   val rrf_probe_merged = GQuery(
     "rrf_probe_merged",
     (s, d) => {
-      import s.implicits._
-      val tDir = graft.operators.IndexOps.splitSegmentDir(s, d)
-      val sliver = s.read.parquet(s"$tDir/base_postings")
-        .unionByName(s.read.parquet(s"$tDir/delta_postings"))
-        .filter($"term".isin(QueryTerms: _*))
-      val st = s.read.parquet(s"$tDir/base_stats")
-        .unionByName(s.read.parquet(s"$tDir/delta_stats"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-      val lex = bm25TopFromSliver(sliver, st, k = 50)
-      val A = graft.operators.AnnIndex
-      val seg = A.splitSegmentDir(s, d)
-      val sem = A.ivfProbe(T.embeddings(s, d).filter($"vec_id" === 0L),
-        "vec_id", "embedding", k = 50, nprobe = A.NList,
-        cents = A.loadCentroids(s, seg),
-        loadCells = cellSet =>
-          s.read.parquet(s"$seg/base_cells")
-            .unionByName(s.read.parquet(s"$seg/delta_cells"))
-            .where($"cell".isin(cellSet: _*)))
+      val tDir = Postings.splitStore(s, d)
+      val lex = bm25TopFromSliver(
+        Postings.rows(s, tDir).filter(col("term").isin(QueryTerms: _*)),
+        Postings.header(s, tDir), k = 50)
+      val seg = Cells.splitStore(s, d)
+      val sem = AnnIndex.ivfFullProbe(queryVec(s, d), 50,
+        AnnIndex.loadCentroids(s, seg))(Segments.probed(Cells.rows(s, seg)))
       rrfFuse(lex, sem)
     },
     Some(rrfProbeOracle))
@@ -1647,42 +1430,28 @@ object Retrieval {
   private[graft] def rrfFusedProbeMasked(
       s: org.apache.spark.sql.SparkSession, d: String,
       tomb: DataFrame, vtomb: DataFrame): DataFrame = {
-    import s.implicits._
-    val sliver = graft.operators.IndexOps.postings(s, d)
-      .filter($"term".isin(QueryTerms: _*))
-      .join(tomb.select($"doc_id"), Seq("doc_id"), "left_anti")
-    val corr = tomb.agg(count(lit(1)).as("del_docs"),
-      sum($"dl").as("del_dl"))
-    val st = graft.operators.IndexOps.stats(s, d)
-      .crossJoin(broadcast(corr))
-      .select(($"n_docs" - $"del_docs").as("n_docs"),
-        ($"sum_dl" - $"del_dl").as("sum_dl"))
-    val lex = bm25TopFromSliver(sliver, st, k = 50)
-    val A = graft.operators.AnnIndex
-    val sem = A.ivfProbe(T.embeddings(s, d).filter($"vec_id" === 0L),
-      "vec_id", "embedding", k = 50, nprobe = A.NList,
-      cents = A.centroidMetaOf(s, d),
-      loadCells = cellSet =>
-        A.cells(s, d).where($"cell".isin(cellSet: _*))
-          .join(vtomb.where($"cell".isin(cellSet: _*)),
-            Seq("cell", "vec_id"), "left_anti"))
+    val lex = bm25TopFromSliver(
+      Segments.mask(IndexOps.postings(s, d)
+        .filter(col("term").isin(QueryTerms: _*)), tomb),
+      Segments.correctedStats(IndexOps.stats(s, d), tomb), k = 50)
+    val sem = AnnIndex.ivfFullProbe(queryVec(s, d), 50,
+      AnnIndex.centroidMetaOf(s, d))(
+      Segments.liveProbed(AnnIndex.cells(s, d), vtomb))
     rrfFuse(lex, sem)
   }
+
+  /** The fused probes' fixed query vector (vec_id 0). */
+  private def queryVec(s: org.apache.spark.sql.SparkSession, d: String)
+      : DataFrame =
+    T.embeddings(s, d).filter(col("vec_id") === 0L)
 
   val rrf_probe_tombstoned = GQuery(
     "rrf_probe_tombstoned",
     (s, d) => graft.GQuery.withTempTable(s, "graft-rrf-tomb") { t =>
-      import s.implicits._
       // the takedown batch: parked once, with the dl mass the lexical
       // stats correction needs (the vector side needs only the ids)
-      T.documents(s, d).filter($"doc_id" % 17L === 3L)
-        .select($"doc_id", size(toks($"text")).cast("long").as("dl"))
-        .write.parquet(s"$t/tombstones")
-      val tomb = s.read.parquet(s"$t/tombstones")
-      val vtomb = graft.operators.AnnIndex.cells(s, d)
-        .filter($"vec_id" % 17L === 3L)
-        .select($"cell", $"vec_id")
-      rrfFusedProbeMasked(s, d, tomb, vtomb)
+      val tomb = Segments.parkTombstones(s, Postings, T.documents(s, d), t)
+      rrfFusedProbeMasked(s, d, tomb, Cells.tombstones(AnnIndex.cells(s, d)))
     },
     Some(rrfProbeOracle
       .replace("FROM documents", "FROM documents WHERE doc_id % 17 <> 3")
@@ -1712,39 +1481,26 @@ object Retrieval {
     "rrf_probe_asof",
     (s, d) => graft.GQuery.withTempTable(s, "graft-rrf-asof") { t =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
-      val lexSeg = graft.operators.IndexOps.splitSegmentDir(s, d)
-      val annSeg = A.splitSegmentDir(s, d)
-      Seq((1, s"$lexSeg/base_postings", "postings", "lex"),
-          (1, s"$lexSeg/base_stats", "stats", "lex"),
-          (1, s"$annSeg/base_cells", "cells", "ann"),
-          (2, s"$lexSeg/delta_postings", "postings", "lex"),
-          (2, s"$lexSeg/delta_stats", "stats", "lex"),
-          (2, s"$annSeg/delta_cells", "cells", "ann"))
-        .toDF("epoch", "path", "kind", "lifecycle")
-        .coalesce(1).write.parquet(s"$t/manifest")
-      val cents = A.loadCentroids(s, annSeg)
+      val lexSeg = Postings.splitStore(s, d)
+      val annSeg = Cells.splitStore(s, d)
+      Segments.writeManifest(s, s"$t/manifest", Seq(
+        Commit(1, Postings.base(lexSeg), "postings", lifecycle = "lex"),
+        Commit(1, s"$lexSeg/base_stats", "stats", lifecycle = "lex"),
+        Commit(1, Cells.base(annSeg), "cells", lifecycle = "ann"),
+        Commit(2, Postings.delta(lexSeg), "postings", lifecycle = "lex"),
+        Commit(2, s"$lexSeg/delta_stats", "stats", lifecycle = "lex"),
+        Commit(2, Cells.delta(annSeg), "cells", lifecycle = "ann")))
+      val cents = AnnIndex.loadCentroids(s, annSeg)
       def fusedAt(lexEpoch: Int, annEpoch: Int): DataFrame = {
-        val m = s.read.parquet(s"$t/manifest").collect()
-        def paths(lc: String, kind: String, e: Int) = m
-          .filter(r => r.getAs[String]("lifecycle") == lc &&
-            r.getAs[String]("kind") == kind &&
-            r.getAs[Int]("epoch") <= e)
-          .map(_.getAs[String]("path"))
-        def rd(ps: Array[String]) =
-          ps.map(p => s.read.parquet(p)).reduce(_ unionByName _)
-        val sliver = rd(paths("lex", "postings", lexEpoch))
-          .filter($"term".isin(QueryTerms: _*))
-        val st = rd(paths("lex", "stats", lexEpoch))
-          .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-        val lex = bm25TopFromSliver(sliver, st, k = 50)
-        val sem = A.ivfProbe(
-          T.embeddings(s, d).filter($"vec_id" === 0L),
-          "vec_id", "embedding", k = 50, nprobe = A.NList,
-          cents = cents,
-          loadCells = cellSet =>
-            rd(paths("ann", "cells", annEpoch))
-              .where($"cell".isin(cellSet: _*)))
+        // one manifest read serves both lifecycles' pins
+        val m = Segments.commits(s, s"$t/manifest")
+        val lex = bm25TopFromSliver(
+          Segments.readAsOf(s, m, lexEpoch, "postings", "lex")
+            .filter($"term".isin(QueryTerms: _*)),
+          Segments.mergedStats(
+            Segments.readAsOf(s, m, lexEpoch, "stats", "lex")), k = 50)
+        val sem = AnnIndex.ivfFullProbe(queryVec(s, d), 50, cents)(
+          Segments.probed(Segments.readAsOf(s, m, annEpoch, "cells", "ann")))
         rrfFuse(lex, sem)
       }
       fusedAt(1, 1).withColumn("epoch", lit(1))
@@ -1787,23 +1543,19 @@ object Retrieval {
     "bm25_probe_asof",
     (s, d) => graft.GQuery.withTempTable(s, "graft-seg-asof") { t =>
       import s.implicits._
-      val seg = graft.operators.IndexOps.splitSegmentDir(s, d)
-      Seq((1, s"$seg/base_postings", "postings"),
-          (1, s"$seg/base_stats", "stats"),
-          (2, s"$seg/delta_postings", "postings"),
-          (2, s"$seg/delta_stats", "stats"))
-        .toDF("epoch", "path", "kind")
-        .coalesce(1).write.parquet(s"$t/manifest")
+      val seg = Postings.splitStore(s, d)
+      Segments.writeManifest(s, s"$t/manifest", Seq(
+        Commit(1, Postings.base(seg), "postings"),
+        Commit(1, s"$seg/base_stats", "stats"),
+        Commit(2, Postings.delta(seg), "postings"),
+        Commit(2, s"$seg/delta_stats", "stats")))
       def probeAsOf(epoch: Int): DataFrame = {
-        val m = s.read.parquet(s"$t/manifest")
-          .filter($"epoch" <= epoch).collect()
-        def rd(kind: String) = m.filter(_.getAs[String]("kind") == kind)
-          .map(r => s.read.parquet(r.getAs[String]("path")))
-          .reduce(_ unionByName _)
-        val sliver = rd("postings").filter($"term".isin(QueryTerms: _*))
-        val st = rd("stats")
-          .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-        bm25TopFromSliver(sliver, st).withColumn("epoch", lit(epoch))
+        val m = Segments.commits(s, s"$t/manifest", Some(epoch))
+        bm25TopFromSliver(
+          Segments.readAsOf(s, m, epoch, "postings")
+            .filter($"term".isin(QueryTerms: _*)),
+          Segments.mergedStats(Segments.readAsOf(s, m, epoch, "stats")))
+          .withColumn("epoch", lit(epoch))
       }
       probeAsOf(1).unionByName(probeAsOf(2))
         .select($"epoch", $"doc_id", $"n_terms", $"score")
@@ -1839,28 +1591,12 @@ object Retrieval {
     "trgm_probe_asof",
     (s, d) => graft.GQuery.withTempTable(s, "graft-trgm-asof") { t =>
       import s.implicits._
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val seg = graft.operators.IndexOps.trgmSplitSegmentDir(s, d)
-      val docs = T.documents(s, d)
-      Seq((1, s"$seg/base_trgm"), (2, s"$seg/delta_trgm"))
-        .toDF("epoch", "path")
-        .coalesce(1).write.parquet(s"$t/manifest")
+      val seg = Trigrams.splitStore(s, d)
+      Segments.writeManifest(s, s"$t/manifest",
+        Seq(Commit(1, Trigrams.base(seg)), Commit(2, Trigrams.delta(seg))))
       def probeAsOf(epoch: Int): DataFrame = {
-        val seg = s.read.parquet(s"$t/manifest")
-          .filter($"epoch" <= epoch).collect()
-          .map(r => s.read.parquet(r.getAs[String]("path")))
-          .reduce(_ unionByName _)
-        val cands = seg.filter($"g".isin(patTrgs: _*))
-          .groupBy($"doc_id")
-          .agg(count(lit(1)).as("ng"))
-          .filter($"ng" === patTrgs.size.toLong)
-          .select($"doc_id")
-        docs.join(broadcast(cands), Seq("doc_id"))
-          .filter($"text".contains(pat))
-          .select($"doc_id",
-            ((length($"text") - length(replace($"text", lit(pat)))) /
-              lit(pat.length)).cast("long").as("n_occurrences"))
+        val m = Segments.commits(s, s"$t/manifest", Some(epoch))
+        trgmProbe(s, d, Segments.readAsOf(s, m, epoch), TrgmPattern)
           .withColumn("epoch", lit(epoch))
       }
       probeAsOf(1).unionByName(probeAsOf(2))

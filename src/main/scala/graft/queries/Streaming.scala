@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{GQuery, Tables => T}
+import graft.operators.{AnnIndex, Segments}
 import graft.operators.IndexOps.{postingsOf, statsOf, trgmsOf}
+import graft.operators.Segments.{Cells, CheckpointedRanged, DocRefresh,
+  Postings, Trigrams, VecRefresh}
 import graft.streaming.StreamOps
 
 /** Driver hash gates for the §2.7 watermark operators — all four run
@@ -165,6 +168,21 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** Streamed ingest: `delta` replays time-sliced on `idCol` (a doc or
+    * vector is one stream row, so its rows never split across
+    * micro-batches), and `write` lands each micro-batch under its batch
+    * id. Returns the non-empty slice count: the micro-batches a lossless
+    * replay delivers. */
+  private def ingest(s: SparkSession, t: String, delta: DataFrame,
+      idCol: String)(write: (DataFrame, Long) => Unit): Long = {
+    val in = delta.withColumn("ets", timestamp_seconds(col(idCol)))
+    val kSlices = sliceCount(in.count())
+    val expected = nonEmptySlices(in, "ets", kSlices)
+    writeTimeSliced(in, "ets", s"$t/in", kSlices)
+    replayForeach(s, t, s"$t/in")((batch, id) => write(batch.drop("ets"), id))
+    expected
   }
 
   /** Replay the time-sliced files under `in` through `mk`, one file
@@ -711,39 +729,23 @@ object Streaming {
     (s, d) => graft.GQuery.withTempTable(s, "graft-stream-ingest") { t =>
       import s.implicits._
       val docs = T.spread(T.documents(s, d))
-      // init: the base segment, written once (the IndexOps layout).
-      // localCheckpoint before repartitionByRange (r15, guide §1.2):
-      // the range-boundary sampling job otherwise re-runs the base
-      // tokenize+aggregate a second time inside the timed body.
-      postingsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .localCheckpoint()
-        .repartitionByRange($"term", $"doc_id")
-        .sortWithinPartitions("term", "doc_id")
-        .write.parquet(s"$t/base_postings")
-      statsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .write.parquet(s"$t/base_stats")
+      // init: the ranged base segment, written once
+      Postings.writePart(DocRefresh.base(docs), t, "base", CheckpointedRanged)
       // continuous ingest: delta docs arrive time-sliced by doc_id
-      val delta = docs.filter($"doc_id" % 10L === 0L)
-        .select($"doc_id", $"text")
-        .withColumn("ets", timestamp_seconds($"doc_id"))
-      val kSlices = sliceCount(delta.count())
-      val expectedBatches = nonEmptySlices(delta, "ets", kSlices)
-      writeTimeSliced(delta, "ets", s"$t/in", kSlices)
-      replayForeach(s, t, s"$t/in") { (batch, id) =>
-        val bd = batch.drop("ets")
-        postingsOf(bd).withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$t/delta_postings/b$id")
-        statsOf(bd)
-          .write.mode("overwrite").parquet(s"$t/delta_stats/b$id")
+      val expectedBatches = ingest(s, t,
+          DocRefresh.delta(docs).select($"doc_id", $"text"), "doc_id") {
+        (bd, id) =>
+          Segments.writeBatch(postingsOf(bd), s"$t/delta_postings", id)
+          statsOf(bd)
+            .write.mode("overwrite").parquet(s"$t/delta_stats/b$id")
       }
       // probe: base UNION streamed delta, one answer
       val deltaPosts = s.read.parquet(s"$t/delta_postings/b*")
-      val merged = s.read.parquet(s"$t/base_postings")
-        .unionByName(deltaPosts.drop("batch_id"))
-      val sliver = merged.filter($"term".isin(Retrieval.QueryTerms: _*))
-      val st = s.read.parquet(s"$t/base_stats")
-        .unionByName(s.read.parquet(s"$t/delta_stats/b*"))
-        .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
+      val sliver = Segments.union(s.read.parquet(Postings.base(t)),
+          deltaPosts.drop("batch_id"))
+        .filter($"term".isin(Retrieval.QueryTerms: _*))
+      val st = Segments.mergedStats(
+        Segments.read(s, s"$t/base_stats", s"$t/delta_stats/b*"))
       val probe = Retrieval.bm25TopFromSliver(sliver, st)
       val ev = deltaPosts.agg(countDistinct($"batch_id").as("nb"))
         .select(lit(-1L).as("doc_id"),
@@ -778,34 +780,23 @@ object Streaming {
     "stream_ann_ingest",
     (s, d) => graft.GQuery.withTempTable(s, "graft-stream-annin") { t =>
       import s.implicits._
-      val A = graft.operators.AnnIndex
+      val A = AnnIndex
       val vecs = T.embeddings(s, d).where($"embedding".isNotNull)
-      val base = vecs.filter($"vec_id" % 10L =!= 7L)
       // init: train on base only, encode base (paid once per epoch)
-      val qz = A.trainQuantizer(base, "embedding")
-      A.encode(qz, base, "vec_id", "embedding")
-        .write.partitionBy("cell").parquet(s"$t/base_cells")
+      val qz = Cells.trainBase(vecs)
+      Cells.write(A.encode(qz, VecRefresh.base(vecs), "vec_id", "embedding"),
+        Cells.base(t))
       // continuous ingest: delta vectors arrive time-sliced by vec_id
-      val delta = vecs.filter($"vec_id" % 10L === 7L)
-        .select($"vec_id", $"embedding")
-        .withColumn("ets", timestamp_seconds($"vec_id"))
-      val kSlices = sliceCount(delta.count())
-      val expectedBatches = nonEmptySlices(delta, "ets", kSlices)
-      writeTimeSliced(delta, "ets", s"$t/in", kSlices)
-      replayForeach(s, t, s"$t/in") { (batch, id) =>
-        A.encode(qz, batch.drop("ets"), "vec_id", "embedding")
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$t/delta_cells/b$id")
+      val expectedBatches = ingest(s, t,
+          VecRefresh.delta(vecs).select($"vec_id", $"embedding"), "vec_id") {
+        (batch, id) => Segments.writeBatch(
+          A.encode(qz, batch, "vec_id", "embedding"), s"$t/delta_cells", id)
       }
       val deltaCells = s.read.parquet(s"$t/delta_cells/b*")
-      val probe = A.ivfProbe(T.embeddings(s, d).filter($"vec_id" < 10),
-        "vec_id", "embedding", k = 5, nprobe = A.NList,
-        cents = qz.centroidMeta,
-        loadCells = cellSet =>
-          s.read.parquet(s"$t/base_cells")
-            .unionByName(s.read.parquet(s"$t/delta_cells/b*")
-              .drop("batch_id"))
-            .where($"cell".isin(cellSet: _*)))
+      val probe = A.ivfFullProbe(T.embeddings(s, d).filter($"vec_id" < 10),
+        5, qz.centroidMeta)(Segments.probed(Segments.union(
+          s.read.parquet(Cells.base(t)),
+          s.read.parquet(s"$t/delta_cells/b*").drop("batch_id"))))
       val ev = deltaCells.agg(countDistinct($"batch_id").as("nb"))
         .select(lit(-1L).as("query_id"),
           ($"nb" === lit(expectedBatches)).cast("long").as("neighbor_id"),
@@ -894,40 +885,17 @@ object Streaming {
     (s, d) => graft.GQuery.withTempTable(s, "graft-stream-trgm") { t =>
       import s.implicits._
       val docs = T.spread(T.documents(s, d))
-      // localCheckpoint before repartitionByRange (r15, guide §1.2):
-      // the range-boundary sampling job otherwise re-runs the base
-      // generate+distinct a second time inside the timed body.
-      trgmsOf(docs.filter($"doc_id" % 10L =!= 0L))
-        .localCheckpoint()
-        .repartitionByRange($"g", $"doc_id")
-        .sortWithinPartitions("g", "doc_id")
-        .write.parquet(s"$t/base_trgm")
-      val delta = docs.filter($"doc_id" % 10L === 0L)
-        .select($"doc_id", $"text")
-        .withColumn("ets", timestamp_seconds($"doc_id"))
-      val kSlices = sliceCount(delta.count())
-      val expectedBatches = nonEmptySlices(delta, "ets", kSlices)
-      writeTimeSliced(delta, "ets", s"$t/in", kSlices)
-      replayForeach(s, t, s"$t/in") { (batch, id) =>
-        trgmsOf(batch.drop("ets")).withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$t/delta_trgm/b$id")
+      Trigrams.writePart(DocRefresh.base(docs), t, "base", CheckpointedRanged)
+      val expectedBatches = ingest(s, t,
+          DocRefresh.delta(docs).select($"doc_id", $"text"), "doc_id") {
+        (batch, id) =>
+          Segments.writeBatch(trgmsOf(batch), s"$t/delta_trgm", id)
       }
       val deltaTrgm = s.read.parquet(s"$t/delta_trgm/b*")
-      val pat = "ash jo"
-      val patTrgs = pat.sliding(3).toSeq.distinct
-      val merged = s.read.parquet(s"$t/base_trgm")
-        .unionByName(deltaTrgm.drop("batch_id"))
-      val cands = merged.filter($"g".isin(patTrgs: _*))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("ng"))
-        .filter($"ng" === patTrgs.size.toLong)
-        .select($"doc_id")
-      val probe = T.documents(s, d)
-        .join(broadcast(cands), Seq("doc_id"))
-        .filter($"text".contains(pat))
-        .select($"doc_id",
-          ((length($"text") - length(replace($"text", lit(pat)))) /
-            lit(pat.length)).cast("long").as("n_occurrences"))
+      val probe = Retrieval.trgmProbe(s, d,
+        Segments.union(s.read.parquet(Trigrams.base(t)),
+          deltaTrgm.drop("batch_id")),
+        Retrieval.TrgmPattern)
       val ev = deltaTrgm.agg(countDistinct($"batch_id").as("nb"))
         .select(lit(-1L).as("doc_id"),
           ($"nb" === lit(expectedBatches)).cast("long").as("n_occurrences"))

@@ -219,7 +219,8 @@ object FplStream {
     * _SUCCESS droppings and no parquet footer, and reading it would
     * throw on every replay — a permanent crash loop in the exact
     * at-least-once window the sink protects. */
-  private def dirHasData(spark: SparkSession, dir: String): Boolean = {
+  private[graft] def dirHasData(spark: SparkSession, dir: String)
+      : Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && {
@@ -253,27 +254,6 @@ object FplStream {
     Encoders.product[MatchClose].schema
       .filter(f => pairCols.contains(f.name)) :+
       StructField("batchId", LongType))
-
-  /** End-to-end: raw line stream → match-close stream, writing parquet
-    * tables via foreachBatch (K1-K3 replacement: batchId-partitioned
-    * idempotent parquet instead of repr-text directories). The batch is
-    * persisted once, so the emptiness check and the write share one
-    * evaluation of the fold. */
-  def run(lines: DataFrame, outDir: String, checkpoint: String) = {
-    val closes = matchCloses(toMessages(lines))
-    closes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[MatchClose], batchId: Long) =>
-        // Empty batches write nothing: under dynamic overwrite an empty
-        // frame has no partitions, leaving a schema-less directory that
-        // breaks later reads. Replay is deterministic (same offsets +
-        // versioned state), so a skipped batch stays skippable.
-        withPersisted(batch.toDF) { b =>
-          if (!b.isEmpty) writeBatchPartition(b, batchId, outDir)
-        }
-      }
-      .outputMode("append")
-  }
 
   /** Full streaming consolidation — the reference's separate post-stream
     * Python pass (metrics.py, SURVEY E2) collapsed into foreachBatch:
@@ -340,8 +320,7 @@ object FplStream {
           pairs =>
             // a batch can close players without completing any pair (e.g.
             // a single close) — writing an empty frame would leave a
-            // schema-less parquet dir that breaks later reads (same guard
-            // as run())
+            // schema-less parquet dir that breaks later reads
             if (!pairs.isEmpty) writeBatchPartition(pairs, batchId, pairsDir)
         }
         writeBatchPartition(closes, batchId, closesDir)

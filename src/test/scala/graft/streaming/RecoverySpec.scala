@@ -11,7 +11,7 @@ class RecoverySpec extends SparkSpec {
   test("stop/restart from checkpoint: no lost or duplicated closes") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-rec")
     val inDir = tmp.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val out = tmp.resolve("state").toString
+    val state = tmp.resolve("state").toString
     val ckpt = tmp.resolve("ckpt").toString
     def sentinel(id: Long) = Fixture.matchJson
       .replace("\"wyId\":1001", s""""wyId":$id""")
@@ -19,24 +19,38 @@ class RecoverySpec extends SparkSpec {
     // phase 1: match 1001 only (no punctuation yet → zero closes)
     java.nio.file.Files.write(inDir.resolve("a.jsonl"),
       String.join("\n", Fixture.allLines: _*).getBytes)
-    val q1 = FplStream.run(spark.readStream.text(inDir.toString), out, ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    val q1 = FplStream.runFull(spark.readStream.text(inDir.toString), state,
+      ckpt).trigger(Trigger.AvailableNow()).start()
     q1.awaitTermination()
 
     // phase 2: NEW query from the same checkpoint; punctuation arrives
     java.nio.file.Files.write(inDir.resolve("b.jsonl"),
       sentinel(9999L).getBytes)
-    val q2 = FplStream.run(spark.readStream.text(inDir.toString), out, ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    val q2 = FplStream.runFull(spark.readStream.text(inDir.toString), state,
+      ckpt).trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination()
 
-    val closes = spark.read.parquet(out)
+    val closes = spark.read.parquet(s"$state/closes")
     // exactly the 7 event-producing players of match 1001, exactly once
     assert(closes.count() == 7, closes.collect().mkString("\n"))
     assert(closes.select("playerId").distinct().count() == 7)
     // state survived the restart: ratings reflect match-1001 events
     val p1 = closes.filter($"playerId" === 1).collect().head
     assert(approx(p1.getAs[Double]("rating"), 0.3609375))
+  }
+
+  test("a stopped stream that closed no match reports 0 closes") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-noclose")
+    val inDir = tmp.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+    val state = tmp.resolve("state").toString
+    // one match and no punctuation: nothing closes, so the closes sink
+    // never writes its directory
+    java.nio.file.Files.write(inDir.resolve("a.jsonl"),
+      String.join("\n", Fixture.allLines: _*).getBytes)
+    FplStream.runFull(spark.readStream.text(inDir.toString), state,
+        tmp.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    assert(graft.fpl.StreamApp.closesRows(spark, state) == 0L)
   }
 
   test("at-least-once replay of a consolidation batch is idempotent") {
