@@ -7,7 +7,9 @@ import java.nio.file.{Files, Path, Paths}
   * edge table, the containment postings, the bucketed copies), plus the
   * parked results of [[GQuery.withTempTable]], plus the in-memory
   * served snapshots (`graft.fpl.ServedSnapshot`, one memo per served
-  * table set, which also holds that set's fitted models).
+  * table set, which also holds that set's fitted models) and the
+  * closes rosters of the streaming chemistry upsert
+  * (`graft.streaming.FplStream`, one per closes directory).
   *
   * Everything on disk lives under ONE lazily created temp root, removed
   * by one shutdown hook at JVM exit. A derived table is parked once per
@@ -56,6 +58,9 @@ object StandingState {
   case object Bucketed extends Kind("graft-bucket-std")
   /** The in-memory `graft.fpl.ServedSnapshot`s; parks no directory. */
   case object ServedSnapshots extends Kind("graft-served-snapshots")
+  /** The in-memory `graft.streaming.FplStream` closes rosters; parks no
+    * directory. */
+  case object ClosesRosters extends Kind("graft-closes-rosters")
 
   private lazy val root: Path = {
     val p = Files.createTempDirectory("graft-standing")

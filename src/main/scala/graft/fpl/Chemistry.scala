@@ -1,6 +1,6 @@
 package graft.fpl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pairwise chemistry (reference J4+A5: metrics.py:26-49; semantics from
@@ -14,41 +14,55 @@ import org.apache.spark.sql.functions._
   * accumulated on an initial value of 0.5. Per SURVEY §2.9 Q3 each pair
   * counts ONCE per match (the reference's `visited` bug double-counts).
   *
-  * The self-join is per-match (≤ ~40 rated players/match ⇒ ≤ 1600 pair
-  * rows per match) — a theta join on the matchId key; the pair-delta
-  * table then folds into a running chemistry table with one groupBy.
-  * The streaming upsert uses the same join, restricted to pairs with a
-  * fresh side, so the pair formula exists once.
-  * At 100 TB the per-match grouping keeps the join bounded: the shuffle
-  * key is matchId, never a global cross product.
+  * The formula has one definition, the pure per-match kernel
+  * [[pairsOf]] (≤ ~40 rated players/match ⇒ ≤ 780 pairs per match). The
+  * batch table runs it per match group ([[pairDeltas]]); the streaming
+  * upsert (`graft.streaming.FplStream.consolidateBatch`) runs it on the
+  * driver over a micro-batch's fresh closes and the earlier closes of
+  * the same matches. At 100 TB the per-match grouping keeps the pairing
+  * bounded: the shuffle key is matchId, never a global cross product.
   */
 object Chemistry {
 
-  /** Per-match signed pair deltas from the rating-delta table
-    * (columns: matchId, playerId, teamId, delta). `fresh`, a boolean
-    * over those rows, keeps only the pairs with at least one fresh
-    * side: the streaming upsert pairs a batch's new closes with each
-    * other and with earlier closes of the same matches in this one
-    * join, and never re-pairs two earlier closes. */
-  def pairDeltas(ratingDeltas: DataFrame,
-      fresh: Column = lit(true)): DataFrame = {
-    val a = ratingDeltas.select(
-      col("matchId"),
-      col("playerId").as("p1"), col("teamId").as("t1"),
-      col("delta").as("d1"), fresh.as("f1"))
-    val b = ratingDeltas.select(
-      col("matchId").as("matchId2"),
-      col("playerId").as("p2"), col("teamId").as("t2"),
-      col("delta").as("d2"), fresh.as("f2"))
-    val sameTeam = col("t1") === col("t2")
-    val sameDir = (col("d1") > 0 && col("d2") > 0) ||
-      (col("d1") < 0 && col("d2") < 0)
-    val mag = abs((col("d1") + col("d2")) / 2)
-    a.join(b, col("matchId") === col("matchId2") && col("p1") < col("p2") &&
-        (col("f1") || col("f2")))
-      .select(col("matchId"), col("p1"), col("p2"),
-        when(sameTeam === sameDir, mag).otherwise(-mag)
-          .as("pairDelta"))
+  /** One close as the pairing reads it; `fresh` marks a close of the
+    * batch being paired (the batch table pairs only fresh closes). */
+  final case class Side(playerId: Long, teamId: Long, delta: Double,
+      fresh: Boolean)
+
+  /** The signed chemistry delta of one pair (p1 < p2) in one match. */
+  final case class PairDelta(matchId: Long, p1: Long, p2: Long,
+      pairDelta: Double)
+
+  /** The pair deltas of one match's closes: every unordered pair
+    * (p1 < p2) with at least one fresh side, so an incremental upsert
+    * never re-pairs two earlier closes. */
+  def pairsOf(matchId: Long, closes: Seq[Side]): Seq[PairDelta] =
+    for {
+      a <- closes
+      b <- closes
+      if a.playerId < b.playerId && (a.fresh || b.fresh)
+    } yield {
+      val sameTeam = a.teamId == b.teamId
+      val sameDir = (a.delta > 0 && b.delta > 0) ||
+        (a.delta < 0 && b.delta < 0)
+      val mag = math.abs((a.delta + b.delta) / 2)
+      PairDelta(matchId, a.playerId, b.playerId,
+        if (sameTeam == sameDir) mag else -mag)
+    }
+
+  /** Per-match signed pair deltas (matchId, p1, p2, pairDelta) from the
+    * rating-delta table (columns: matchId, playerId, teamId, delta):
+    * [[pairsOf]] per match, every close fresh. */
+  def pairDeltas(ratingDeltas: DataFrame): DataFrame = {
+    import ratingDeltas.sparkSession.implicits._
+    ratingDeltas.select(col("matchId").cast("long"),
+        col("playerId").cast("long"), col("teamId").cast("long"),
+        col("delta").cast("double"))
+      .as[(Long, Long, Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups((m, rows) => pairsOf(m,
+        rows.map(r => Side(r._2, r._3, r._4, fresh = true)).toSeq))
+      .toDF()
   }
 
   /** Running chemistry table: 0.5 + the sum of all per-match pair

@@ -1,7 +1,7 @@
 package graft.fpl
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.GraftSession
 import graft.streaming.{FplStream, LineSource}
 
@@ -92,23 +92,31 @@ object StreamApp {
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .start()
 
-    if (bounded) {
-      // bounded demo run (the reference bounds to 100 s, master.py:379):
-      // poll until two consecutive empty batches after data flowed
-      var idle = 0
-      while (idle < 3) {
-        Thread.sleep(3000)
-        val progress = Option(query.lastProgress)
-        val rows = progress.map(_.numInputRows).getOrElse(-1L)
-        if (rows == 0) idle += 1 else idle = 0
+    try {
+      if (bounded) {
+        // bounded demo run (the reference bounds to 100 s, master.py:379)
+        try awaitDrained(query) finally query.stop()
+        println(s"replay complete; state tables in $stateDir")
+        println(s"closes rows: ${closesRows(spark, stateDir)}")
+      } else {
+        query.awaitTermination()
       }
-      query.stop()
-      println(s"replay complete; state tables in $stateDir")
-      println(s"closes rows: ${closesRows(spark, stateDir)}")
-    } else {
-      query.awaitTermination()
+    } finally spark.stop()
+  }
+
+  /** Waits for a bounded run's source to drain: polls every 3 s until
+    * three consecutive polls read an empty last batch. It ends as soon
+    * as the query stops, and rethrows the exception a failed query
+    * stopped with. */
+  private[graft] def awaitDrained(query: StreamingQuery): Unit = {
+    var idle = 0
+    while (idle < 3 && query.isActive) {
+      query.awaitTermination(3000)
+      val rows = Option(query.lastProgress).map(_.numInputRows)
+        .getOrElse(-1L)
+      if (rows == 0) idle += 1 else idle = 0
     }
-    spark.stop()
+    query.exception.foreach(e => throw e)
   }
 
   /** The closes a stopped stream committed under `stateDir`: 0 when it

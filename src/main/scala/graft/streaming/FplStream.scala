@@ -1,10 +1,11 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.fpl.{Flatten, Ingest, MetricsAlgebra}
+import graft.StandingState
+import graft.fpl.{Chemistry, Flatten, Ingest, MetricsAlgebra}
 
 /** Structured-Streaming incrementalization of the football pipeline
   * (reference master.py's DStream + updateStateByKey chain,
@@ -29,6 +30,8 @@ import graft.fpl.{Flatten, Ingest, MetricsAlgebra}
   * full-state re-scan per batch.
   */
 object FplStream {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Per-player message: either a minutes/factor row (from a match
     * record, kind=0) or an event counter row (kind=1). */
@@ -213,65 +216,124 @@ object FplStream {
       .partitionBy("batchId")
       .parquet(dir)
 
-  /** Location-agnostic probe for COMMITTED data (java.io.File would be
-    * wrong on HDFS/object stores). A bare exists() is not enough: a
-    * crash mid-first-write leaves the directory with only _temporary /
-    * _SUCCESS droppings and no parquet footer, and reading it would
-    * throw on every replay — a permanent crash loop in the exact
-    * at-least-once window the sink protects. */
-  private[graft] def dirHasData(spark: SparkSession, dir: String)
-      : Boolean = {
+  /** One data file of a sink directory: path, length, modification time. */
+  private type DataFile = (String, Long, Long)
+
+  /** The COMMITTED data files under `dir`, sorted, listed through the
+    * directory's Hadoop FileSystem (java.io.File would be wrong on
+    * HDFS/object stores). A file counts when no name on its path below
+    * `dir` starts with `_` or `.`: a crash mid-write leaves _temporary /
+    * _SUCCESS / .spark-staging droppings and no parquet footer, and
+    * reading them would throw on every replay — a permanent crash loop in
+    * the exact at-least-once window the sink protects. */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[DataFile] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
+    if (!fs.exists(p)) Nil
+    else {
+      val root = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
       val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        found = !name.startsWith("_") && !name.startsWith(".")
+      val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
+      while (it.hasNext) {
+        val f = it.next()
+        val path = f.getPath.toUri.getPath
+        if (!path.stripPrefix(root).split('/')
+            .exists(n => n.startsWith("_") || n.startsWith(".")))
+          out += ((path, f.getLen, f.getModificationTime))
       }
-      found
+      out.sorted.toSeq
     }
   }
 
-  /** Runs `f` over `df` persisted, and unpersists it afterwards. A
-    * foreachBatch frame is the stateful fold itself: every action on
-    * it re-runs the fold, reloading and recommitting the state store,
-    * so a sink that acts on it more than once must act on a persisted
-    * copy. */
-  private def withPersisted[A](df: DataFrame)(f: DataFrame => A): A = {
-    val cached = df.persist()
-    try f(cached) finally { cached.unpersist(); () }
+  /** Whether `dir` holds committed data ([[dataFiles]]). */
+  private[graft] def dirHasData(spark: SparkSession, dir: String)
+      : Boolean = dataFiles(spark, dir).nonEmpty
+
+  /** A close as the chemistry pairing reads it, with the micro-batch
+    * that wrote it. */
+  final case class RosterClose(matchId: Long, playerId: Long, teamId: Long,
+      delta: Double, batchId: Long)
+
+  /** The pair deltas micro-batch `batchId` adds: [[Chemistry.pairsOf]]
+    * over each match of its `fresh` closes together with the `prior`
+    * closes of the same matches, fresh being the closes of `batchId`.
+    * Prior rows of `batchId` itself (an earlier attempt of a replayed
+    * batch) are left out, so a replay pairs exactly as the first attempt
+    * did and every unordered pair of a match lands once. */
+  def batchPairs(batchId: Long, fresh: Seq[RosterClose],
+      prior: Seq[RosterClose]): Seq[Chemistry.PairDelta] = {
+    val matches = fresh.map(_.matchId).toSet
+    (fresh ++ prior.filter(c => c.batchId != batchId && matches(c.matchId)))
+      .groupBy(_.matchId).toSeq.sortBy(_._1)
+      .flatMap { case (m, cs) => Chemistry.pairsOf(m, cs.map(c =>
+        Chemistry.Side(c.playerId, c.teamId, c.delta, c.batchId == batchId)))
+      }
   }
 
-  /** The closes columns the chemistry pairing reads. */
-  private val pairCols = Seq("matchId", "playerId", "teamId", "delta")
+  /** The closes a sink directory holds once micro-batch `batchId` wrote
+    * `fresh`: its partition is replaced, as the sink's write replaces it. */
+  def recorded(roster: Vector[RosterClose], batchId: Long,
+      fresh: Seq[RosterClose]): Vector[RosterClose] =
+    roster.filterNot(_.batchId == batchId) ++ fresh
 
-  /** Schema of prior closes as the closes sink writes them, narrowed to
-    * [[pairCols]] plus the batchId partition column. Reading with it
-    * skips the per-batch parquet footer inference job. */
-  private val priorClosesSchema: StructType = StructType(
-    Encoders.product[MatchClose].schema
-      .filter(f => pairCols.contains(f.name)) :+
-      StructField("batchId", LongType))
+  /** The closes of one closes directory, held on the driver: the prior
+    * closes [[consolidateBatch]] pairs with. It mirrors what the sink has
+    * written. It is loaded with one read when first used, and again when
+    * the directory's [[dataFiles]] are no longer the ones it last saw (a
+    * partition deleted, or written by another writer); the sink records a
+    * batch's closes in it only after their write succeeded. Each load
+    * logs one INFO line with its rows, ms and reason. */
+  private final class ClosesRoster(dir: String) {
+    private var files: Option[Seq[DataFile]] = None
+    private var rows = Vector.empty[RosterClose]
+
+    /** The closes, reloaded first unless they mirror `listing`. */
+    def closes(spark: SparkSession, listing: Seq[DataFile])
+        : Vector[RosterClose] = synchronized {
+      if (!files.contains(listing)) {
+        val reason = if (files.isEmpty) "first use" else "listing changed"
+        val t0 = System.nanoTime
+        rows =
+          if (listing.isEmpty) Vector.empty
+          else {
+            import spark.implicits._
+            spark.read.schema(Encoders.product[RosterClose].schema)
+              .parquet(dir).as[RosterClose].collect().toVector
+          }
+        files = Some(listing)
+        log.info(f"closes roster $dir: ${rows.size} rows in " +
+          f"${(System.nanoTime - t0) / 1e6}%.0f ms ($reason)")
+      }
+      rows
+    }
+
+    /** Records micro-batch `batchId`'s closes after their write;
+      * `listing` is the directory's data files after it. */
+    def record(batchId: Long, fresh: Seq[RosterClose],
+        listing: Seq[DataFile]): Unit = synchronized {
+      rows = recorded(rows, batchId, fresh)
+      files = Some(listing)
+    }
+  }
 
   /** Full streaming consolidation — the reference's separate post-stream
     * Python pass (metrics.py, SURVEY E2) collapsed into foreachBatch:
     * match-closes land in `<dir>/closes`, and per-match chemistry
     * pair-deltas upsert incrementally to `<dir>/pair_deltas`. A match's
     * players can close in different micro-batches, so each batch pairs
-    * its new closes against (a) each other and (b) previously-closed
-    * rows of the same matches — every unordered pair lands exactly once.
-    * Each micro-batch evaluates the stateful fold exactly once (see
-    * [[consolidateBatch]]).
+    * its new closes with (a) each other and (b) the earlier closes of the
+    * same matches, held on the driver ([[ClosesRoster]]) — every
+    * unordered pair lands exactly once ([[batchPairs]]). Each micro-batch
+    * evaluates the stateful fold exactly once and runs at most three
+    * Spark jobs (see [[consolidateBatch]]).
     *
     * Both sinks are batchId-partitioned with dynamic-partition
     * overwrite, so an at-least-once replay of a batch (crash between
     * the two writes, or after writing but before the checkpoint commit)
     * replaces that batch's partitions rather than re-appending — no
-    * double-counted pair deltas. The prior-closes read excludes the
-    * current batchId so a partially-written previous attempt can never
-    * pair against itself.
+    * double-counted pair deltas. The pairing leaves out prior closes of
+    * the current batchId, so a partially-written previous attempt can
+    * never pair against itself.
     *
     * The final chemistry table is 0.5 + sum over pair_deltas
     * (`graft.fpl.Chemistry.fromPairDeltas`). */
@@ -291,40 +353,33 @@ object FplStream {
     * a batchId and assert the sink is idempotent under at-least-once
     * delivery.
     *
-    * One evaluation of `batch`: it is persisted once, and the emptiness
-    * check, the pairing and the closes write all read that copy; it is
-    * unpersisted when the step ends. Prior closes are read with the
-    * schema the closes sink writes ([[priorClosesSchema]]), so no job
-    * infers it. The pair deltas come from ONE self-join over the new
-    * closes (`fresh`) ∪ the prior closes of the same matches, keeping
-    * the pairs with at least one fresh side; the small pair frame is
-    * persisted so its emptiness check and its write share one join. */
+    * The batch's closes are bounded by the players it touches, so they
+    * are collected once: that job is the one evaluation of the stateful
+    * fold. The pair deltas are [[batchPairs]] over those rows and the
+    * directory's [[ClosesRoster]], checked against the directory's
+    * listing, so no job reads the earlier closes. Both sinks are written
+    * from the local rows: a job each, three in all. */
   def consolidateBatch(batch: DataFrame, batchId: Long,
       closesDir: String, pairsDir: String): Unit = {
-    val spark = batch.sparkSession
-    withPersisted(batch) { closes =>
-      if (!closes.isEmpty) {
-        val fresh =
-          closes.select(pairCols.map(col) :+ lit(true).as("fresh"): _*)
-        val rows =
-          if (dirHasData(spark, closesDir)) {
-            val prior = spark.read.schema(priorClosesSchema)
-              .parquet(closesDir)
-              .filter(col("batchId") =!= batchId)
-              .join(fresh.select(col("matchId")).distinct(),
-                Seq("matchId"), "left_semi")
-              .select(pairCols.map(col) :+ lit(false).as("fresh"): _*)
-            fresh.unionByName(prior)
-          } else fresh
-        withPersisted(graft.fpl.Chemistry.pairDeltas(rows, col("fresh"))) {
-          pairs =>
-            // a batch can close players without completing any pair (e.g.
-            // a single close) — writing an empty frame would leave a
-            // schema-less parquet dir that breaks later reads
-            if (!pairs.isEmpty) writeBatchPartition(pairs, batchId, pairsDir)
-        }
-        writeBatchPartition(closes, batchId, closesDir)
-      }
+    val rows = batch.collect()
+    if (rows.nonEmpty) {
+      val spark = batch.sparkSession
+      val Seq(m, p, t, d) = Seq("matchId", "playerId", "teamId", "delta")
+        .map(batch.schema.fieldIndex)
+      val fresh = rows.toSeq.map(r => RosterClose(r.getLong(m), r.getLong(p),
+        r.getLong(t), r.getDouble(d), batchId))
+      val roster = StandingState.held(StandingState.ClosesRosters,
+        closesDir)(new ClosesRoster(closesDir))
+      val pairs = batchPairs(batchId, fresh,
+        roster.closes(spark, dataFiles(spark, closesDir)))
+      // a batch can close players without completing any pair (e.g. a
+      // single close) — writing an empty frame would leave a schema-less
+      // parquet dir that breaks later reads
+      if (pairs.nonEmpty)
+        writeBatchPartition(spark.createDataFrame(pairs), batchId, pairsDir)
+      writeBatchPartition(spark.createDataFrame(rows.toSeq.asJava,
+        batch.schema), batchId, closesDir)
+      roster.record(batchId, fresh, dataFiles(spark, closesDir))
     }
   }
 }

@@ -2,6 +2,8 @@ package graft.fpl
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
+import graft.streaming.FplStream
+import graft.streaming.FplStream.RosterClose
 
 /** Property-based invariants (SURVEY §5.2): metric bounds, chemistry
   * sign/symmetry rules, fold identities, split-invariance. Spark-backed
@@ -64,6 +66,47 @@ object FplProperties extends Properties("fpl") {
         val sameDir = (d1 > 0 && d2 > 0) || (d1 < 0 && d2 < 0)
         val expected = if (sameTeam == sameDir) mag else -mag
         math.abs(pd - expected) < 1e-12
+    }
+
+  // -- stream chemistry under micro-batch splits (pure) ---------------
+  /** Closes of up to three matches (distinct players per match), each
+    * assigned to one of four micro-batches. */
+  private val genSplitCloses: Gen[List[RosterClose]] =
+    Gen.listOfN(3, Gen.zip(Gen.choose(1L, 4L),
+        Gen.containerOf[Set, Long](Gen.choose(1L, 12L))))
+      .flatMap { ms =>
+        val slots = ms.toMap.toList.flatMap { case (m, ps) => ps.map(m -> _) }
+        Gen.sequence[List[RosterClose], RosterClose](slots.map {
+          case (m, p) => for {
+            team <- Gen.oneOf(100L, 200L)
+            delta <- Gen.choose(-0.5, 0.5)
+            batch <- Gen.choose(0L, 3L)
+          } yield RosterClose(m, p, team, delta, batch)
+        })
+      }
+
+  property("stream pairs: per-batch pairs under any split and a replayed " +
+      "batch == pairsOf over all closes, each pair once") =
+    Prop.forAllNoShrink(genSplitCloses, Gen.choose(0, 3)) { (closes, r) =>
+      val batches = closes.groupBy(_.batchId)
+      val ids = batches.keys.toSeq.sorted
+      val replayed = if (ids.isEmpty) -1L else ids(r % ids.size)
+      // each batch pairs with what the earlier ones wrote; the replayed
+      // batch runs twice in a row, its second run replacing its
+      // partition as the sink's overwrite does
+      var roster = Vector.empty[RosterClose]
+      val written = scala.collection.mutable.Map
+        .empty[Long, Seq[Chemistry.PairDelta]]
+      for (b <- ids; _ <- 1 to (if (b == replayed) 2 else 1)) {
+        written(b) = FplStream.batchPairs(b, batches(b), roster)
+        roster = FplStream.recorded(roster, b, batches(b))
+      }
+      val all = closes.groupBy(_.matchId).toSeq.flatMap { case (m, cs) =>
+        Chemistry.pairsOf(m, cs.map(c =>
+          Chemistry.Side(c.playerId, c.teamId, c.delta, fresh = true)))
+      }
+      def key(p: Chemistry.PairDelta) = (p.matchId, p.p1, p.p2)
+      written.values.flatten.toSeq.sortBy(key) == all.sortBy(key)
     }
 
   // -- fold identities (pure math, full case count) -------------------

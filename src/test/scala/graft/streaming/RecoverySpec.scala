@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.fpl.{Fixture, Ingest}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.Trigger
 
 /** Fault-tolerance and robustness of the streaming pipeline. */
@@ -105,6 +106,55 @@ class RecoverySpec extends SparkSpec {
     val b4 = Seq((11L, 7L, 200L, 0.1))
     FplStream.consolidateBatch(batch(b4), 4L, closesDir, pairsDir)
     assert(chem == expected(b0 ++ b1 ++ b2 ++ b3 ++ b4))
+
+    // the driver-held closes roster follows the directory: a partition
+    // deleted, one written behind the sink's back, or a reset roster is
+    // seen by the next batch, whose chemistry is the table over the
+    // closes on disk
+    def onDisk = chemMap(graft.fpl.Chemistry.chemistryTable(
+      spark.read.parquet(closesDir)))
+    // batch 5: a lone close of match 12, then its partition is lost
+    FplStream.consolidateBatch(batch(Seq((12L, 8L, 100L, 0.2))), 5L,
+      closesDir, pairsDir)
+    graft.StandingState.deleteTree(tmp.resolve("closes/batchId=5"))
+    // batch 6: match 12's next close has no prior close left to pair with
+    FplStream.consolidateBatch(batch(Seq((12L, 9L, 200L, 0.1))), 6L,
+      closesDir, pairsDir)
+    assert(chem == onDisk, "paired with a deleted close")
+    // batch 7 written by another writer: a lone close of match 13
+    batch(Seq((13L, 10L, 100L, -0.1))).withColumn("batchId", lit(7L))
+      .write.mode("append").partitionBy("batchId").parquet(closesDir)
+    FplStream.consolidateBatch(batch(Seq((13L, 11L, 200L, 0.3))), 8L,
+      closesDir, pairsDir)
+    assert(chem == onDisk, "missed a close written behind the sink")
+    // a reset roster is loaded again from the directory
+    graft.StandingState.reset(graft.StandingState.ClosesRosters)
+    FplStream.consolidateBatch(batch(Seq((13L, 12L, 100L, 0.05))), 9L,
+      closesDir, pairsDir)
+    assert(chem == onDisk, "a reset roster lost the closes on disk")
+  }
+
+  test("StreamApp's bounded poll ends and rethrows when the query fails") {
+    implicit val sc = spark.sqlContext
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[String]
+    stream.addData("a line")
+    val q = stream.toDF().writeStream
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, id: Long) =>
+        if (id >= 0) throw new IllegalStateException("sink failed")
+      }
+      .start()
+    try {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration._
+      val poll = Future(graft.fpl.StreamApp.awaitDrained(q))(
+        ExecutionContext.global)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        Await.result(poll, 60.seconds))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("sink failed")))
+      assert(!q.isActive)
+    } finally q.stop()
   }
 
   test("malformed lines parse to corrupt rows and are excluded cleanly") {

@@ -151,6 +151,68 @@ class StreamingSpec extends SparkSpec {
     assert(leaked.isEmpty, s"cached batches left behind: $leaked")
   }
 
+  test("a closing micro-batch runs <= 3 jobs and reads no closes (runFull)") {
+    // Before the driver-held closes roster, the sink persisted the fold
+    // (isEmpty), read the prior closes, semi-joined and self-joined them
+    // under AQE, then wrote both sinks: batch 1 below ran 5 jobs, and
+    // batch 2 ran 6, four of them scanning the closes directory.
+    implicit val sc = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs")
+    val closesDir = tmp.resolve("state/closes").toString
+    // (query id, batch id, SQL execution id) of every job started
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, String)]
+    // SQL executions whose plan scans the closes directory
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    def scansCloses(p: org.apache.spark.sql.execution.SparkPlanInfo)
+        : Boolean =
+      (p.nodeName.startsWith("Scan") &&
+        p.metadata.get("Location").exists(_.contains(closesDir))) ||
+        p.children.exists(scansCloses)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).map(_.getProperty(k)).orNull
+        jobs.add((prop("sql.streaming.queryId"),
+          prop("streaming.sql.batchId"), prop("spark.sql.execution.id")))
+      }
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if scansCloses(s.sparkPlanInfo) => scans.add(s.executionId)
+        case _ =>
+      }
+    }
+    // match 1001; then match 1002 (closes 1001); then match 1003
+    // (closes 1002): three batches, the last two with closes
+    val batches = Seq(Fixture.allLines,
+      matchJson(1002, 2) +: match2Events, Seq(matchJson(1003, 3)))
+    spark.sparkContext.addSparkListener(listener)
+    val stream = MemoryStream[String]
+    val q = FplStream.runFull(stream.toDF(), tmp.resolve("state").toString,
+      tmp.resolve("ckpt").toString).start()
+    try batches.foreach { lines =>
+      stream.addData(lines); q.processAllAvailable()
+    } finally {
+      q.stop()
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val mine = jobs.asScala.toSeq.filter(_._1 == q.id.toString)
+    val closing = spark.read.parquet(closesDir).select("batchId")
+      .distinct().as[Int].collect().map(_.toString).toSet
+    assert(closing == Set("1", "2"))
+    for (b <- closing) {
+      val n = mine.count(_._2 == b)
+      assert(n >= 1 && n <= 3, s"batch $b ran $n jobs")
+    }
+    val scanned = mine.filter(j => j._3 != null &&
+      scans.asScala.exists(_.toString == j._3)).map(_._2).distinct
+    assert(scanned.isEmpty, s"batches $scanned scanned $closesDir")
+  }
+
   test("straggler event from an already-closed match is dropped") {
     implicit val sc = spark.sqlContext
     val stream = MemoryStream[String]
